@@ -479,15 +479,17 @@ final case class Frame(df: DataFrame, index: Option[String] = None) {
   def nunique(cols: String*): DataFrame =
     df.agg(countDistinct(col(cols.head)).as(s"${cols.head}_nunique"),
       cols.tail.map(c => countDistinct(col(c)).as(s"${c}_nunique")): _*)
-  /** Exact PER-GROUP quantiles via the bounded offset machinery — the
-    * at-scale exact path when groups are few and huge (where the
-    * buffered grouped percentile dies); see
-    * operators.Quantiles.groupedExactQuantiles for the regime notes. */
+  /** Exact PER-GROUP quantiles via the bounded-memory radix select —
+    * the at-scale exact path when groups are few and huge (where the
+    * buffered grouped percentile dies); see operators.Quantiles for the
+    * regime notes. */
   def quantileByGroup(groupCol: String, column: String, qs: Seq[Double]): Frame =
     Frame(graft.operators.Quantiles.groupedExactQuantiles(df, groupCol, column, qs))
 
-  /** Exact quantiles via the distributed Quantiles operator (never
-    * Spark's unbounded-buffer percentile aggregate). */
+  /** Exact quantiles via the distributed Quantiles radix select (never
+    * Spark's unbounded-buffer percentile aggregate): a bucket histogram
+    * and a fetch of the wanted buckets, two or three jobs, nothing
+    * pinned. */
   def quantile(column: String, qs: Seq[Double]): Seq[Double] =
     graft.operators.Quantiles.exactQuantiles(df, column, qs)
   def median(column: String): Double = quantile(column, Seq(0.5)).head

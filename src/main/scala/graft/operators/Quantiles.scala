@@ -1,9 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
+import org.apache.spark.sql.types.{DoubleType, StringType, StructField, StructType}
 
 /** Distributed exact quantiles (reference `_quantile.py:14-133`; pandas
   * `quantile(interpolation="linear")` / DuckDB `quantile_cont`).
@@ -12,217 +11,184 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructTyp
   * `TypedImperativeAggregate` whose buffer holds EVERY value of the
   * column, so the final merge materializes the whole column in one task
   * — a guaranteed OOM at the 100 TB design point. This operator instead
-  * computes exact quantiles with bounded memory everywhere:
+  * finds each wanted order statistic by a radix select over an
+  * order-preserving 64-bit key (`doubleToLongBits` with the magnitude
+  * bits of negatives flipped, `-0.0` folded onto `0.0`):
   *
-  *  1. range-partition the column (`repartitionByRange` — Spark samples
-  *     split points, the standard scale-out sort primitive) and persist
-  *     it, pinning one concrete partitioning for both passes (the range
-  *     sampler is seeded per-execution, so two independent jobs could
-  *     otherwise land on different bounds and desynchronize the offsets);
-  *  2. count rows per partition (one tiny aggregation; O(partitions)
-  *     rows to the driver);
-  *  3. turn each requested fraction into its two neighboring global
-  *     order statistics, locate each as (partition, local rank) via the
-  *     partition offsets, and fetch just those rows with a
-  *     partition-local `row_number` window (no global window, no
-  *     single-partition funnel);
-  *  4. linearly interpolate on the driver (`lo + (hi - lo) * w`, the
-  *     same formula Spark's `percentile` and DuckDB's `quantile_cont`
-  *     use, so results are bit-identical to both).
+  *  1. one `groupBy(tag, key >> 48).count()` histogram goes to the
+  *     driver, which turns each requested fraction into its two
+  *     neighboring order statistics (floor/ceil of `p·(n-1)`) and
+  *     locates each as (bucket, local rank);
+  *  2. a bucket holding more than `BucketCap` rows is refined by a
+  *     histogram of the next 16 key bits restricted to that bucket — at
+  *     most 4 levels, the last of which names the key itself;
+  *  3. one filtered scan collects the keys of the wanted buckets; the
+  *     driver sorts them, picks the ranks and interpolates linearly
+  *     (`lo + (hi - lo) * w`, DuckDB's `quantile_cont` form; equal or
+  *     infinite neighbors yield their limit, as Spark's `percentile`
+  *     does).
   *
-  * Driver traffic is O(partitions + fractions); every executor-side
-  * structure is bounded by the partition size; the persisted single
-  * double column spills to disk if it outgrows memory.
+  * Nothing is pinned or range-partitioned: each pass re-reads the input
+  * (recompute over materialize), two or three jobs in the common case.
+  * Driver traffic is O(tags × occupied buckets + rows in the wanted
+  * buckets), at most 65536 buckets per tag and level and `BucketCap`
+  * rows per wanted bucket, so driver memory stays bounded at any scale;
+  * executors hold only aggregation buffers. Results are bit-identical to
+  * `percentile` and DuckDB `quantile_cont` (up to the sign of a zero).
+  *
+  * Regime note for [[groupedExactQuantiles]] (tag = group): the
+  * histogram is per group, so this is the at-scale EXACT path when
+  * groups are FEW and huge — the case where Spark's `percentile` counts
+  * map (memory ∝ distinct values in the largest group) dies. For MANY
+  * small groups the buffered aggregate is the right plan (each buffer is
+  * bounded by its group), and for many LARGE groups the mergeable
+  * t-digest (q_tdigest_quantile) is the approximate answer.
   */
 object Quantiles {
 
-  /** Exact linear-interpolation quantiles of `valueCol` (nulls excluded),
-    * as one driver-side Double per requested fraction.
+  /** Rows a wanted bucket may hold before it is refined instead of
+    * collected. */
+  private val BucketCap = 1L << 16
+  /** Key bits resolved per histogram level. */
+  private val Digit = 16
+
+  /** Exact linear-interpolation quantiles of `valueCol` (nulls and NaN
+    * excluded), as one driver-side Double per requested fraction.
     */
   def exactQuantiles(df: DataFrame, valueCol: String, fractions: Seq[Double]): Seq[Double] =
     exactQuantilesMulti(df, Seq(valueCol -> fractions))(valueCol)
 
-  /** Exact quantiles for SEVERAL columns in ONE range-partition
-    * pipeline: the columns union into a (tag, value) long-format stream
-    * range-partitioned on (tag, value), so tag runs are contiguous and
-    * per-tag offsets fall out of one per-(partition, tag) count. Versus
-    * one pipeline per column this divides the job count (shuffle +
-    * count + probe, ~4 jobs each) by the column count — same driver
-    * traffic, same bounded executor memory.
+  /** Exact quantiles for SEVERAL columns in one select: the columns
+    * union into a (tag, value) stream, so one histogram and one fetch
+    * serve every column.
     */
   def exactQuantilesMulti(df: DataFrame,
-      specs: Seq[(String, Seq[Double])]): Map[String, Seq[Double]] = Tuning.forSize(df) {
+      specs: Seq[(String, Seq[Double])]): Map[String, Seq[Double]] =
+    exactQuantilesMulti(df, specs, BucketCap)
+
+  private[graft] def exactQuantilesMulti(df: DataFrame,
+      specs: Seq[(String, Seq[Double])], cap: Long): Map[String, Seq[Double]] = {
     require(specs.nonEmpty, "at least one (column, fractions) spec")
-    specs.foreach { case (c, fs) =>
-      require(fs.nonEmpty && fs.forall(f => f >= 0.0 && f <= 1.0),
-        s"fractions must be in [0,1] for $c: $fs") }
-    val spark = df.sparkSession
-    // Session shuffle parallelism (which Tuning.forSize just right-sized
-    // for small inputs) also drives the range-partition count.
-    val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    // localCheckpoint (eager) PINS the partition layout: the range
-    // sampler is seeded per-execution, so a plain persist() whose
-    // partition is evicted/lost would silently recompute under freshly
-    // sampled bounds and desynchronize pass-2 ranks from pass-1 offsets.
-    // With the lineage cut, a lost partition fails the job instead of
-    // corrupting the answer — fail-fast over silently wrong.
-    // (lazy: materializes during the pass-1 count — no extra job)
+    specs.foreach { case (c, fs) => checkFractions(c, fs) }
     val tagged = df.select(explode(array(specs.map { case (c, _) =>
         struct(lit(c).as("__t"), col(c).cast("double").as("__v")) }: _*)).as("s"))
       .select(col("s.__t").as("__t"), col("s.__v").as("__v"))
-      .na.drop("any", Seq("__v"))
-      .repartitionByRange(parts, col("__t"), col("__v"))
-      .localCheckpoint(false)
-    try {
-      // Pass 1: per-(partition, tag) counts → per-tag global offsets.
-      // Range partitioning on (tag, value) keeps each tag's rows
-      // contiguous across the partition sequence, so scanning the
-      // counts in (pid) order per tag yields that tag's value-order
-      // offsets exactly as in the single-column case.
-      val counts = tagged
-        .groupBy(spark_partition_id().as("__pid"), col("__t"))
-        .agg(count(lit(1)).as("__c"))
-        .collect().map(r => (r.getString(1), r.getInt(0), r.getLong(2)))
-      val byTag = counts.groupBy(_._1)
-
-      // For each tag: (pid, first global index in pid, count) spans,
-      // then the wanted order statistics floor/ceil of p*(n-1).
-      case class Probe(tag: String, g: Long, pid: Int, rank: Long)
-      val targetsByTag = specs.map { case (tag, fractions) =>
-        val tagCounts = byTag.getOrElse(tag,
-          throw new IllegalArgumentException(
-            s"exactQuantiles($tag): no non-null rows")).map(c => c._2 -> c._3).sortBy(_._1)
-        val n = tagCounts.map(_._2).sum
-        val spans = tagCounts.scanLeft((0, 0L, 0L)) { case ((_, off, c), (pid, cnt)) =>
-          (pid, off + c, cnt)
-        }.drop(1)
-        val targets = fractions.map { p =>
-          val pos = p * (n - 1)
-          (p, math.floor(pos).toLong, math.ceil(pos).toLong, pos - math.floor(pos))
-        }
-        val probes = targets.flatMap(t => Seq(t._2, t._3)).distinct.map { g =>
-          val (pid, off, _) = spans.find { case (_, off, c) => off <= g && g < off + c }.get
-          Probe(tag, g, pid, g - off + 1)
-        }
-        (tag, targets, probes)
-      }
-      val located = targetsByTag.flatMap(_._3)
-      val neededPids = located.map(_.pid).distinct
-
-      // Pass 2 (checkpoint read): (partition, tag)-local ranks via a
-      // window — groups are whole range-partition tag runs — then an
-      // equi-join against the tiny broadcast lookup fetches only the
-      // wanted rows. Partitions holding no wanted order statistic are
-      // dropped before the window, so the exchange moves only the few
-      // partitions actually probed — O(fractions) of them.
-      val lookupDf = spark.createDataFrame(
-        spark.sparkContext.parallelize(
-          located.map(p => Row(p.tag, p.g, p.pid, p.rank)), 1),
-        StructType(Seq(StructField("__t", org.apache.spark.sql.types.StringType),
-          StructField("__g", LongType),
-          StructField("__pid", IntegerType), StructField("__rank", LongType))))
-      val w = Window.partitionBy("__pid", "__t").orderBy("__v")
-      val picked = tagged.withColumn("__pid", spark_partition_id())
-        .filter(col("__pid").isin(neededPids: _*))
-        .withColumn("__rank", row_number().over(w).cast("long"))
-        .join(broadcast(lookupDf), Seq("__t", "__pid", "__rank"))
-        .select("__t", "__g", "__v")
-        .collect().map(r => (r.getString(0), r.getLong(1)) -> r.getDouble(2)).toMap
-
-      targetsByTag.map { case (tag, targets, _) =>
-        tag -> targets.map { case (_, lo, hi, wgt) =>
-          val a = picked((tag, lo)); val b = picked((tag, hi))
-          if (lo == hi) a else a + (b - a) * wgt
-        }
-      }.toMap
-    } finally tagged.unpersist(blocking = false)
+    val got = select(tagged, specs.toMap, cap)
+    specs.map { case (c, _) => c -> got.getOrElse(c,
+      throw new IllegalArgumentException(s"exactQuantiles($c): no non-null rows")) }.toMap
   }
 
   /** Convenience: exact median. */
   def exactMedian(df: DataFrame, valueCol: String): Double =
     exactQuantiles(df, valueCol, Seq(0.5)).head
 
-  /** Exact PER-GROUP quantiles with the same bounded-memory offset
-    * machinery, tag = group value: range-partition on (group, value) so
-    * each group's rows are contiguous in value order, count per
-    * (partition, group), locate each group's order statistics, probe
-    * with a partition-local window, interpolate on the driver.
-    *
-    * Regime note (the honest trade): driver traffic is
-    * O(partitions × groups + groups × fractions), so this is the
-    * at-scale EXACT path when groups are FEW and huge — the case where
-    * Spark's `percentile`/`median` counts-map buffer (memory ∝ distinct
-    * values in the largest group) dies. For MANY small groups the
-    * buffered aggregate is the right plan (each buffer is bounded by
-    * its group), and for many LARGE groups the mergeable t-digest
-    * (q_tdigest_quantile) is the approximate answer. Same
-    * interpolation formula as `percentile`/DuckDB `quantile_cont` —
-    * results are bit-identical.
+  /** Exact PER-GROUP quantiles with the same radix select, tag = group
+    * (see the regime note on [[Quantiles]]). Same interpolation formula
+    * as `percentile`/DuckDB `quantile_cont` — results are bit-identical.
     *
     * Returns (groupCol, q_<frac>... ) one row per group, group order
     * unspecified.
     */
   def groupedExactQuantiles(df: DataFrame, groupCol: String, valueCol: String,
-      fractions: Seq[Double]): DataFrame = Tuning.forSize(df) {
-    require(fractions.nonEmpty && fractions.forall(f => f >= 0.0 && f <= 1.0),
-      s"fractions must be in [0,1]: $fractions")
+      fractions: Seq[Double]): DataFrame =
+    groupedExactQuantiles(df, groupCol, valueCol, fractions, BucketCap)
+
+  private[graft] def groupedExactQuantiles(df: DataFrame, groupCol: String,
+      valueCol: String, fractions: Seq[Double], cap: Long): DataFrame = {
+    checkFractions(valueCol, fractions)
     val spark = df.sparkSession
-    val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val tagged = df
-      .select(col(groupCol).cast("string").as("__t"), col(valueCol).cast("double").as("__v"))
-      .na.drop("any", Seq("__t", "__v"))
-      .repartitionByRange(parts, col("__t"), col("__v"))
-      .localCheckpoint(false)
-    try {
-      val counts = tagged
-        .groupBy(spark_partition_id().as("__pid"), col("__t"))
-        .agg(count(lit(1)).as("__c"))
-        .collect().map(r => (r.getString(1), r.getInt(0), r.getLong(2)))
-      val byTag = counts.groupBy(_._1)
-      case class Probe(tag: String, g: Long, pid: Int, rank: Long)
-      val targetsByTag = byTag.toSeq.map { case (tag, tagCounts0) =>
-        val tagCounts = tagCounts0.map(c => c._2 -> c._3).sortBy(_._1)
-        val n = tagCounts.map(_._2).sum
-        val spans = tagCounts.scanLeft((0, 0L, 0L)) { case ((_, off, c), (pid, cnt)) =>
-          (pid, off + c, cnt)
-        }.drop(1)
-        val targets = fractions.map { p =>
-          val pos = p * (n - 1)
-          (p, math.floor(pos).toLong, math.ceil(pos).toLong, pos - math.floor(pos))
-        }
-        val probes = targets.flatMap(t => Seq(t._2, t._3)).distinct.map { g =>
-          val (pid, off, _) = spans.find { case (_, off, c) => off <= g && g < off + c }.get
-          Probe(tag, g, pid, g - off + 1)
-        }
-        (tag, targets, probes)
-      }
-      val located = targetsByTag.flatMap(_._3)
-      val neededPids = located.map(_.pid).distinct
-      val lookupDf = spark.createDataFrame(
-        spark.sparkContext.parallelize(
-          located.map(p => Row(p.tag, p.g, p.pid, p.rank)), 1),
-        StructType(Seq(StructField("__t", org.apache.spark.sql.types.StringType),
-          StructField("__g", LongType),
-          StructField("__pid", IntegerType), StructField("__rank", LongType))))
-      val w = Window.partitionBy("__pid", "__t").orderBy("__v")
-      val picked = tagged.withColumn("__pid", spark_partition_id())
-        .filter(col("__pid").isin(neededPids: _*))
-        .withColumn("__rank", row_number().over(w).cast("long"))
-        .join(broadcast(lookupDf), Seq("__t", "__pid", "__rank"))
-        .select("__t", "__g", "__v")
-        .collect().map(r => (r.getString(0), r.getLong(1)) -> r.getDouble(2)).toMap
-      val out = targetsByTag.map { case (tag, targets, _) =>
-        Row.fromSeq(tag +: targets.map { case (_, lo, hi, wgt) =>
-          val a = picked((tag, lo)); val b = picked((tag, hi))
-          if (lo == hi) a else a + (b - a) * wgt
-        })
-      }
-      val schema = StructType(
-        StructField(groupCol, org.apache.spark.sql.types.StringType) +:
-          fractions.map(f => StructField(
-            s"q_${f.toString.replace('.', '_')}",
-            org.apache.spark.sql.types.DoubleType)))
-      spark.createDataFrame(spark.sparkContext.parallelize(out, 1), schema)
-    } finally tagged.unpersist(blocking = false)
+    val tagged = df.select(col(groupCol).cast("string").as("__t"),
+      col(valueCol).cast("double").as("__v"))
+    val out = select(tagged, _ => fractions, cap).toSeq.map { case (tag, qs) =>
+      Row.fromSeq(tag +: qs) }
+    val schema = StructType(StructField(groupCol, StringType) +:
+      fractions.map(f => StructField(s"q_${f.toString.replace('.', '_')}", DoubleType)))
+    spark.createDataFrame(spark.sparkContext.parallelize(out, 1), schema)
   }
+
+  private def checkFractions(c: String, fs: Seq[Double]): Unit =
+    require(fs.nonEmpty && fs.forall(f => f >= 0.0 && f <= 1.0),
+      s"fractions must be in [0,1] for $c: $fs")
+
+  /** Order-preserving signed key of a non-NaN double; `-0.0` maps to
+    * the key of `0.0`. The transform is its own inverse on the bits. */
+  private val orderKey = udf { (v: Double) =>
+    val b = java.lang.Double.doubleToLongBits(v + 0.0)
+    b ^ ((b >> 63) & Long.MaxValue)
+  }
+  private def fromKey(k: Long): Double =
+    java.lang.Double.longBitsToDouble(k ^ ((k >> 63) & Long.MaxValue))
+
+  /** An order statistic of `tag`: local rank `rank` among the `size`
+    * keys `k` with `k >> shift == bucket`. */
+  private case class Probe(tag: String, shift: Int, bucket: Long, rank: Long, size: Long)
+
+  /** The radix-select core: quantiles at `fractionsOf(tag)` for every
+    * tag of `tagged` (`__t` string, `__v` double; null and NaN rows
+    * dropped), one entry per tag with rows. */
+  private def select(tagged: DataFrame, fractionsOf: String => Seq[Double],
+      cap: Long): Map[String, Seq[Double]] = {
+    val keyed = tagged.na.drop("any", Seq("__t", "__v"))
+      .select(col("__t"), orderKey(col("__v")).as("__k"))
+    def inBuckets(shift: Int, buckets: Seq[(String, Long)]): Column =
+      struct(col("__t").as("t"), shiftright(col("__k"), shift).as("b"))
+        .isin(buckets.map { case (t, b) => struct(lit(t).as("t"), lit(b).as("b")) }: _*)
+    // (tag, parent bucket at shift + Digit) -> ascending (bucket, count)
+    def histogram(shift: Int, parents: Seq[(String, Long)]): Map[(String, Long), Array[(Long, Long)]] = {
+      val top = parents.isEmpty
+      val scope = if (top) keyed else keyed.filter(inBuckets(shift + Digit, parents))
+      scope.groupBy(col("__t"), shiftright(col("__k"), shift).as("__b")).count().collect()
+        .groupBy(r => (r.getString(0), if (top) 0L else r.getLong(1) >> Digit))
+        .map { case (p, rs) => p -> rs.map(r => (r.getLong(1), r.getLong(2))).sortBy(_._1) }
+    }
+    def locate(tag: String, shift: Int, hist: Array[(Long, Long)], rank: Long): Probe = {
+      var i = 0; var off = 0L
+      while (off + hist(i)._2 <= rank) { off += hist(i)._2; i += 1 }
+      Probe(tag, shift, hist(i)._1, rank - off, hist(i)._2)
+    }
+
+    val top = histogram(64 - Digit, Nil)
+    val targets = top.map { case ((tag, _), hist) =>
+      val n = hist.map(_._2).sum
+      tag -> fractionsOf(tag).map { p =>
+        val pos = p * (n - 1)
+        (math.floor(pos).toLong, math.ceil(pos).toLong, pos - math.floor(pos))
+      }
+    }
+    var probes = targets.toSeq.flatMap { case (tag, ts) =>
+      ts.flatMap(t => Seq(t._1, t._2)).distinct.map(g =>
+        (tag, g) -> locate(tag, 64 - Digit, top((tag, 0L)), g))
+    }.toMap
+    for (shift <- 64 - 2 * Digit to 0 by -Digit) {
+      val big = probes.filter(_._2.size > cap)
+      if (big.nonEmpty) {
+        val sub = histogram(shift, big.values.map(p => (p.tag, p.bucket)).toSeq.distinct)
+        probes ++= big.map { case (g, p) => g -> locate(p.tag, shift, sub((p.tag, p.bucket)), p.rank) }
+      }
+    }
+
+    // Wanted buckets are disjoint or equal, and each is fetched whole, so
+    // a bucket's keys are one contiguous run of its tag's sorted keys.
+    val fetch = probes.values.filter(_.shift > 0).toSeq
+    val keys: Map[String, Array[Long]] = if (fetch.isEmpty) Map.empty else
+      keyed.filter(fetch.groupBy(_.shift).map { case (s, ps) =>
+          inBuckets(s, ps.map(p => (p.tag, p.bucket)).distinct) }.reduce(_ || _))
+        .collect().groupBy(_.getString(0))
+        .map { case (t, rs) => t -> rs.map(_.getLong(1)).sorted }
+    def value(p: Probe): Double =
+      if (p.shift == 0) fromKey(p.bucket)
+      else {
+        val ks = keys(p.tag)
+        fromKey(ks(ks.indexWhere(_ >= (p.bucket << p.shift)) + p.rank.toInt))
+      }
+    targets.map { case (tag, ts) =>
+      tag -> ts.map { case (lo, hi, w) =>
+        lerp(value(probes((tag, lo))), value(probes((tag, hi))), w) }
+    }
+  }
+
+  private def lerp(a: Double, b: Double, w: Double): Double =
+    if (a == b) a
+    else if (a.isInfinite || b.isInfinite) (1 - w) * a + w * b
+    else a + (b - a) * w
 }

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Execution-regime selection for operators that run their own eager
-  * multi-stage pipelines (dedup, quantiles, clustering).
+  * multi-stage pipelines (dedup, clustering, packing).
   *
   * These operators make their own measured size decisions (candidate
   * counts, partition offsets), so on a SMALL input the generic adaptive

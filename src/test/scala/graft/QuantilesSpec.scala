@@ -1,5 +1,10 @@
 package graft
 
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerBlockUpdated, SparkListenerEvent, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import graft.operators.Quantiles
 
@@ -12,6 +17,34 @@ class QuantilesSpec extends SparkSpec {
   private def builtin(df: org.apache.spark.sql.DataFrame, c: String, ps: Seq[Double]): Seq[Double] =
     df.agg(expr(s"percentile($c, array(${ps.mkString(",")}))"))
       .head.getSeq[Double](0)
+
+  /** Runs `f` and returns the job starts and block updates a listener
+    * saw meanwhile; a marker job run after `f` flushes the listener bus. */
+  private def withEvents[A](f: => A): (A, Seq[SparkListenerEvent]) = {
+    val sc = spark.sparkContext
+    val marker = java.util.UUID.randomUUID().toString
+    val seen = new ConcurrentLinkedQueue[SparkListenerEvent]()
+    val flushed = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("graft.test.marker") == marker)
+          flushed.countDown()
+        else seen.add(e)
+      override def onBlockUpdated(e: SparkListenerBlockUpdated): Unit = seen.add(e)
+    }
+    sc.addSparkListener(listener)
+    try {
+      val out = f
+      sc.setLocalProperty("graft.test.marker", marker)
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty("graft.test.marker", null)
+      assert(flushed.await(60, TimeUnit.SECONDS), "listener bus did not flush")
+      (out, seen.asScala.toSeq)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  private def jobCount(events: Seq[SparkListenerEvent]): Int =
+    events.count(_.isInstanceOf[SparkListenerJobStart])
 
   test("matches built-in percentile bit-for-bit on lineitem") {
     val li = Tables.lineitem(spark, sfDir)
@@ -44,12 +77,18 @@ class QuantilesSpec extends SparkSpec {
     val rnd = new scala.util.Random(42)
     for (trial <- 1 to 12) {
       val n = 1 + rnd.nextInt(500)
-      // duplicate-heavy, skewed, and negative values all appear
-      val vals = Seq.fill(n)(rnd.nextInt(4) match {
+      // duplicate-heavy, skewed, and negative values all appear, plus
+      // signed zeros, infinities and runs sharing their top key bits
+      val vals = Seq.fill(n)(rnd.nextInt(5) match {
         case 0 => rnd.nextInt(5).toDouble          // heavy ties
         case 1 => rnd.nextDouble() * 1e6           // large range
         case 2 => -rnd.nextDouble()                // negatives
-        case _ => rnd.nextGaussian()
+        case 3 => rnd.nextGaussian()
+        case _ => rnd.nextInt(4) match {
+          case 0 => if (rnd.nextBoolean()) 0.0 else -0.0
+          case 1 => if (rnd.nextBoolean()) Double.PositiveInfinity else Double.NegativeInfinity
+          case _ => 1.0 + rnd.nextInt(1000) * math.ulp(1.0)
+        }
       })
       val df = vals.toDF("v").repartition(1 + rnd.nextInt(7))
       val ps = Seq(0.0, rnd.nextDouble(), 0.5, 1.0)
@@ -60,7 +99,8 @@ class QuantilesSpec extends SparkSpec {
         // representable; allow last-ulp drift (1e-12 relative — three
         // orders tighter than the oracle gate's 1e-9)
         val tol = math.max(math.abs(w) * 1e-12, 1e-300)
-        assert(math.abs(g - w) <= tol, s"trial $trial n=$n p=$p: got $g want $w")
+        assert(g == w || (g.isNaN && w.isNaN) || math.abs(g - w) <= tol,
+          s"trial $trial n=$n p=$p: got $g want $w")
       }
     }
   }
@@ -121,5 +161,44 @@ class QuantilesSpec extends SparkSpec {
       assert(exactAgg.findFirstIn(p).isEmpty,
         s"$name still plans an unbounded exact percentile:\n$p")
     }
+  }
+
+  test("refined buckets give the same answers as whole-bucket fetches") {
+    import spark.implicits._
+    // 5000 keys sharing their top 48 bits: a cap of 4 refines the one
+    // top bucket down to the last level, where each bucket is one key.
+    val run = (0 until 5000).map(k => 1.0 + k * math.ulp(1.0)).toDF("v")
+    val li = Tables.lineitem(spark, sfDir)
+    val specs = Seq("l_quantity" -> Seq(0.0, 0.25, 0.5, 0.9, 1.0),
+      "l_extendedprice" -> Seq(0.1, 0.5, 0.667))
+    for ((df, sp) <- Seq(run -> Seq("v" -> Seq(0.0, 0.3, 0.5, 0.999, 1.0)), li -> specs)) {
+      val (whole, wholeEv) = withEvents(Quantiles.exactQuantilesMulti(df, sp))
+      val (refined, refinedEv) = withEvents(Quantiles.exactQuantilesMulti(df, sp, 4L))
+      assert(refined == whole)
+      assert(jobCount(refinedEv) > jobCount(wholeEv),
+        s"cap 4 ran ${jobCount(refinedEv)} jobs, default cap ${jobCount(wholeEv)}")
+      sp.foreach { case (c, ps) =>
+        whole(c).zip(builtin(df, c, ps)).foreach { case (g, w) =>
+          assert(math.abs(g - w) <= math.ulp(w) * 4, s"$c: got $g want $w") }
+      }
+    }
+    val ords = Tables.orders(spark, sfDir)
+    val ps = Seq(0.25, 0.5, 0.9)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getString(0) -> r.toSeq.tail).toMap
+    val (whole, wholeEv) = withEvents(rows(
+      Quantiles.groupedExactQuantiles(ords, "o_orderstatus", "o_totalprice", ps)))
+    val (refined, refinedEv) = withEvents(rows(
+      Quantiles.groupedExactQuantiles(ords, "o_orderstatus", "o_totalprice", ps, 4L)))
+    assert(refined == whole)
+    assert(jobCount(refinedEv) > jobCount(wholeEv))
+  }
+
+  test("exactQuantiles stores no RDD block") {
+    val li = Tables.lineitem(spark, sfDir)
+    val (_, events) = withEvents(Quantiles.exactQuantiles(li, "l_extendedprice", Seq(0.5, 0.9)))
+    val stored = events.collect { case e: SparkListenerBlockUpdated
+      if e.blockUpdatedInfo.blockId.isRDD => e.blockUpdatedInfo.blockId }
+    assert(stored.isEmpty, s"blocks written: ${stored.mkString(", ")}")
   }
 }
