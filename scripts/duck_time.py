@@ -11,6 +11,7 @@ warm passes, and prints total cold / per-pass warm sums plus the
 slowest 10 queries by warm median.
 """
 import json
+import os
 import statistics
 import sys
 import time
@@ -26,7 +27,9 @@ def main() -> None:
     reps = int(sys.argv[3]) if len(sys.argv) > 3 else 3
     oracles = json.loads((out_dir / "oracle_sql.json").read_text())
     con = duckdb.connect()
-    con.execute(f"SET threads TO 32")
+    # Same default as the Scala mains: SPARK_GRAFT_CPUS, else the box's cores.
+    threads = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
+    con.execute(f"SET threads TO {threads}")
     for t in TABLES:
         p = sf_dir / f"{t}.parquet"
         if p.exists():

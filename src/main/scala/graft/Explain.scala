@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Staged plan diagnostics + dev main.
+/** Staged plan diagnostics.
   *
   * `stages(df)` mirrors the reference's staged `explain()` (reference
   * `diagnostics/_explain.py:18-49`: logical → simplified → lowered →
@@ -15,9 +13,9 @@ import org.apache.spark.sql.SparkSession
   *   - "final"     ≈ post-AQE replanned plan, available after execution
   *     (the reference has no runtime replan — Spark-only stage)
   *
-  * `analyze(df)` is the runtime half (reference `_analyze.py:36-80`):
-  * executes the plan and returns the final adaptive plan string with
-  * per-node runtime statistics embedded.
+  * `analyzeStats(df)` is the runtime half (reference
+  * `_analyze.py:36-80`): it executes the plan and returns each node of
+  * the final adaptive plan with its runtime SQL metrics.
   */
 object Explain {
 
@@ -29,16 +27,6 @@ object Explain {
       "analyzed" -> qe.analyzed.toString,
       "optimized" -> qe.optimizedPlan.toString,
       "physical" -> qe.executedPlan.toString)
-  }
-
-  /** Execute and return the final (post-AQE) plan with runtime stats.
-    * Executes `df`'s OWN QueryExecution (a sink write would wrap a new
-    * one and leave this plan unexecuted/non-final); rows are consumed on
-    * the executors, nothing is collected. */
-  def analyze(df: org.apache.spark.sql.DataFrame): String = {
-    val plan = df.queryExecution.executedPlan
-    plan.execute().foreachPartition(_ => ())
-    plan.toString
   }
 
   /** Structured runtime statistics per physical operator (reference
@@ -65,27 +53,5 @@ object Explain {
         kids.flatMap(walk(_, depth + 1))
     }
     walk(root, 0)
-  }
-  def main(args: Array[String]): Unit = {
-    val name = args(0)
-    val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val df = SparkEntry.queries(name)(spark, sfDir)
-    df.explain("formatted")
-    val t0 = System.nanoTime()
-    df.write.format("noop").mode("overwrite").save()
-    println(f"[explain] first run: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-    val t1 = System.nanoTime()
-    df.write.format("noop").mode("overwrite").save()
-    println(f"[explain] second run: ${(System.nanoTime() - t1) / 1e9}%.2f s")
-    spark.stop()
   }
 }

@@ -1063,14 +1063,14 @@ object TextDedup {
     * it the window stream NEVER exchanges — the removal decision is a
     * map-side broadcast join, inherently skew-proof (a hot hash's
     * postings stay spread across their source partitions). */
-  private[graft] val BroadcastDictRows = 1L << 20
+  private val BroadcastDictRows = 1L << 20
 
   /** With a bigger dictionary, a single co-partitioning exchange on
     * __h is safe as long as the MEASURED hottest posting list fits one
     * task comfortably (2^16 rows sorts in milliseconds); past it, the
     * join gets a fresh exchange AQE can skew-split, so no task ever
     * owns an unbounded posting list. */
-  private[graft] val HotGroupRows = 1L << 16
+  private val HotGroupRows = 1L << 16
 
   /** Packed-long keep-first witness bounds: (id * 2^20 + start) is
     * order-isomorphic to the (id, start) struct when starts stay below
@@ -1139,7 +1139,7 @@ object TextDedup {
     * scale the three probe jobs cost more than the recomputation they
     * avoid, and the simple shape is already the safest one.
     *
-    * Measured (med, 3 reps, local[32]): stock sf0.1 1.87 -> 1.56 s; sf1
+    * Measured (med, 3 reps, 32 local cores): stock sf0.1 1.87 -> 1.56 s; sf1
     * dup-cloud 22.4 -> 9.7 s (old concentration-unsafe window shape:
     * 7.0); degenerate 400k-doc shared-boilerplate bed 5.3 -> 5.25 s —
     * every bed equal or faster than both prior shapes, with the

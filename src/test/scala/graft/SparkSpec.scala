@@ -1,5 +1,10 @@
 package graft
 
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerBlockUpdated, SparkListenerEvent, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -7,6 +12,31 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   val sfDir = "/root/testdata/sf0.001"
+
+  /** Runs `f` and returns the job starts and block updates a listener
+    * saw meanwhile; a marker job run after `f` flushes the listener bus. */
+  protected def withEvents[A](f: => A): (A, Seq[SparkListenerEvent]) = {
+    val sc = spark.sparkContext
+    val marker = java.util.UUID.randomUUID().toString
+    val seen = new ConcurrentLinkedQueue[SparkListenerEvent]()
+    val flushed = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("graft.test.marker") == marker)
+          flushed.countDown()
+        else seen.add(e)
+      override def onBlockUpdated(e: SparkListenerBlockUpdated): Unit = seen.add(e)
+    }
+    sc.addSparkListener(listener)
+    try {
+      val out = f
+      sc.setLocalProperty("graft.test.marker", marker)
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty("graft.test.marker", null)
+      assert(flushed.await(60, TimeUnit.SECONDS), "listener bus did not flush")
+      (out, seen.asScala.toSeq)
+    } finally sc.removeSparkListener(listener)
+  }
 }
 
 object SparkSpec {
