@@ -960,7 +960,7 @@ object ExtraQueries {
         .orderBy("event_id")
     }
 
-    // Key-skew report (operators.Tuning.skewReport): the measurement
+    // Key-skew report (operators.SkewJoin.skewReport): the measurement
     // that decides salting vs AQE skew handling; top shares via
     // TakeOrdered, no global window.
     q("q_skew_report",
@@ -974,7 +974,7 @@ object ExtraQueries {
         |  CAST(top10 AS DOUBLE) / CAST(n_rows AS DOUBLE) AS top10_share,
         |  CAST(n_rows AS DOUBLE) / CAST(n_keys AS DOUBLE) AS avg_rows_per_key
         |FROM t, tt""".stripMargin) { (s, dir) =>
-      graft.operators.Tuning.skewReport(Tables.orders(s, dir), "o_custkey")
+      graft.operators.SkewJoin.skewReport(Tables.orders(s, dir), "o_custkey")
     }
 
     // Cohort retention (operators.Analytics.cohortRetention): users
@@ -1186,7 +1186,7 @@ object ExtraQueries {
           .orderBy("event_type")
     }
 
-    // Null-profile report (operators.Tuning.profileNulls): one agg pass,
+    // Null-profile report (operators.Analytics.profileNulls): one agg pass,
     // tidy per-column completeness rows; nulls synthesized via nullif so
     // the counters are exercised on the null-free TPC-H columns.
     q("q_null_profile",
@@ -1205,7 +1205,7 @@ object ExtraQueries {
         nullif(col("l_returnflag"), lit("R")).as("rf"),
         nullif(col("l_linestatus"), lit("F")).as("ls"),
         col("l_quantity").as("q"))
-      graft.operators.Tuning.profileNulls(base, Seq("rf", "ls", "q"))
+      graft.operators.Analytics.profileNulls(base, Seq("rf", "ls", "q"))
         .orderBy("column")
     }
 

@@ -584,7 +584,7 @@ object TrainPrepQueries {
         .orderBy("bin")
     }
 
-    // Corpus data card (operators.Tuning.dataCard): the one-call
+    // Corpus data card (operators.Analytics.dataCard): the one-call
     // datasheet summary — volume, vocabulary, exact-dup fraction,
     // source mixture, language share — all integer sums and exact
     // distincts, so every ratio is one exact division.
@@ -613,7 +613,7 @@ object TrainPrepQueries {
         |    ('top_source_frac',
         |      (SELECT top_src / n_docs FROM top, base))) AS v(metric, value))
         |ORDER BY metric""".stripMargin) { (s, dir) =>
-      graft.operators.Tuning.dataCard(Tables.documents(s, dir),
+      graft.operators.Analytics.dataCard(Tables.documents(s, dir),
           "text", "lang", "en", "source")
         .orderBy("metric")
     }

@@ -736,15 +736,15 @@ final case class Frame(df: DataFrame, index: Option[String] = None) {
       tokensCol, budget))
 
   /** Key-skew diagnostic: n_rows/n_keys/top-share report over a join
-    * key (operators.Tuning.skewReport) — the salt-vs-AQE decision
+    * key (operators.SkewJoin.skewReport) — the salt-vs-AQE decision
     * input. */
   def skewReport(keyCol: String): Frame =
-    Frame(graft.operators.Tuning.skewReport(df, keyCol))
+    Frame(graft.operators.SkewJoin.skewReport(df, keyCol))
 
   /** Tidy per-column null-completeness report
-    * (operators.Tuning.profileNulls; one aggregate pass). */
+    * (operators.Analytics.profileNulls; one aggregate pass). */
   def profileNulls(cols: String*): Frame =
-    Frame(graft.operators.Tuning.profileNulls(df, cols))
+    Frame(graft.operators.Analytics.profileNulls(df, cols))
 
   /** Blocked fuzzy entity matching: within-block pairs at edit distance
     * ≤ maxDist (operators.EntityMatch.fuzzyPairs with the first-token +
@@ -1520,10 +1520,10 @@ final case class Frame(df: DataFrame, index: Option[String] = None) {
       vocabSize))
 
   /** One-call corpus data card: tidy (metric, value) datasheet summary
-    * (operators.Tuning.dataCard). */
+    * (operators.Analytics.dataCard). */
   def dataCard(textCol: String, langCol: String, langValue: String,
       sourceCol: String): Frame =
-    Frame(graft.operators.Tuning.dataCard(df, textCol, langCol, langValue,
+    Frame(graft.operators.Analytics.dataCard(df, textCol, langCol, langValue,
       sourceCol))
 
   /** Easy→hard curriculum order with explicit global positions and

@@ -4,8 +4,9 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Event-stream analytics: cohort retention, ordered conversion
-  * funnels, and PSI (population-stability-index) drift — the report
-  * family every product/events pipeline composes by hand on the
+  * funnels, and PSI (population-stability-index) drift, plus the
+  * null-profile and corpus data-card reports — the report family
+  * every product/events pipeline composes by hand on the
   * reference engine, provided here as operators with the same
   * scale discipline as the rest of the library: grouped aggregates
   * keyed by user/bucket, broadcast-sized stat joins, no windows over
@@ -231,5 +232,74 @@ object Analytics {
             * log(col("n_cur").cast("double") / col("t_cur").cast("double")
               / (col("n_ref").cast("double") / col("t_ref").cast("double"))))
           .otherwise(0.0), 9) + lit(0.0)).as("psi_term"))
+  }
+
+  /** Tidy null-profile over `cols` — (column, n_rows, n_nulls,
+    * null_frac) rows from ONE aggregate pass (count(col) skips nulls),
+    * unpivoted like corrMatrix. The completeness half of data
+    * profiling beside q_histogram's distribution half. */
+  def profileNulls(df: DataFrame, cols: Seq[String]): DataFrame = {
+    require(cols.nonEmpty, "profileNulls needs at least one column")
+    val agged = df.agg(count(lit(1)).as("__n"),
+      cols.map(c => count(col(c)).as(s"__c_$c")): _*)
+    agged.select(explode(array(cols.map { c =>
+        struct(lit(c).as("column"), col("__n").as("n_rows"),
+          (col("__n") - col(s"__c_$c")).as("n_nulls"),
+          ((col("__n") - col(s"__c_$c")).cast("double") /
+            col("__n").cast("double")).as("null_frac"))
+      }: _*)).as("r"))
+      .select(col("r.column"), col("r.n_rows"), col("r.n_nulls"),
+        col("r.null_frac"))
+  }
+
+  /** One-call corpus data card (the "datasheet" summary a dataset
+    * release ships): tidy (metric, value) rows covering volume
+    * (docs/tokens/chars), vocabulary, exact-duplicate fraction, source
+    * mixture, and a language share — the headline numbers from the
+    * profiling family in ONE result.
+    *
+    * Scale shape: one doc-level aggregate (long sums + exact
+    * countDistinct — all integer arithmetic, so every derived ratio is
+    * a single exact division, no float-sum association), one
+    * token-keyed distinct for vocabulary, one vocabulary-sized source
+    * groupBy for the top-source share; the three one-row results
+    * broadcast-crossJoin into the tidy explode. Nothing corpus-sized
+    * moves anywhere.
+    *
+    * Output: (metric, value) — doubles, stable metric order. */
+  def dataCard(docs: DataFrame, textCol: String,
+      langCol: String, langValue: String, sourceCol: String): DataFrame = {
+    val base = docs.agg(
+      count(lit(1)).as("__n_docs"),
+      countDistinct(md5(col(textCol))).as("__n_unique"),
+      sum(size(split(col(textCol), " ")).cast("long")).as("__n_tokens"),
+      sum(length(col(textCol)).cast("long")).as("__n_chars"),
+      sum(when(col(langCol) === langValue, 1L).otherwise(0L)).as("__n_lang"),
+      countDistinct(col(sourceCol)).as("__n_sources"))
+    val vocab = docs.select(explode(split(col(textCol), " ")).as("__t"))
+      .agg(countDistinct("__t").as("__vocab"))
+    val topSrc = docs.groupBy(sourceCol).agg(count(lit(1)).as("__c"))
+      .agg(max("__c").as("__top_src"))
+    val nd = col("__n_docs").cast("double")
+    base.crossJoin(broadcast(vocab)).crossJoin(broadcast(topSrc))
+      .select(explode(array(
+        struct(lit("n_docs").as("metric"), nd.as("value")),
+        struct(lit("n_tokens").as("metric"),
+          col("__n_tokens").cast("double").as("value")),
+        struct(lit("n_chars").as("metric"),
+          col("__n_chars").cast("double").as("value")),
+        struct(lit("vocab").as("metric"),
+          col("__vocab").cast("double").as("value")),
+        struct(lit("mean_tokens_per_doc").as("metric"),
+          (col("__n_tokens").cast("double") / nd).as("value")),
+        struct(lit("exact_dup_frac").as("metric"),
+          (lit(1.0) - col("__n_unique").cast("double") / nd).as("value")),
+        struct(lit("lang_share").as("metric"),
+          (col("__n_lang").cast("double") / nd).as("value")),
+        struct(lit("n_sources").as("metric"),
+          col("__n_sources").cast("double").as("value")),
+        struct(lit("top_source_frac").as("metric"),
+          (col("__top_src").cast("double") / nd).as("value")))).as("r"))
+      .select(col("r.metric"), col("r.value"))
   }
 }

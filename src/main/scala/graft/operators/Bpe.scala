@@ -115,9 +115,6 @@ object Bpe {
   /** The default rules: 64 merges learned from the embedded seed. */
   lazy val defaultMerges: Seq[(String, String)] = learn(seedText, 64)
 
-  private def rankMap(merges: Seq[(String, String)]): Map[(String, String), Int] =
-    merges.zipWithIndex.toMap
-
   /** Encode one pre-token and return its token (symbol) count. */
   def encodeCount(word: String, ranks: Map[(String, String), Int]): Int =
     encodePieces(word, ranks).length

@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
   *  1. range-partition by id (`repartitionByRange`) and pin the layout
   *     with an eager-on-first-use localCheckpoint, so both passes see
   *     identical partition bounds;
-  *  2. one tiny aggregation collects per-partition token sums →
+  *  2. one map-only pass collects per-partition token sums →
   *     cumulative partition offsets on the driver (O(partitions) rows);
   *  3. a per-partition window adds the local running sum to the
   *     partition's offset — every window group is one range partition,
@@ -42,28 +42,29 @@ object Packing {
     * BEFORE the row in the global order. */
   private[graft] def runningOffset(df: DataFrame,
       orderCols: Seq[org.apache.spark.sql.Column]): DataFrame = {
-    val spark = df.sparkSession
-    val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val parts = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
     val pinned = df
       .repartitionByRange(parts, orderCols: _*)
       .localCheckpoint(false)
     // Pass 1: per-partition weight sums → cumulative offsets (driver,
-    // O(partitions)).
-    val sums = pinned
-      .groupBy(spark_partition_id().as("__pid")).agg(sum("__w").as("__s"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1)
-    val offsets = sums.zip(sums.scanLeft(0L) { case (acc, (_, s)) => acc + s })
-      .map { case ((pid, _), before) => pid -> before }
-    // Pass 2: partition-local running sum + broadcast offset lookup
-    // (a join, not a chained CASE — O(1) per row at any partition count).
-    val lookup = spark.createDataFrame(offsets.toSeq).toDF("__pid", "__off")
+    // O(partitions)). One map-only job over the pin, indexed by
+    // partition id; null weights count 0, as `sum` skips them.
+    val sums = pinned.select(col("__w")).queryExecution.toRdd
+      .mapPartitions { rows =>
+        var s = 0L
+        while (rows.hasNext) { val r = rows.next(); if (!r.isNullAt(0)) s += r.getLong(0) }
+        Iterator.single(s)
+      }.collect()
+    val offsets = sums.scanLeft(0L)(_ + _).init.toSeq
+    // Pass 2: partition-local running sum + the partition's offset, read
+    // by index from a literal array (O(1) per row, no lookup join).
     val w = Window.partitionBy("__pid").orderBy(orderCols: _*)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     pinned.withColumn("__pid", spark_partition_id())
       .withColumn("__cum", sum("__w").over(w))
-      .join(broadcast(lookup), Seq("__pid"))
-      .withColumn("__off_total", col("__off") + col("__cum") - col("__w"))
-      .drop("__pid", "__cum", "__off")
+      .withColumn("__off_total",
+        element_at(typedLit(offsets), col("__pid") + 1) + col("__cum") - col("__w"))
+      .drop("__pid", "__cum")
   }
 
   /** Assign each row a `bin` (0-based context-window index) plus its
@@ -71,7 +72,7 @@ object Packing {
     * non-negative integral column; rows are packed in `idCol` order.
     */
   def packSequences(df: DataFrame, idCol: String, tokensCol: String,
-      capacity: Long): DataFrame = Tuning.forSize(df) {
+      capacity: Long): DataFrame = {
     require(capacity > 0, s"capacity must be positive: $capacity")
     val weighted = df
       .select(col(idCol), col(tokensCol).cast("long").as("__w"))

@@ -413,17 +413,6 @@ object Similarity {
       .collect()
       .map(_.getSeq[Float](1).map(_.toDouble))
 
-  /** Squared L2 between `vec`'s subspace `j` and codeword `c` of the
-    * codebook literal: ordered fold over the `subDim` components, double
-    * arithmetic — replayable. */
-  private def subDist(vec: Column, cbL: Column, j: Int, c: Column,
-      subDim: Int): Column =
-    aggregate(sequence(lit(1), lit(subDim)), lit(0.0), (acc, i) => {
-      val d = element_at(vec, lit(j * subDim) + i).cast("double") -
-        element_at(element_at(cbL, c), lit(j * subDim) + i)
-      acc + d * d
-    })
-
   /** Fused PQ encode+reconstruct on the NATIVE kernel
     * ([[graft.functions.PqReconstruct]] — a codegen'd triple loop; the
     * interpreted HOF form below ran m·ks·subDim boxed lambda steps per

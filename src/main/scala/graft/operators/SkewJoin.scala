@@ -88,4 +88,26 @@ object SkewJoin {
     pruned.join(small.as("__bp_s"),
       col(s"__bp_b.$bigKey") === col(s"__bp_s.$smallKey"), joinType)
   }
+
+  /** Key-skew report — the measurement that decides whether a join on
+    * `keyCol` needs salting ([[saltedJoin]]) or AQE's skew handling can
+    * cope: one count aggregate over the key (vocabulary-sized), top
+    * shares via TakeOrdered (no global window, audit-clean), everything
+    * rejoined as broadcast one-row tables. Output: n_rows, n_keys,
+    * top1_share, top10_share, avg_rows_per_key. */
+  def skewReport(df: DataFrame, keyCol: String): DataFrame = {
+    val counts = df.groupBy(keyCol).agg(count(lit(1)).as("__c"))
+    val totals = counts.agg(sum("__c").as("n_rows"),
+      count(lit(1)).as("n_keys"), max("__c").as("__top1"))
+    val top10 = counts.orderBy(col("__c").desc, col(keyCol))
+      .limit(10).agg(sum("__c").as("__top10"))
+    totals.crossJoin(broadcast(top10))
+      .select(col("n_rows"), col("n_keys"),
+        (col("__top1").cast("double") / col("n_rows").cast("double"))
+          .as("top1_share"),
+        (col("__top10").cast("double") / col("n_rows").cast("double"))
+          .as("top10_share"),
+        (col("n_rows").cast("double") / col("n_keys").cast("double"))
+          .as("avg_rows_per_key"))
+  }
 }

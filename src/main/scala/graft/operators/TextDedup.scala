@@ -144,21 +144,6 @@ object TextDedup {
   def baseHash(sh: Column): Column =
     conv(substring(md5(sh), 1, 7), 16, 10).cast("long")
 
-  /** MinHash signature rows: (id, i, mh) for i in [0, k), where
-    * mh_i = min over shingles of (h0*a_i + b_i) mod P. Long format for
-    * per-hash inspection; the LSH pipeline uses the wide
-    * `bandSignatures` path below, which never explodes per-hash rows.
-    */
-  def minHash(sh: DataFrame, idCol: String, k: Int): DataFrame = {
-    val consts = mixConsts(k)
-    sh.select(col(idCol), baseHash(col("sh")).as("__h0"))
-      .select(col(idCol),
-        posexplode(array(consts.map { case (a, b) =>
-          (col("__h0") * a + b) % P }: _*)).as(Seq("i", "h")))
-      .groupBy(col(idCol), col("i"))
-      .agg(min("h").as("mh"))
-  }
-
   /** Banded signatures: (id, band, sig) with r minhashes concatenated per
     * band in hash-index order, straight from the shingle stream.
     *
@@ -469,6 +454,12 @@ object TextDedup {
     sig.groupBy("band", "sig").agg(count(lit(1)).as("__bn"))
       .filter(col("__bn") > cap).count()
 
+  /** Is `df`'s optimizer-estimated size under ~1 GB? Unknown → large.
+    * Picks `nearDuplicates`' fused window regime. */
+  private def isSmall(df: DataFrame): Boolean =
+    scala.util.Try(
+      df.queryExecution.optimizedPlan.stats.sizeInBytes <= (1L << 30)).getOrElse(false)
+
   /** Full near-duplicate pipeline: exact-dedup (identical texts collapse
     * to one representative) → shingle → MinHash(k) → LSH(r-row bands) →
     * candidate pairs → exact-Jaccard verify ≥ threshold → expand back to
@@ -496,8 +487,6 @@ object TextDedup {
       threshold: Double = 0.8,
       maxBucketSize: Option[Int] = None,
       broadcastLimit: Long = 2000000L): DataFrame = {
-    val small = Tuning.isSmall(docs)
-    Tuning.scoped(docs.sparkSession, small) {
     // Exact-dup collapse, regime-selected (measured, like every other
     // gate here):
     // - measured-small + gates open: ONE cached corpus pass — a
@@ -515,7 +504,7 @@ object TextDedup {
     //   full-text window sort is the shuffle that kills the stage).
     //   broadcastLimit == 0 routes HERE, so the scale path is the one
     //   the shuffle-regime tests execute end-to-end.
-    val windowRegime = small && broadcastLimit > 0
+    val windowRegime = isSmall(docs) && broadcastLimit > 0
     val tagged: Option[DataFrame] =
       if (!windowRegime) None
       else {
@@ -608,8 +597,8 @@ object TextDedup {
       // at corpus scale) ever pay the second md5 kernel pass, and the
       // bucket exchange carries signature rows, never hash arrays.
       // Joins stay unhinted — AQE's runtime size measurement picks
-      // broadcast vs shuffle per stage (gates closed / AQE off in tests
-      // proves the shuffle regime end-to-end).
+      // broadcast vs shuffle per stage (tests close the gates to run
+      // this path end-to-end).
       val sig = bandSignaturesProjected(reps, idCol, textCol,
         shingleLen, numHashes, bandRows).cache()
       val cand = candidatePairs(sig, idCol, maxBucketSize).cache()
@@ -637,12 +626,12 @@ object TextDedup {
         reps.unpersist(blocking = false)
       })
     }
-    // Materialize the verified pairs inside the AQE-off scope: the whole
-    // heavy middle of the pipeline runs here, as one straight-line
-    // schedule; consumers read the (tiny) cached result. Then release
-    // the scale path's intermediate caches (candidate hash arrays,
-    // candidates, signatures, reps) — they have served every consumer;
-    // `tagged`/`cliques` stay: the expansion below still reads them.
+    // The verified-pair count sizes the driver-probe gate below, and
+    // counting materializes the cached pairs, so it must run before the
+    // scale path's intermediate caches (candidate hash arrays,
+    // candidates, signatures, reps) are released — after it they have
+    // served every consumer. `tagged`/`cliques` stay: the expansion
+    // below still reads them.
     val nPairs = repPairs.count()
     releaseIntermediates()
 
@@ -761,7 +750,6 @@ object TextDedup {
       cross.union(within)
     }
   }
-  }
 
   /** Duplicate clusters from near-dup pairs: connected components by
     * iterative min-label propagation with pointer jumping (labels
@@ -785,7 +773,7 @@ object TextDedup {
     // exception); size the iterative stages to it, not to the corpus'
     // shuffle parallelism — locally that collapses each iteration to a
     // single task, at scale it grows with the edge count. The measured
-    // edge count also picks the constants-vs-AQE execution regime.
+    // edge count also picks the driver vs distributed path below.
     val nEdges = edgesRaw.count()
     // A graph under `driverEdgeLimit` edges fits comfortably on the
     // driver (≤ ~80 MB of long pairs): union-find there is O(E α(E))
@@ -823,7 +811,6 @@ object TextDedup {
         .toDF("doc_id", "cluster_id", "is_rep")
     }
     val parts = math.max(1, (nEdges / 500000L).toInt)
-    Tuning.scoped(pairs.sparkSession, nEdges <= 10000000L) {
     // localCheckpoint (eager) truncates lineage each step — the
     // standard pattern for iterative algorithms; plain cache() would
     // leave every iteration's plan chained to the full upstream
@@ -856,7 +843,6 @@ object TextDedup {
     }
     labels.select(col("n").as("doc_id"), col("lab").as("cluster_id"),
       (col("n") === col("lab")).as("is_rep"))
-    }
   }
 
   /** SimHash over the token stream (all occurrences, not distinct): for

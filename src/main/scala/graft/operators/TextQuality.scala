@@ -588,7 +588,7 @@ object TextQuality {
     * with an explicit global `position` and fixed-size `batch` index.
     *
     * Scale shape: difficulty bounds are ONE one-row aggregate broadcast
-    * back (band assignment is then map-only, [[Tuning.skewReport]]'s
+    * back (band assignment is then map-only, [[SkewJoin.skewReport]]'s
     * histogram convention); the global position — a global cumulative
     * count, which a naive `Window.orderBy` would funnel through one
     * task — uses the [[Packing]] two-pass offset pattern: range-
@@ -599,7 +599,7 @@ object TextQuality {
     *
     * Output: (idCol, stage, position, batch). */
   def curriculumOrder(docs: DataFrame, idCol: String, difficultyCol: String,
-      stages: Int, batchRows: Long): DataFrame = Tuning.forSize(docs) {
+      stages: Int, batchRows: Long): DataFrame = {
     require(stages >= 1, s"stages must be >= 1: $stages")
     require(batchRows >= 1, s"batchRows must be >= 1: $batchRows")
     val d = col(difficultyCol).cast("double")

@@ -24,7 +24,7 @@ class CorpusOpsSpec extends SparkSpec {
       (1L, "a b c", "en", "s1"),   // exact dup of doc 0
       (2L, "d e", "de", "s2"))
       .toDF("doc_id", "text", "lang", "source")
-    val got = graft.operators.Tuning.dataCard(docs, "text", "lang", "en",
+    val got = graft.operators.Analytics.dataCard(docs, "text", "lang", "en",
         "source")
       .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
     assert(got == Map(

@@ -283,7 +283,7 @@ class SelectOpsSpec extends SparkSpec {
   }
 
   test("new round-12 ops tolerate null and empty text rows") {
-    import graft.operators.{Retrieval, TextQuality, Tuning}
+    import graft.operators.{Analytics, Retrieval, TextQuality}
     val docs = spark.createDataFrame(Seq(
       (0L, Some("alpha beta gamma"), Some("en"), Some("s1")),
       (1L, None: Option[String], Some("en"), Some("s1")),
@@ -302,7 +302,7 @@ class SelectOpsSpec extends SparkSpec {
     assert(oov.nonEmpty)
     // dataCard: runs through nulls (null text drops from sums via
     // count semantics) without throwing
-    val card = Tuning.dataCard(docs, "text", "lang", "en", "source")
+    val card = Analytics.dataCard(docs, "text", "lang", "en", "source")
       .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
     assert(card("n_docs") == 4.0)
     // curriculumOrder over a null difficulty row keeps the row (null
