@@ -13,10 +13,14 @@ import org.apache.spark.sql.SparkSession
   * each query timed SPARK_GRAFT_REPS times (default 3) back to back.
   * `value` is the sum of per-query medians, `min_value` the sum of
   * minima, `dispersion` the summed max-min spread. A fixed
-  * constant-cost probe job runs before every 8th query and after the
-  * last; its (max-min)/median is `noise_index`, a box-contention stamp
-  * that travels with the capture. Failures propagate: a broken query
-  * fails the bench instead of recording a bogus time.
+  * constant-cost probe job runs twice back to back before every 8th
+  * query and after the last; the faster of each pair is one sample
+  * (so a lone GC or JIT pause after the preceding query does not
+  * count as contention), and the samples' interquartile range over
+  * their median (nearest-rank, graftbench's spread measure) is
+  * `noise_index`, a box-contention stamp that travels with the
+  * capture. Failures propagate: a broken query fails the bench
+  * instead of recording a bogus time.
   *
   * Environment:
   *   - SPARK_GRAFT_SF_DIR: input tables (default /root/testdata/sf0.1)
@@ -108,16 +112,18 @@ object Bench {
     val probes = scala.collection.mutable.ArrayBuffer.empty[Double]
     val samples: Seq[(String, Seq[Double])] = names.zipWithIndex.map {
       case (name, i) =>
-        if (i % 8 == 0) probes += runProbe()
+        if (i % 8 == 0) probes += runProbe().min(runProbe())
         val n = if (breach("timed sweep", 1.0)) 1 else reps
         name -> (1 to n).map { _ => val t = runOnce(name); release(); t }.sorted
     }
-    probes += runProbe()
+    probes += runProbe().min(runProbe())
     spark.stop()
 
     def median(sorted: Seq[Double]): Double = sorted(sorted.size / 2)
+    def rank(sorted: Seq[Double], q: Double): Double =
+      sorted(math.max(1, math.ceil(q * sorted.size).toInt) - 1)
     val pSorted = probes.toSeq.sorted
-    val noiseIndex = (pSorted.last - pSorted.head) / median(pSorted)
+    val noiseIndex = (rank(pSorted, 0.75) - rank(pSorted, 0.25)) / median(pSorted)
     val medians = samples.map { case (n, ts) => n -> median(ts) }
 
     def f(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)

@@ -1015,18 +1015,19 @@ object LlmQueries {
             .as("lang"),
           array_join(transform(sequence(lit(0), lit(23)), wordAt), " ")
             .as("text"))
-        // ONE grouped+checkpointed feature pin serves the label count,
-        // all GD iterations, AND inference (r15: the count job and the
-        // 4 per-language scoreInline kernel re-runs over re-synthesized
-        // text are gone — scoring is one map over the 1-row-per-doc pin
-        // with the weight vectors as plan literals). r16: the pin is
+        // ONE grouped+checkpointed feature pin serves all GD iterations
+        // (the first also counts the rows — no separate count job) AND
+        // inference (r15: the 4 per-language scoreInline kernel re-runs
+        // over re-synthesized text are gone — scoring is one map over
+        // the 1-row-per-doc pin with the weight vectors as plan
+        // literals). r16: the pin is
         // built DIRECTLY from the word_bag_features kernel — no token
         // explode, no group-by-doc exchange (bit-identical features,
         // CharGramFeaturesSpec word twin).
         val pinned = QualityModel.pinLabeledWordFeatures(syn, "doc_id",
           "text", syn.select(col("doc_id"), col("lang").as("label")), B)
         val models = QualityModel.trainLogRegMultiPinned(pinned,
-          pinned.count().toDouble, langs, B, iters = 2, lr = 1.0)
+          langs, B, iters = 2, lr = 1.0)
         val scored = QualityModel.scoreMultiPinned(pinned,
           langs.map(l => l -> models(l)))
           .withColumnRenamed("label", "actual_lang")
@@ -1107,7 +1108,7 @@ object LlmQueries {
           "text", syn.select(col("doc_id"), col("lang").as("label")),
           B, n = 3)
         val models = QualityModel.trainLogRegMultiPinned(pinned,
-          pinned.count().toDouble, langs, B, iters = 2, lr = 1.0)
+          langs, B, iters = 2, lr = 1.0)
         val scored = QualityModel.scoreMultiPinned(pinned,
           langs.map(l => l -> models(l)))
           .withColumnRenamed("label", "actual_lang")

@@ -294,16 +294,16 @@ object SelectQueries {
          |  CASE WHEN p >= 0.5 THEN 1 ELSE 0 END AS pred
          |FROM p ORDER BY doc_id""".stripMargin) { (s, dir) =>
       val docs = Tables.documents(s, dir)
-      // ONE word_bag_features pin serves the label count, all GD
-      // iterations, AND inference (r16: the feature kernel runs once;
-      // the join-based classify re-ran it and paid a doc-keyed
-      // aggregate).
+      // ONE word_bag_features pin serves all GD iterations (the first
+      // of which also counts it and materializes it) AND inference
+      // (r16: the feature kernel runs once; the join-based classify
+      // re-ran it and paid a doc-keyed aggregate).
       val labels = docs.select(col("doc_id"),
         when(col("lang") === "en", lit(1.0)).otherwise(lit(0.0)).as("y"))
       val pinned = QualityModel.pinLabeledWordFeatures(docs, "doc_id",
         "text", labels, buckets = 512)
       val model = QualityModel.trainLogRegPinned(pinned,
-        pinned.count().toDouble, buckets = 512, iters = 2, lr = 1.0)
+        buckets = 512, iters = 2, lr = 1.0)
       QualityModel.classifyPinned(pinned, model)
         .select(col("doc_id"), round(col("quality"), 6).as("quality"),
           when(col("quality") >= 0.5, lit(1)).otherwise(lit(0)).as("pred"))
@@ -334,7 +334,7 @@ object SelectQueries {
       val pinned = QualityModel.pinLabeledWordFeatures(docs, "doc_id",
         "text", labels, buckets = 512)
       val model = QualityModel.trainLogRegPinned(pinned,
-        pinned.count().toDouble, buckets = 512, iters = 2, lr = 1.0)
+        buckets = 512, iters = 2, lr = 1.0)
       QualityModel.calibration(QualityModel.classifyPinned(pinned, model),
           labels, buckets = 10)
         .orderBy("bucket")

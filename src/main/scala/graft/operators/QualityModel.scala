@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Model-based quality filtering: a logistic-regression classifier over
@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   * describe filtering CommonCrawl with exactly such a classifier) —
   * an engine extension beyond the reference's operator list.
   *
-  * Scale shape (r14 fused form):
+  * Scale shape:
   *  - the hashed feature matrix (doc, bucket, x = n_b/|d|) is built in
   *    ONE corpus pass, grouped into per-doc (b, x) arrays (bounded by
   *    min(B, |d|) entries), label-joined, and pinned ONCE (at a real
@@ -21,12 +21,18 @@ import org.apache.spark.sql.functions._
   *    weight vector lives on the driver and rides back into each
   *    iteration as an O(B) dense plan LITERAL — the classic
   *    "parameters small, data huge" distributed-GD layout; each
-  *    iteration is one MAP-ONLY scan (score fold + delta + exploded
-  *    gradient terms in one Project) plus one bucket-keyed aggregate
-  *    returning B+1 rows — zero doc-keyed shuffles per iteration
-  *    (the broadcast-join/delta-join shape this replaces degrades to a
-  *    full feature-matrix shuffle per iteration once delta outgrows
-  *    the broadcast limit; A/B in BASELINE.md);
+  *    iteration is ONE map-only job over the pin: a Project computes
+  *    every doc's K deltas once, each partition folds its rows into a
+  *    dense K·(B+1) gradient array (bias as slot B) and ships back only
+  *    its touched slots, and the driver sums the partials in
+  *    partition-index order — dask-expr's chunk → aggregate tree
+  *    reduction with no exchange at all. The same pass counts the
+  *    pin's rows (the trainers' N), so training costs exactly `iters`
+  *    jobs and no separate count (the r13 broadcast-join/delta-join
+  *    shape degraded to a full feature-matrix shuffle per iteration,
+  *    A/B in BASELINE.md; the exploded bucket-keyed aggregate that
+  *    followed paid an exchange per iteration and re-scored each doc
+  *    once per feature, see `gradients`);
   *  - inference is feature-build + one broadcast join + one doc-keyed
   *    sum (classify), or zero joins via the scoreInline map-only
   *    column: no corpus-sized state anywhere.
@@ -126,11 +132,10 @@ object QualityModel {
     * label row survives) and pinned via a lazy local checkpoint — the
     * one grouped frame that serves BOTH training and scoring, so the
     * expensive group-by-doc runs once per pipeline instead of once per
-    * consumer. One `count()` on the result both materializes the
-    * checkpoint and returns the exact label count (the trainers' N) —
-    * folding the r14 separate labels-count job into the pin. Docs with
-    * no feature rows carry a null `fx`: the gradient scans filter them
-    * (preserving the inner-join gradient semantics the oracle
+    * consumer. The trainers' first gradient pass both materializes
+    * the checkpoint and counts its rows (their N, the label count).
+    * Docs with no feature rows carry a null `fx`: they count toward N
+    * but add no gradient (the inner-join gradient semantics the oracle
     * replays), while scorers can still see them and emit null.
     * sort_array canonicalizes the score-fold summation order (r14
     * advice: reassociation was previously only *rounded* away; now the
@@ -150,7 +155,7 @@ object QualityModel {
     * — so the per-doc feature array costs one map-only projection
     * instead of an exploded gram stream plus a doc-keyed group-by
     * exchange. Empty feature arrays (no non-empty words) map to null fx,
-    * preserving the left-join contract: gradient scans filter them,
+    * preserving the left-join contract: gradient passes skip them,
     * scorers emit null. Bit-identical to
     * `pinLabeledFeatures(hashedCharFeatures(..), labels)`
     * (CharGramFeaturesSpec pins the equality). */
@@ -186,132 +191,149 @@ object QualityModel {
   def trainLogReg(spark: SparkSession, feats: DataFrame, labels: DataFrame,
       buckets: Int, iters: Int = 3, lr: Double = 1.0): Model = {
     val lab = labels.select(col("doc_id"), col("y").cast("double").as("y"))
-    val pinned0 = pinLabeledFeatures(feats, lab)
-    trainLogRegPinned(pinned0, pinned0.count().toDouble, buckets, iters, lr)
+    trainLogRegPinned(pinLabeledFeatures(feats, lab), buckets, iters, lr)
   }
 
-  /** [[trainLogReg]] over a pre-built (doc_id, y, fx) pin whose count
-    * the caller already took — the binary twin of
-    * [[trainLogRegMultiPinned]]: one grouped checkpoint serves
+  /** [[trainLogReg]] over a pre-built (doc_id, y, fx) pin — the binary
+    * twin of [[trainLogRegMultiPinned]]: one grouped checkpoint serves
     * training AND [[classifyPinned]] scoring, so the feature kernel
-    * runs once per pipeline instead of once per consumer. */
-  def trainLogRegPinned(pinned0: DataFrame, n: Double,
-      buckets: Int, iters: Int = 3, lr: Double = 1.0): Model = {
-    // Fused GD step (r14): the feature matrix is grouped into per-doc
-    // (b, x) arrays ONCE (bounded: ≤ min(B, |d|) entries per doc) and
-    // labels joined once; each iteration is then a SINGLE scan — the
-    // per-doc score is a fold over the array against the weight vector
-    // riding as an O(B) dense plan literal (the k-means-centroid /
-    // PQ-codebook pattern), delta multiplies the exploded (b, x) rows
-    // in the same Project, and one bucket-keyed exchange returns the
-    // (B+1)-row gradient (bias as virtual bucket −1 with x = 1). The
-    // r13 shape paid two feature-matrix scans and three exchanges per
-    // iteration (doc-keyed score agg, label join, bucket agg); this
-    // pays zero doc-keyed exchanges after the one-off grouping.
-    // Sorted arrays make the score-fold summation order canonical; the
-    // 9-decimal quantization remains the cross-engine firewall for the
-    // oracle's own (hash-aggregated, orderless) replay of the same sum.
-    val pinned = pinned0.filter(col("fx").isNotNull)
-    var w = Map.empty[Long, Double]
-    var bias = 0.0
-    for (_ <- 0 until iters) {
-      // graft_feature_dot: the codegen'd sparse·dense inner product —
-      // same elements, same left-to-right order as the interpreted
-      // aggregate() fold it replaces (bit-identical sum; r15 A/B in
-      // BASELINE), weights baked into the generated code as one
-      // double[] reference.
-      val s = round(
-        graft.functions.FeatureDot(col("fx"),
-          (0 until buckets).map(b => w.getOrElse(b.toLong, 0.0))) +
-          lit(bias), 9)
-      val grads = pinned
-        .select((lit(1.0) / (lit(1.0) + exp(-s)) - col("y")).as("d"),
-          explode(concat(col("fx"),
-            array(struct(lit(-1L).as("b"), lit(1.0).as("x"))))).as("e"))
-        .groupBy(col("e.b").as("b"))
-        .agg(sum(col("e.x") * col("d")).as("g"))
-        .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-      w = (grads - (-1L)).map { case (b, g) =>
-        b -> BigDecimal(w.getOrElse(b, 0.0) - lr * g / n)
-          .setScale(9, BigDecimal.RoundingMode.HALF_UP).toDouble
-      }
-      bias = BigDecimal(bias - lr * grads(-1L) / n)
-        .setScale(9, BigDecimal.RoundingMode.HALF_UP).toDouble
-    }
-    Model(w, bias, buckets)
-  }
+    * runs once per pipeline instead of once per consumer. Exactly
+    * `iters` jobs; the first one materializes a lazy pin. */
+  def trainLogRegPinned(pinned: DataFrame, buckets: Int, iters: Int = 3,
+      lr: Double = 1.0): Model =
+    descend(pinned, Seq(col("y")), buckets, iters, lr).head
 
   /** One-vs-rest multiclass logistic regression, all classes fused
     * into the SAME per-iteration pass as [[trainLogReg]]: the per-doc
     * feature arrays are grouped and checkpointed ONCE, and each GD
-    * iteration is one map-only scan computing K score folds + K deltas
-    * in a single Project, then ONE bucket-keyed exchange carrying K
-    * gradient sums per bucket — cost per iteration is independent of K
-    * in exchanges and scans (the fastText/GPT-3-style lang-ID or
-    * domain-classifier layout, where K is small and the corpus is the
-    * 100 TB object). `labels` is (doc_id, label: String); one binary
-    * model per entry of `classes` (label == c). Same 9-decimal
-    * quantization firewall per class as the binary trainer. */
+    * iteration is one map-only job computing K score folds + K deltas
+    * per doc and K gradient sums per bucket — cost per iteration is
+    * independent of K in jobs and scans (the fastText/GPT-3-style
+    * lang-ID or domain-classifier layout, where K is small and the
+    * corpus is the 100 TB object). `labels` is (doc_id, label: String);
+    * one binary model per entry of `classes` (label == c). Same
+    * 9-decimal quantization firewall per class as the binary trainer. */
   def trainLogRegMulti(spark: SparkSession, feats: DataFrame,
       labels: DataFrame, classes: Seq[String], buckets: Int,
       iters: Int = 3, lr: Double = 1.0): Map[String, Model] = {
     require(classes.nonEmpty && classes.distinct.size == classes.size,
       s"classes must be distinct and non-empty: $classes") // before any job runs
-    val pinned = pinLabeledFeatures(feats,
-      labels.select(col("doc_id"), col("label")))
-    trainLogRegMultiPinned(pinned, pinned.count().toDouble, classes,
-      buckets, iters, lr)
+    trainLogRegMultiPinned(pinLabeledFeatures(feats,
+      labels.select(col("doc_id"), col("label"))), classes, buckets, iters, lr)
   }
 
-  /** [[trainLogRegMulti]] over a pre-built [[pinLabeledFeatures]] pin
-    * whose count the caller already took: lets one grouped checkpoint
-    * serve training AND [[scoreMultiPinned]] scoring (the
-    * q_lang_id_trained shape — at 100 TB the grouped feature form is
-    * written to storage once and every consumer reads it). */
-  def trainLogRegMultiPinned(pinned0: DataFrame, n: Double,
-      classes: Seq[String], buckets: Int,
-      iters: Int = 3, lr: Double = 1.0): Map[String, Model] = {
+  /** [[trainLogRegMulti]] over a pre-built [[pinLabeledFeatures]] pin:
+    * lets one grouped checkpoint serve training AND [[scoreMultiPinned]]
+    * scoring (the q_lang_id_trained shape — at 100 TB the grouped
+    * feature form is written to storage once and every consumer reads
+    * it). Exactly `iters` jobs, like [[trainLogRegPinned]]. */
+  def trainLogRegMultiPinned(pinned: DataFrame, classes: Seq[String],
+      buckets: Int, iters: Int = 3, lr: Double = 1.0): Map[String, Model] = {
     require(classes.nonEmpty && classes.distinct.size == classes.size,
       s"classes must be distinct and non-empty: $classes")
-    val k = classes.size
-    val pinned = pinned0.filter(col("fx").isNotNull)
+    classes.zip(descend(pinned,
+      classes.map(c => (col("label") === c).cast("double")),
+      buckets, iters, lr)).toMap
+  }
+
+  private def round9(v: Double): Double =
+    BigDecimal(v).setScale(9, BigDecimal.RoundingMode.HALF_UP).toDouble
+
+  /** The GD loop shared by both trainers: one model per target column
+    * (a 0/1 double), all K fused into one map-only [[gradients]] job per
+    * iteration. A bucket gets a weight entry iff some non-null fx of
+    * the pin holds it (the set is the same every iteration). */
+  private def descend(pinned: DataFrame, targets: Seq[Column], buckets: Int,
+      iters: Int, lr: Double): Seq[Model] = {
+    val k = targets.size
     val ws = Array.fill(k)(Map.empty[Long, Double])
     val biases = Array.fill(k)(0.0)
     for (_ <- 0 until iters) {
-      // K deltas in one Project; the exploded (b, x) rows then feed K
-      // gradient sums in one aggregate — one scan, one exchange total
-      val deltaCols = classes.zipWithIndex.map { case (c, ci) =>
+      // graft_feature_dot: the codegen'd sparse·dense inner product over
+      // the sorted fx array (canonical summation order), weights baked
+      // into the generated code as one double[] reference.
+      val deltas = targets.zipWithIndex.map { case (y, ci) =>
         val s = round(
           graft.functions.FeatureDot(col("fx"),
             (0 until buckets).map(b => ws(ci).getOrElse(b.toLong, 0.0))) +
             lit(biases(ci)), 9)
-        (lit(1.0) / (lit(1.0) + exp(-s)) -
-          (col("label") === c).cast("double")).as(s"__d$ci")
+        (lit(1.0) / (lit(1.0) + exp(-s)) - y).cast("double")
       }
-      val grads = pinned
-        .select((deltaCols :+
-          explode(concat(col("fx"),
-            array(struct(lit(-1L).as("b"), lit(1.0).as("x"))))).as("e")): _*)
-        .groupBy(col("e.b").as("b"))
-        .agg(classes.indices.map(ci =>
-          sum(col("e.x") * col(s"__d$ci")).as(s"__g$ci")).head,
-          classes.indices.tail.map(ci =>
-            sum(col("e.x") * col(s"__d$ci")).as(s"__g$ci")): _*)
-        .collect()
-        .map(r => r.getLong(0) -> classes.indices.map(ci =>
-          r.getDouble(1 + ci)).toArray).toMap
-      classes.indices.foreach { ci =>
-        ws(ci) = (grads - (-1L)).map { case (b, g) =>
-          b -> BigDecimal(ws(ci).getOrElse(b, 0.0) - lr * g(ci) / n)
-            .setScale(9, BigDecimal.RoundingMode.HALF_UP).toDouble
-        }
-        biases(ci) = BigDecimal(biases(ci) - lr * grads(-1L)(ci) / n)
-          .setScale(9, BigDecimal.RoundingMode.HALF_UP).toDouble
+      val (rows, touched, g) = gradients(pinned, deltas, buckets)
+      require(rows > 0, "cannot train on an empty pin")
+      val n = rows.toDouble
+      for (ci <- 0 until k) {
+        ws(ci) = touched.map { b =>
+          b.toLong -> round9(ws(ci).getOrElse(b.toLong, 0.0) - lr * g(b * k + ci) / n)
+        }.toMap
+        biases(ci) = round9(biases(ci) - lr * g(buckets * k + ci) / n)
       }
     }
-    classes.zipWithIndex.map { case (c, ci) =>
-      c -> Model(ws(ci), biases(ci), buckets)
-    }.toMap
+    (0 until k).map(ci => Model(ws(ci), biases(ci), buckets))
+  }
+
+  /** One gradient pass: (pin rows, touched buckets ascending, dense
+    * K·(B+1) gradient sums, bucket-major with the bias in slot B).
+    *
+    * The deltas are SELECTED as plain columns next to `fx` and the
+    * (b, x) pairs are walked by the fold, never exploded: under an
+    * explode, Spark's ExtractGenerator keeps the non-generator columns
+    * in the Project ABOVE the Generate, so each delta's score fold
+    * would run once per exploded element — |fx|+1 dot products per doc
+    * instead of one.
+    *
+    * Each partition folds its rows in row order (as a partial
+    * aggregate would) and returns only its touched slots, so it ships
+    * no more bytes than a partial aggregate's rows; the driver sums the
+    * partials in partition-index order, a fixed order on any run.
+    * Semantics of the bucket-keyed `sum` this replaces: a null-fx row
+    * counts toward N and adds nothing, a null delta adds nothing, an
+    * untouched bucket has no entry. A bucket id outside [0, buckets)
+    * fails the job, naming the id (no score could read its weight). */
+  private def gradients(pinned: DataFrame, deltas: Seq[Column],
+      buckets: Int): (Long, Array[Int], Array[Double]) = {
+    val k = deltas.size
+    val parts = pinned.select(col("fx") +: deltas: _*).queryExecution.toRdd
+      .mapPartitions { rows =>
+        val g = new Array[Double]((buckets + 1) * k)
+        val hit = new Array[Boolean](buckets + 1)
+        var n = 0L
+        while (rows.hasNext) {
+          val r = rows.next()
+          n += 1
+          if (!r.isNullAt(0)) {
+            def add(b: Int, x: Double): Unit = {
+              hit(b) = true
+              var ci = 0
+              while (ci < k) {
+                if (!r.isNullAt(1 + ci)) g(b * k + ci) += x * r.getDouble(1 + ci)
+                ci += 1
+              }
+            }
+            val fx = r.getArray(0)
+            var i = 0
+            while (i < fx.numElements()) {
+              val e = if (fx.isNullAt(i)) null else fx.getStruct(i, 2)
+              val noId = e == null || e.isNullAt(0)
+              if (noId || e.getLong(0) < 0 || e.getLong(0) >= buckets)
+                throw new IllegalArgumentException("feature bucket id " +
+                  (if (noId) "null" else e.getLong(0)) + s" outside [0, $buckets)")
+              val b = e.getLong(0).toInt
+              if (e.isNullAt(1)) hit(b) = true else add(b, e.getDouble(1))
+              i += 1
+            }
+            add(buckets, 1.0) // the bias: virtual bucket B with x = 1
+          }
+        }
+        val idx = hit.indices.filter(hit(_)).toArray
+        Iterator.single((n, idx,
+          idx.flatMap(b => g.slice(b * k, b * k + k))))
+      }.collect()
+    val g = new Array[Double]((buckets + 1) * k)
+    for ((_, idx, pg) <- parts; j <- idx.indices; ci <- 0 until k)
+      g(idx(j) * k + ci) += pg(j * k + ci)
+    val touched = parts.flatMap(_._2).distinct.sorted.filter(_ < buckets)
+    (parts.map(_._1).sum, touched, g)
   }
 
   /** Map-only multi-model scoring over a [[pinLabeledFeatures]] pin:

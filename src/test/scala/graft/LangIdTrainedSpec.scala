@@ -87,7 +87,7 @@ class LangIdTrainedSpec extends SparkSpec {
       val pinned = QualityModel.pinLabeledFeatures(featsOf(trainDf),
         trainDf.select(col("doc_id"), col("lang").as("label")))
       val models = QualityModel.trainLogRegMultiPinned(pinned,
-        pinned.count().toDouble, langs, 128, iters = 2, lr = 1.0)
+        langs, 128, iters = 2, lr = 1.0)
       val scored = QualityModel.scoreMultiPinned(
         QualityModel.pinLabeledFeatures(featsOf(testDf),
           testDf.select(col("doc_id"), col("lang").as("label"))),

@@ -113,25 +113,47 @@ class SelectOpsSpec extends SparkSpec {
 
     // replay on the driver from the collected feature matrix
     val f = feats.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-    val y = Map(0L -> 1.0, 1L -> 1.0, 2L -> 0.0, 3L -> 0.0, 4L -> 1.0)
-    val n = y.size.toDouble
     def r9(v: Double) = BigDecimal(v).setScale(9, BigDecimal.RoundingMode.HALF_UP).toDouble
-    var w = Map.empty[Long, Double]; var bias = 0.0
-    for (_ <- 0 until 2) {
-      val s = f.groupBy(_._1).map { case (d, xs) =>
-        d -> r9(xs.map { case (_, b, x) => x * w.getOrElse(b, 0.0) }.sum + bias)
+    def replay(y: Map[Long, Double]): (Map[Long, Double], Double) = {
+      val n = y.size.toDouble
+      var w = Map.empty[Long, Double]; var bias = 0.0
+      for (_ <- 0 until 2) {
+        val s = f.groupBy(_._1).map { case (d, xs) =>
+          d -> r9(xs.map { case (_, b, x) => x * w.getOrElse(b, 0.0) }.sum + bias)
+        }
+        val delta = y.keys.map(d => d -> (1.0 / (1.0 + math.exp(-s(d))) - y(d))).toMap
+        val grad = f.groupBy(_._2).map { case (b, xs) =>
+          b -> xs.map { case (d, _, x) => x * delta(d) }.sum
+        }
+        w = grad.map { case (b, g) => b -> r9(w.getOrElse(b, 0.0) - g / n) }
+        bias = r9(bias - delta.values.sum / n)
       }
-      val delta = y.keys.map(d => d -> (1.0 / (1.0 + math.exp(-s(d))) - y(d))).toMap
-      val grad = f.groupBy(_._2).map { case (b, xs) =>
-        b -> xs.map { case (d, _, x) => x * delta(d) }.sum
-      }
-      w = grad.map { case (b, g) => b -> r9(w.getOrElse(b, 0.0) - g / n) }
-      bias = r9(bias - delta.values.sum / n)
+      (w, bias)
     }
-    assert(model.bias === bias)
-    assert(model.weights.keySet === w.keySet)
-    w.foreach { case (b, v) =>
-      assert(math.abs(model.weights(b) - v) < 1e-12, s"bucket $b") }
+    def check(model: QualityModel.Model, y: Map[Long, Double], what: String): Unit = {
+      val (w, bias) = replay(y)
+      assert(model.bias === bias, what)
+      assert(model.weights.keySet === w.keySet, what)
+      w.foreach { case (b, v) =>
+        assert(math.abs(model.weights(b) - v) < 1e-12, s"$what: bucket $b") }
+    }
+    val y = Map(0L -> 1.0, 1L -> 1.0, 2L -> 0.0, 3L -> 0.0, 4L -> 1.0)
+    check(model, y, "trainLogReg")
+
+    // the same arithmetic over a pin spread across 3 partitions, for the
+    // binary trainer and a K = 3 multi trainer (one model per class)
+    val cls = Map(0L -> "a", 1L -> "b", 2L -> "c", 3L -> "a", 4L -> "b")
+    val pinned = QualityModel.pinLabeledFeatures(feats,
+      labels.join(spark.createDataFrame(cls.toSeq).toDF("doc_id", "label"), "doc_id"))
+      .repartition(3).localCheckpoint()
+    assert(pinned.rdd.getNumPartitions === 3)
+    check(QualityModel.trainLogRegPinned(pinned, 64, iters = 2, lr = 1.0), y,
+      "3-partition binary")
+    val multi = QualityModel.trainLogRegMultiPinned(pinned, Seq("a", "b", "c"), 64,
+      iters = 2, lr = 1.0)
+    for (c <- Seq("a", "b", "c"))
+      check(multi(c), cls.map { case (d, l) => d -> (if (l == c) 1.0 else 0.0) },
+        s"3-partition multi, class $c")
   }
 
   test("trained classifier separates linearly separable classes") {

@@ -4,7 +4,7 @@ import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerBlockUpdated, SparkListenerEvent, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerBlockUpdated, SparkListenerEvent, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -13,8 +13,9 @@ trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   val sfDir = "/root/testdata/sf0.001"
 
-  /** Runs `f` and returns the job starts and block updates a listener
-    * saw meanwhile; a marker job run after `f` flushes the listener bus. */
+  /** Runs `f` and returns the job starts, task ends and block updates a
+    * listener saw meanwhile; a marker job run after `f` flushes the
+    * listener bus. */
   protected def withEvents[A](f: => A): (A, Seq[SparkListenerEvent]) = {
     val sc = spark.sparkContext
     val marker = java.util.UUID.randomUUID().toString
@@ -25,6 +26,7 @@ trait SparkSpec extends AnyFunSuite {
         if (e.properties != null && e.properties.getProperty("graft.test.marker") == marker)
           flushed.countDown()
         else seen.add(e)
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = seen.add(e)
       override def onBlockUpdated(e: SparkListenerBlockUpdated): Unit = seen.add(e)
     }
     sc.addSparkListener(listener)
