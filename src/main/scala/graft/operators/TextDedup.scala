@@ -626,14 +626,17 @@ object TextDedup {
         reps.unpersist(blocking = false)
       })
     }
-    // The verified-pair count sizes the driver-probe gate below, and
-    // counting materializes the cached pairs, so it must run before the
-    // scale path's intermediate caches (candidate hash arrays,
+    // Scale regime only: the count materializes the cached pairs, so it
+    // must run before the intermediate caches (candidate hash arrays,
     // candidates, signatures, reps) are released — after it they have
-    // served every consumer. `tagged`/`cliques` stay: the expansion
-    // below still reads them.
-    val nPairs = repPairs.count()
-    releaseIntermediates()
+    // served every consumer. The window regime has nothing to release
+    // and sizes its driver-probe gate inside the probe below, so it runs
+    // no count. `tagged`/`cliques` stay: the expansion below still reads
+    // them.
+    if (!windowRegime) {
+      repPairs.count()
+      releaseIntermediates()
+    }
 
     // Expansion: representative pairs fan out to all clique-member
     // pairs (same texts ⇒ same jaccard); identical-text pairs within a
@@ -649,28 +652,28 @@ object TextDedup {
     // to shuffle joins.
     val idIsLong = repPairs.schema("doc_a").dataType ==
       org.apache.spark.sql.types.LongType
-    // Dup-member probe, window regime: ONE limit-guarded collect
-    // fetches the dup-clique member list AND the verified rep pairs in
-    // a single job — both sides are warm cache reads (the pairs count
-    // above materialized them) and each extra action costs a fixed
-    // scheduling quantum, which on the measured-small regime is a
+    // Dup-member probe, window regime: ONE collect fetches the
+    // dup-clique member list AND the verified rep pairs, each side
+    // limited to `broadcastLimit + 1` rows — each extra action costs a
+    // fixed scheduling quantum, which on the measured-small regime is a
     // double-digit share of the operator's wall-clock. The probe side
-    // carries a marker column; a truncated probe (or nPairs over the
-    // gate) falls through to the counted, distributed path.
+    // carries a marker column. The driver expansion is taken iff
+    // members + pairs ≤ `broadcastLimit` (a side at its limit alone
+    // exceeds it); otherwise the distributed path below runs.
     val memberProbe: Option[(Array[org.apache.spark.sql.Row],
         Array[org.apache.spark.sql.Row])] =
-      if (!windowRegime || !idIsLong || nPairs > broadcastLimit) None
+      if (!windowRegime || !idIsLong) None
       else {
-        val cap = math.min(broadcastLimit + 1 - nPairs, Int.MaxValue.toLong).toInt
+        val cap = math.min(broadcastLimit, Int.MaxValue - 1L).toInt + 1
         val rows = tagged.get.filter(col("__csz") > 1)
           .select(col("__rep").as("doc_a"), col(idCol).as("doc_b"),
             lit(0.0).as("jaccard"), lit(1).as("__probe"))
           .limit(cap)
           .unionAll(repPairs.select(col("doc_a"), col("doc_b"),
-            col("jaccard"), lit(0).as("__probe")))
+            col("jaccard"), lit(0).as("__probe")).limit(cap))
           .collect()
-        val (probe, pairRows) = rows.partition(_.getInt(3) == 1)
-        if (probe.length < cap) Some((probe, pairRows)) else None
+        if (rows.length <= broadcastLimit) Some(rows.partition(_.getInt(3) == 1))
+        else None
       }
     lazy val nDup = tagged match {
       case Some(t) =>
@@ -751,65 +754,75 @@ object TextDedup {
     }
   }
 
-  /** Duplicate clusters from near-dup pairs: connected components by
-    * iterative min-label propagation with pointer jumping (labels
-    * converge to the smallest doc id in each component). Returns
-    * (id, cluster_id, is_rep).
+  /** Duplicate clusters from near-dup pairs: connected components,
+    * labelled by the smallest doc id in each component. Returns
+    * (doc_id, cluster_id, is_rep). A pair with a null endpoint is
+    * dropped on both paths (a plan filter, no job): it links nothing.
     *
-    * Each iteration takes one neighbor-min step (one hop) then one
-    * pointer-jump step (`lab <- labels[lab]`), so label information
+    * Regime: ONE bounded collect of at most `driverEdgeLimit + 1` pair
+    * rows picks the path and, when the pair frame has at most
+    * `driverEdgeLimit` rows, is also the driver path's whole input —
+    * no cache, no count. The gate counts PAIR rows as given (a pair and
+    * its mirror count twice), not distinct undirected edges.
+    * `driverEdgeLimit = 0` sends every non-empty input to the
+    * distributed path. A pair frame that is a local relation (e.g.
+    * [[nearDuplicates]]' driver expansion) costs zero jobs: the
+    * optimizer folds the projection, filter and limit into it.
+    *
+    * Driver path: union-find by min id, O(E α(E)), zero iterative
+    * jobs; the labels are the component minima in any edge order.
+    *
+    * Distributed path: iterative min-label propagation with pointer
+    * jumping. Each iteration takes one neighbor-min step (one hop) then
+    * one pointer-jump step (`lab <- labels[lab]`), so label information
     * travels two-plus hops per round and convergence is
     * O(log diameter), not O(diameter). Both steps are bounded shuffles
     * over the (tiny) pair graph; the per-iteration driver action only
     * reads a change count off the just-checkpointed result — no
-    * re-join.
+    * re-join. A run that has not converged after `maxIters` rounds
+    * fails rather than return unconverged labels.
     */
   def dupClusters(pairs: DataFrame, maxIters: Int = 20,
       driverEdgeLimit: Long = 5000000L): DataFrame = {
-    val edgesRaw = pairs.select(col("doc_a").as("n"), col("doc_b").as("m"))
-      .union(pairs.select(col("doc_b").as("n"), col("doc_a").as("m")))
+    val linked = pairs.filter(col("doc_a").isNotNull && col("doc_b").isNotNull)
+    // A graph of at most `driverEdgeLimit` pairs fits comfortably on the
+    // driver (≤ ~80 MB of long pairs at the default). Same decision
+    // shape as AQE's broadcast conversion — the measured size, not the
+    // declared plan, picks the execution strategy.
+    val cap = math.min(math.max(driverEdgeLimit, 0L), Int.MaxValue - 1L).toInt + 1
+    val pairRows = linked.select(col("doc_a").cast("long"), col("doc_b").cast("long"))
+      .limit(cap).collect()
+    if (pairRows.length <= driverEdgeLimit) {
+      val parent = scala.collection.mutable.HashMap.empty[Long, Long]
+      def find(x: Long): Long = {
+        var r = x
+        while (parent(r) != r) r = parent(r)
+        var c = x // path compression
+        while (parent(c) != r) { val nx = parent(c); parent(c) = r; c = nx }
+        r
+      }
+      pairRows.foreach { row =>
+        val (a, b) = (row.getLong(0), row.getLong(1))
+        parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
+        val (ra, rb) = (find(a), find(b))
+        // union by min id: every root stays its component's minimum
+        if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+      }
+      val spark = pairs.sparkSession
+      import spark.implicits._
+      // Seq.toDF is a LocalRelation — the labels flow into downstream
+      // plans without a single job.
+      return parent.keys.toSeq.map { n => val r = find(n); (n, r, n == r) }
+        .toDF("doc_id", "cluster_id", "is_rep")
+    }
+    val edgesRaw = linked.select(col("doc_a").as("n"), col("doc_b").as("m"))
+      .union(linked.select(col("doc_b").as("n"), col("doc_a").as("m")))
       .distinct().cache()
     // The pair graph is tiny relative to the corpus (duplicates are the
     // exception); size the iterative stages to it, not to the corpus'
     // shuffle parallelism — locally that collapses each iteration to a
-    // single task, at scale it grows with the edge count. The measured
-    // edge count also picks the driver vs distributed path below.
+    // single task, at scale it grows with the edge count.
     val nEdges = edgesRaw.count()
-    // A graph under `driverEdgeLimit` edges fits comfortably on the
-    // driver (≤ ~80 MB of long pairs): union-find there is O(E α(E))
-    // with ONE collect and zero iterative jobs, versus O(log diameter)
-    // rounds of two shuffles plus a checkpoint each. Same decision
-    // shape as AQE's broadcast conversion — the measured size, not the
-    // declared plan, picks the execution strategy. Past the limit the
-    // distributed label-propagation path below takes over unchanged.
-    if (nEdges <= driverEdgeLimit) {
-      val spark = pairs.sparkSession
-      val edges = edgesRaw
-        .select(col("n").cast("long"), col("m").cast("long"))
-        .collect().map(r => (r.getLong(0), r.getLong(1)))
-      edgesRaw.unpersist(blocking = false)
-      val parent = scala.collection.mutable.Map.empty[Long, Long]
-      def find(x: Long): Long = {
-        var r = x
-        while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
-        var c = x // path compression
-        while (parent.getOrElse(c, c) != r) { val nx = parent(c); parent(c) = r; c = nx }
-        r
-      }
-      edges.foreach { case (a, b) =>
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) { // union by min id so labels converge to the component min
-          if (ra < rb) parent(rb) = ra else parent(ra) = rb
-        }
-        parent.getOrElseUpdate(a, find(a)); parent.getOrElseUpdate(b, find(b))
-      }
-      val nodes = edges.iterator.flatMap(e => Iterator(e._1, e._2)).toSeq.distinct
-      import spark.implicits._
-      // Seq.toDF is a LocalRelation — the labels flow into downstream
-      // plans without a single job.
-      return nodes.map(n => (n, find(n), n == find(n)))
-        .toDF("doc_id", "cluster_id", "is_rep")
-    }
     val parts = math.max(1, (nEdges / 500000L).toInt)
     // localCheckpoint (eager) truncates lineage each step — the
     // standard pattern for iterative algorithms; plain cache() would
@@ -821,8 +834,11 @@ object TextDedup {
     var labels = edges.select(col("n")).distinct()
       .withColumn("lab", col("n")).repartition(parts).localCheckpoint()
     var iter = 0
-    var done = false
-    while (!done && iter < maxIters) {
+    var changed = -1L
+    while (changed != 0L) {
+      if (iter == maxIters) throw new IllegalStateException(
+        s"dupClusters: label propagation did not converge in maxIters=$maxIters rounds" +
+          (if (iter > 0) s" ($changed labels changed in the last round)" else ""))
       val nbrMin = edges
         .join(labels.select(col("n").as("m"), col("lab").as("mlab")), "m")
         .groupBy("n").agg(min("mlab").as("nbr_lab"))
@@ -836,9 +852,8 @@ object TextDedup {
         .select(col("n"), col("old"),
           least(col("mid"), coalesce(col("jlab"), col("mid"))).as("lab"))
         .localCheckpoint()
-      val changed = next.filter(col("lab") =!= col("old")).count()
+      changed = next.filter(col("lab") =!= col("old")).count()
       labels = next.select("n", "lab")
-      done = changed == 0
       iter += 1
     }
     labels.select(col("n").as("doc_id"), col("lab").as("cluster_id"),

@@ -1,10 +1,26 @@
 package graft
 
+import org.apache.spark.scheduler.SparkListenerJobStart
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import graft.operators.{Similarity, TextDedup}
 
 /** Edge cases for the LLM-pipeline operators. */
 class TextDedupEdgeSpec extends SparkSpec {
+
+  private def jobsOf[A](f: => A): (A, Int) = {
+    val (out, ev) = withEvents(f)
+    (out, ev.count(_.isInstanceOf[SparkListenerJobStart]))
+  }
+
+  /** A frame whose optimized plan is a local relation: the driver paths
+    * of dupClusters and nearDuplicates return one. */
+  private def isLocal(df: DataFrame): Boolean =
+    df.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]
+
+  private def clusterSet(df: DataFrame): Set[(Long, Long, Boolean)] =
+    df.collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
 
   test("near-dup handles docs shorter than the shingle width") {
     import spark.implicits._
@@ -163,23 +179,79 @@ class TextDedupEdgeSpec extends SparkSpec {
     assert(run(Long.MaxValue) == run(0L))
   }
 
-  test("near-dup shuffle-join regime (broadcast gates closed) matches broadcast regime") {
+  test("dup clusters over a local pair frame fire no job and cache nothing") {
     import spark.implicits._
-    // Mixed corpus: identical-text cliques (exercises the expansion
-    // joins) plus genuine near-dups (exercises the Jaccard joins). With
-    // broadcastLimit=0 every measured broadcast gate closes, so the
-    // 100TB fallback — shuffle joins end to end — executes locally and
-    // must produce the identical answer.
+    val pairs = Seq((1L, 2L), (2L, 3L), (5L, 6L)).toDF("doc_a", "doc_b")
+    spark.catalog.clearCache()
+    val rdds = spark.sparkContext.getPersistentRDDs.keySet
+    val (out, jobs) = jobsOf(TextDedup.dupClusters(pairs))
+    assert(jobs == 0, s"dupClusters fired $jobs jobs over a local pair frame")
+    assert(spark.sharedState.cacheManager.isEmpty, "dupClusters registered a cache entry")
+    assert(spark.sparkContext.getPersistentRDDs.keySet == rdds)
+    assert(isLocal(out))
+    assert(clusterSet(out) == Set((1L, 1L, true), (2L, 1L, false), (3L, 1L, false),
+      (5L, 5L, true), (6L, 5L, false)))
+  }
+
+  test("dup clusters gate counts pair rows: at the row count driver, one below distributed") {
+    import spark.implicits._
+    // a mirrored pair counts twice: 5 pair rows, 4 distinct undirected edges
+    val pairs = Seq((1L, 2L), (2L, 1L), (2L, 3L), (7L, 3L), (10L, 11L))
+      .toDF("doc_a", "doc_b")
+    val (driver, driverJobs) = jobsOf(TextDedup.dupClusters(pairs, driverEdgeLimit = 5L))
+    assert(isLocal(driver) && driverJobs == 0, s"driver path fired $driverJobs jobs")
+    val (dist, distJobs) = jobsOf(TextDedup.dupClusters(pairs, driverEdgeLimit = 4L))
+    assert(!isLocal(dist) && distJobs > 0, "4 < 5 pair rows must take the distributed path")
+    assert(clusterSet(driver) == clusterSet(dist))
+    assert(clusterSet(driver) == Set((1L, 1L, true), (2L, 1L, false), (3L, 1L, false),
+      (7L, 1L, false), (10L, 10L, true), (11L, 10L, false)))
+  }
+
+  test("dup clusters drop pairs with a null endpoint on both paths") {
+    import spark.implicits._
+    val pairs = Seq[(Option[Long], Option[Long])](
+      (Some(1L), Some(2L)), (Some(2L), None), (None, Some(7L)), (None, None),
+      (Some(3L), Some(2L)), (Some(8L), Some(9L))).toDF("doc_a", "doc_b")
+    val driver = clusterSet(TextDedup.dupClusters(pairs))
+    val dist = clusterSet(TextDedup.dupClusters(pairs, driverEdgeLimit = 0L))
+    assert(driver == dist)
+    assert(driver == Set((1L, 1L, true), (2L, 1L, false), (3L, 1L, false),
+      (8L, 8L, true), (9L, 8L, false)))
+  }
+
+  test("distributed label propagation fails instead of returning unconverged labels") {
+    val chain = spark.range(0L, 63L).selectExpr("id AS doc_a", "id + 1 AS doc_b")
+    val e = intercept[IllegalStateException](
+      TextDedup.dupClusters(chain, maxIters = 1, driverEdgeLimit = 0L))
+    assert(e.getMessage.contains("maxIters=1"), e.getMessage)
+    assert(e.getMessage.matches(".*\\(\\d+ labels changed in the last round\\).*"),
+      e.getMessage)
+    val out = TextDedup.dupClusters(chain, driverEdgeLimit = 0L)
+    assert(out.count() == 64L && out.filter(col("cluster_id") =!= 0L).count() == 0)
+  }
+
+  /** Mixed corpus: identical-text cliques {1, 3} and {10..14} (they
+    * exercise the expansion), a genuine near-dup 1–2 (the Jaccard
+    * verify) and a singleton 20. */
+  private def mixedDocs: DataFrame = {
+    import spark.implicits._
     val base = (1 to 30).map(i => s"w$i").mkString(" ")
-    val docs = (
-      Seq((1L, base), (2L, base + " extra"), (3L, base)) ++      // near-dup + clique
+    (Seq((1L, base), (2L, base + " extra"), (3L, base)) ++      // near-dup + clique
       (10L to 14L).map(i => (i, "dup dup " + (1 to 20).map(j => s"d$j").mkString(" "))) ++
       Seq((20L, (40 to 70).map(i => s"z$i").mkString(" ")))      // singleton
     ).toDF("doc_id", "text")
-    def run(limit: Long) = TextDedup.nearDuplicates(
-        docs, "doc_id", "text", threshold = 0.5, broadcastLimit = limit)
-      .collect().map(r => (r.getLong(0), r.getLong(1),
-        math.round(r.getDouble(2) * 1e9))).toSet
+  }
+
+  private def pairSet(df: DataFrame): Set[(Long, Long, Long)] =
+    df.collect().map(r => (r.getLong(0), r.getLong(1),
+      math.round(r.getDouble(2) * 1e9))).toSet
+
+  test("near-dup shuffle-join regime (broadcast gates closed) matches broadcast regime") {
+    // With broadcastLimit=0 every measured broadcast gate closes, so the
+    // 100TB fallback — shuffle joins end to end — executes locally and
+    // must produce the identical answer.
+    def run(limit: Long) = pairSet(TextDedup.nearDuplicates(
+      mixedDocs, "doc_id", "text", threshold = 0.5, broadcastLimit = limit))
     val broadcastRegime = run(Long.MaxValue)
     val shuffleRegime = run(0L)
     assert(broadcastRegime.nonEmpty)
@@ -188,6 +260,43 @@ class TextDedupEdgeSpec extends SparkSpec {
     // (limit 1 truncates the member collect): the mid regime — fused
     // verify, distributed expansion joins — must agree too
     assert(run(1L) == broadcastRegime)
+  }
+
+  test("near-dup driver expansion is taken iff clique members + rep pairs <= broadcastLimit") {
+    val docs = mixedDocs
+    val want = pairSet(TextDedup.nearDuplicates(docs, "doc_id", "text", threshold = 0.5))
+    // the rule's inputs, counted without the operator: docs in
+    // non-trivial identical-text cliques, and verified pairs of reps
+    val cliques = docs.groupBy(md5(col("text")))
+      .agg(min("doc_id").as("rep"), count(lit(1)).as("n")).collect()
+    val members = cliques.filter(_.getLong(2) > 1).map(_.getLong(2)).sum
+    val reps = cliques.map(_.getLong(1)).toSet
+    val repPairs = want.count { case (a, b, _) => reps(a) && reps(b) }.toLong
+    assert(members == 7L && repPairs == 1L)
+    // the rule before the count was folded into the probe: count the
+    // rep pairs, then probe the members with the budget left
+    def countedRule(limit: Long) =
+      repPairs <= limit && members < limit + 1 - repPairs
+    val total = members + repPairs
+    for (limit <- Seq(total - 1, total, total + 1)) {
+      val out = TextDedup.nearDuplicates(docs, "doc_id", "text",
+        threshold = 0.5, broadcastLimit = limit)
+      assert(isLocal(out) == countedRule(limit), s"broadcastLimit $limit")
+      assert(isLocal(out) == (limit >= total), s"broadcastLimit $limit")
+      assert(pairSet(out) == want, s"broadcastLimit $limit")
+    }
+  }
+
+  test("q_dup_clusters builds within its job budget on the sf0.001 tables") {
+    // Jobs fired while the query's DataFrame is built, before any action,
+    // from a clear cache: the table read's schema job plus nearDuplicates'
+    // one probe collect (its stages run as separate jobs under AQE).
+    // dupClusters adds none. Before the probe absorbed the pair count and
+    // dupClusters' cache + count + collect became one bounded collect of
+    // a local frame, this build fired 14 jobs.
+    spark.catalog.clearCache()
+    val (_, jobs) = jobsOf(SparkEntry.queries("q_dup_clusters")(spark, sfDir))
+    assert(jobs <= 9, s"q_dup_clusters fired $jobs jobs while building")
   }
 
   test("distributed label propagation clusters a 50k-node chain graph") {
