@@ -103,24 +103,27 @@ object TextDedup {
           .as("text_clean"))
   }
 
+  /** Repartitions a source read from fewer files than the session's
+    * default parallelism to that parallelism. A corpus read from few
+    * splits (one small file locally) would run a per-document kernel
+    * chain near-serially. The file count comes from scan metadata (no
+    * RDD conversion, which would force an early physical plan);
+    * non-file sources (pins, local relations) report no files and are
+    * left alone. With a well-split source (the 100 TB case) this is a
+    * no-op. */
+  private[graft] def spreadSmallSource(df: DataFrame): DataFrame = {
+    val par = df.sparkSession.sparkContext.defaultParallelism
+    val nFiles = df.inputFiles.length
+    if (nFiles > 0 && nFiles < par) df.repartition(par) else df
+  }
+
   /** Word n-gram shingles: (id, sh); `distinct = false` keeps the raw
     * stream (no shuffle) for consumers where duplicates are harmless.
     * `spread = false` skips the small-source fan-out for inputs that are
     * already shuffle-distributed. */
   def shingles(docs: DataFrame, idCol: String, textCol: String, n: Int,
       distinct: Boolean = true, spread: Boolean = true): DataFrame = {
-    // A corpus read from few splits (one small file locally) would run
-    // the explode + hashing chain near-serially; spread it first. The
-    // file count comes from scan metadata (no RDD conversion, which
-    // would force an early physical plan); non-file sources report no
-    // files and are left alone. With a well-split source (the 100 TB
-    // case) this is a no-op.
-    val spark = docs.sparkSession
-    val nFiles = docs.inputFiles.length
-    val src =
-      if (spread && nFiles > 0 && nFiles < spark.sparkContext.defaultParallelism)
-        docs.repartition(spark.sparkContext.defaultParallelism)
-      else docs
+    val src = if (spread) spreadSmallSource(docs) else docs
     // The split array goes through a projection of its own so the
     // transform lambda below consumes a bound ATTRIBUTE. Higher-order
     // functions are interpreted (no whole-stage codegen, no
@@ -954,10 +957,14 @@ object TextDedup {
     * found at every alignment, so maximal duplicated regions are
     * covered end-to-end without a suffix array. The price is a
     * windows-per-word stream; the window STRING is dropped in the same
-    * projection that hashes it, so only (id, start, 32-hex md5) rows
+    * projection that hashes it, so only (id, start, 16-byte md5) rows
     * ever shuffle. A 100 TB run pays one window-hash count shuffle
     * (key space = distinct windows), one join back, and one doc-keyed
     * rebuild — the same shape DuckDB replays in the oracle.
+    *
+    * This is the one-level case of [[purgeDuplicateSubstringsMulti]]
+    * (level (windowWords, 2)), so `windowWords < 1` fails its
+    * `require`.
     *
     * Output: (doc_id, n_words, n_removed, text_clean), one row per
     * input document (documents shorter than the window pass through
@@ -968,30 +975,9 @@ object TextDedup {
       idCol: String,
       textCol: String,
       windowWords: Int = 8,
-      keepFirst: Boolean = true): DataFrame = {
-    val w = windowWords
-    // Small-source spread, same rationale as [[shingles]]: a one-file
-    // corpus would run the kernel near-serially.
-    val spark = docs.sparkSession
-    val nFiles = docs.inputFiles.length
-    val src =
-      if (nFiles > 0 && nFiles < spark.sparkContext.defaultParallelism)
-        docs.repartition(spark.sparkContext.defaultParallelism)
-      else docs
-    // (id, w, start, h): full md5 of each stride-1 w-word window from
-    // ONE native kernel call per document (an interpreted transform()
-    // lambda re-concatenates and re-hashes per element at ~2× the cost,
-    // and the stream is consumed twice); the window text itself never
-    // leaves the kernel. BINARY digests (ShingleMd5Bins): identical
-    // collision-freeness at half the key bytes on the two exchanges
-    // keyed by __h (hex↔binary is a bijection; the oracle compares
-    // rebuilt text, never this internal key).
-    val wins = src
-      .select(col(idCol), lit(w).as("w"),
-        posexplode(graft.functions.ShingleMd5Bins(col(textCol), w))
-          .as(Seq("start", "__h")))
-    purgeFromWindows(docs, idCol, textCol, wins, keepFirst, _ => lit(2L))
-  }
+      keepFirst: Boolean = true): DataFrame =
+    purgeDuplicateSubstringsMulti(docs, idCol, textCol,
+      Seq((windowWords, 2L)), keepFirst)
 
   /** Multi-length variant of [[purgeDuplicateSubstrings]] (the Lee et
     * al. 2022 pipeline sweeps substring lengths): duplicated runs are
@@ -1023,17 +1009,16 @@ object TextDedup {
       windows.forall { case (w, mc) => w >= 1 && mc >= 2 } &&
       windows.map(_._1).distinct.size == windows.size,
       s"windows must be distinct (length >= 1, minCount >= 2) levels: $windows")
-    val spark = docs.sparkSession
-    val nFiles = docs.inputFiles.length
-    val src =
-      if (nFiles > 0 && nFiles < spark.sparkContext.defaultParallelism)
-        docs.repartition(spark.sparkContext.defaultParallelism)
-      else docs
-    // one kernel call per (doc, level), tagged (w, start, h) row-
-    // locally and flattened into a single window stream — one scan,
-    // one Generate; binary digests (see purgeDuplicateSubstrings). The
-    // level's support threshold stays OUT of the stream (mcFor builds
-    // it back from `w` as a literal CASE at filter time).
+    val src = spreadSmallSource(docs)
+    // One native kernel call per (doc, level) hashes every stride-1
+    // window (the window text never leaves the kernel), tagged
+    // (w, start, h) row-locally and flattened into a single window
+    // stream — one scan, one Generate. BINARY md5 digests
+    // (ShingleMd5Bins): identical collision-freeness at half the key
+    // bytes on the exchanges keyed by __h (the oracle compares rebuilt
+    // text, never this internal key). The level's support threshold
+    // stays OUT of the stream (mcFor builds it back from `w` as a
+    // literal CASE at filter time).
     val levels = array(windows.map { case (w, _) =>
       transform(graft.functions.ShingleMd5Bins(col(textCol), w),
         (h, i) => struct(lit(w).as("w"), i.as("start"), h.as("__h")))
@@ -1288,12 +1273,7 @@ object TextDedup {
   def purgeAgainstIndex(newDocs: DataFrame, winIndex: DataFrame,
       idCol: String, textCol: String, windowWords: Int = 4): DataFrame = {
     val w = windowWords
-    val spark = newDocs.sparkSession
-    val nFiles = newDocs.inputFiles.length
-    val src =
-      if (nFiles > 0 && nFiles < spark.sparkContext.defaultParallelism)
-        newDocs.repartition(spark.sparkContext.defaultParallelism)
-      else newDocs
+    val src = spreadSmallSource(newDocs)
     val removed = src
       .select(col(idCol), lit(w).as("w"),
         posexplode(graft.functions.ShingleMd5Bins(col(textCol), w))
@@ -1318,12 +1298,7 @@ object TextDedup {
   def dupGramFraction(docs: DataFrame, idCol: String, textCol: String,
       n: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val spark = docs.sparkSession
-    val nFiles = docs.inputFiles.length
-    val src =
-      if (nFiles > 0 && nFiles < spark.sparkContext.defaultParallelism)
-        docs.repartition(spark.sparkContext.defaultParallelism)
-      else docs
+    val src = spreadSmallSource(docs)
     // 60-bit md5-prefix fold (ShingleHashes hexLen=15), not the 32-hex
     // string: 8-byte shuffle keys; an external replay computes the same
     // fold, so the (vanishingly rare) collisions agree on both sides.
@@ -1431,12 +1406,7 @@ object TextDedup {
     // r17 funnel paid ~0.3 s of single-task digest time per winnow pass
     // for it. No-op on a well-split source (the 100 TB case) and on
     // non-file inputs (pinned stages spread before their pin instead).
-    val spark = docs.sparkSession
-    val nFiles = docs.inputFiles.length
-    val src =
-      if (nFiles > 0 && nFiles < spark.sparkContext.defaultParallelism)
-        docs.repartition(spark.sparkContext.defaultParallelism)
-      else docs
+    val src = spreadSmallSource(docs)
     // One fused kernel call per row (graft.functions.WinnowFps): shingle
     // hashing, deque sliding minima and the distinct all run in one
     // codegen'd O(words) pass — the r17 HOF formulation
@@ -1723,6 +1693,138 @@ object TextDedup {
     conv(substring(md5(concat(id.cast("string"), lit("|"), text)), 1, 15),
       16, 10).cast("long")
 
+  // ---- hygiene funnel: the stages its three forms share -------------
+
+  /** Report stages of [[hygieneFunnel]] and [[hygieneFunnelStaged]]. */
+  private val FunnelStages = Seq("s0_raw", "s1_exact", "s2_neardup",
+    "s3_purged", "s4_domain_capped")
+
+  /** Ids that lose their exact-hash group to a smaller id, from `eh`'s
+    * (idCol, __eh) rows. Only the bounded (hash → keep id) aggregate
+    * shuffles (min/count decompose into O(1) partials — a billion-copy
+    * cloud aggregates map-side), and callers anti-join this DROP set,
+    * NOT the keep set: its size is n_docs − n_distinct_texts — empty on
+    * a mostly-unique corpus, so the anti join broadcasts and the text
+    * column never rides a dedup shuffle in the common case (a keep-set
+    * semi join would be ~n_docs ids and force a full-corpus text
+    * exchange exactly when there is nothing to dedup). */
+  private def exactDropIds(eh: DataFrame, idCol: String): DataFrame = {
+    val dupKeeps = eh.groupBy(col("__eh"))
+      .agg(min(col(idCol)).as("__keepId"), count(lit(1)).as("__n"))
+      .filter(col("__n") > 1)
+      .select(col("__eh"), col("__keepId"))
+    eh.join(dupKeeps, Seq("__eh"))
+      .filter(col(idCol) =!= col("__keepId"))
+      .select(col(idCol))
+  }
+
+  /** Report leg: each row of `d` is one doc of `stage`. */
+  private def pinLeg(stage: String, d: DataFrame, tok: Column,
+      th: Column = col("__th")): DataFrame =
+    d.select(lit(stage).as("stage"), lit(1L).as("__n"),
+      tok.cast("long").as("__tok"), th.as("__th"))
+
+  /** Report leg over pinned (__tok, __th) facts: each row of `d` adds
+    * `sign` docs (and sign·__tok tokens) to every stage in `stages`. */
+  private def factLeg(stages: Seq[String], d: DataFrame,
+      sign: Long): DataFrame =
+    d.select(explode(array(stages.map(lit): _*)).as("stage"),
+      lit(sign).as("__n"),
+      if (sign < 0) (-col("__tok")).as("__tok") else col("__tok"),
+      col("__th"))
+
+  /** Subtracts the facts of `base`'s rows dropped by `drop` (an id list)
+    * from `stages`: counts and token sums subtract, and bit_xor cancels
+    * a dropped row exactly because its 60-bit hash then appears an even
+    * number of times. */
+  private def negLeg(stages: Seq[String], base: DataFrame, drop: DataFrame,
+      idCol: String): DataFrame =
+    factLeg(stages, base.join(drop, Seq(idCol), "left_semi"), -1L)
+
+  /** The stage report: ONE aggregate over the tagged union of per-row
+    * legs (stage, __n, __tok, __th). Literal zero legs ride the same
+    * aggregate so an empty corpus still reports every stage (n_docs 0,
+    * sums null — the global-aggregate convention) without a spine
+    * join; the final sort runs inside the single output partition (a
+    * few-row orderBy would schedule a range-sampling job). */
+  private def funnelReport(stages: Seq[String], legs: Seq[DataFrame]): DataFrame = {
+    val spark = legs.head.sparkSession
+    import spark.implicits._
+    val zeroLegs = stages.toDF("stage")
+      .select(col("stage"), lit(0L).as("__n"),
+        lit(null).cast("long").as("__tok"), lit(null).cast("long").as("__th"))
+    (legs :+ zeroLegs).reduce(_ unionByName _).groupBy(col("stage"))
+      .agg(sum(col("__n")).as("n_docs"), sum(col("__tok")).as("n_tokens"),
+        expr("bit_xor(__th)").as("text_h"))
+      .coalesce(1).sortWithinPartitions("stage")
+  }
+
+  /** Entry of the pinned funnels: spreads a few-split source (the stage
+    * pins inherit its partitioning — a broadcast anti-join preserves its
+    * stream side's partitions — so a one-file corpus would otherwise pin
+    * as ONE partition and run every later kernel pass single-task), pins
+    * the per-row facts (id, __eh, __tok, __th) of ONE raw-text pass — md5
+    * and split run once, every report leg reads pinned longs; the exact
+    * hash is the 16-byte BINARY md5, the oracle's hex grouping at half
+    * the shuffle bytes — and pins the exact-dedup drop set (it feeds the
+    * anti join and a report leg) and survivors. Returns (facts,
+    * survivors, the report legs of `stages` = raw, exact, and the stage
+    * after exact, which later drops subtract from). */
+  private def pinnedHead(docs0: DataFrame, idCol: String, sourceCol: String,
+      textCol: String, stages: Seq[String]): (DataFrame, DataFrame, Seq[DataFrame]) = {
+    val docs = spreadSmallSource(docs0)
+      .select(col(idCol), col(sourceCol), col(textCol))
+    val rows0 = docs.select(col(idCol), unhex(md5(col(textCol))).as("__eh"),
+        size(split(col(textCol), " ")).cast("long").as("__tok"),
+        contentHash60(col(idCol), col(textCol)).as("__th"))
+      .localCheckpoint(false)
+    val dropIds = exactDropIds(rows0, idCol).localCheckpoint(false)
+    val s1 = docs.join(dropIds, Seq(idCol), "left_anti").localCheckpoint(false)
+    (rows0, s1, Seq(factLeg(stages, rows0, 1L),
+      negLeg(stages.tail, rows0, dropIds, idCol)))
+  }
+
+  /** Within-batch tail of the pinned funnels over `s` (id, source, text,
+    * …): capped winnow near-dup drop → multi-length substring purge of
+    * the `purgeCols` projection → per-domain cap on the post-purge token
+    * count. Returns the report legs of `stages` (near-dup, purged,
+    * capped); the near-dup leg subtracts the winnow drops from
+    * `nearBase`'s pinned facts. `purgeCols` is each caller's own purge
+    * input: the purge picks its simple or gated shape from that input's
+    * estimated bytes. The drop ids are pinned (a tiny id list
+    * feeding the anti join AND the report leg — unpinned, the report
+    * would re-run the winnow posting shuffle); the purge pin keeps only
+    * (nt, content hash) of the rebuilt text, so it holds four longs plus
+    * source per row instead of a second text copy; the bounded top-k
+    * carries __th as a payload column (same (score desc, id) order as
+    * TextExtract.capPerDomain, minus the join-back). */
+  private def pinnedTail(s: DataFrame, nearBase: DataFrame,
+      stages: Seq[String], purgeCols: Seq[String], idCol: String,
+      sourceCol: String, textCol: String, k: Int, w: Int, minShared: Long,
+      maxPostings: Long, windows: Seq[(Int, Long)],
+      domainCap: Int): Seq[DataFrame] = {
+    val dropB = winnowOverlap(s.select(col(idCol), col(sourceCol),
+        col(textCol)), idCol, textCol,
+        k = k, w = w, minShared = minShared, maxPostings = maxPostings)
+      .select(col("doc_b").as(idCol)).distinct()
+      .localCheckpoint(false)
+    val near = s.join(dropB, Seq(idCol), "left_anti").localCheckpoint(false)
+    val purged = purgeDuplicateSubstringsMulti(
+        near.select(purgeCols.map(col): _*), idCol, textCol,
+        windows = windows, keepFirst = true)
+      .select(col(idCol), (col("n_words") - col("n_removed")).as("nt"),
+        contentHash60(col(idCol), col("text_clean")).as("__th"))
+      .join(near.select(col(idCol), col(sourceCol)), Seq(idCol))
+      .localCheckpoint(false)
+    val capped = Similarity.topKPerQuery(
+      purged.select(col(sourceCol), col(idCol), col("nt"), col("__th")),
+      domainCap, "nt", scoreDesc = true, idCol = idCol,
+      queryCol = sourceCol, payloadCols = Seq("__th"))
+    Seq(negLeg(stages.take(1), nearBase, dropB, idCol),
+      pinLeg(stages(1), purged, col("nt")),
+      pinLeg(stages(2), capped, col("nt")))
+  }
+
   /** Composed training-data hygiene funnel — the production entry point
     * for the flagship pipeline: exact-dup drop (keep-first on the
     * content hash — the cheapest stage, run FIRST so every later stage
@@ -1737,332 +1839,120 @@ object TextDedup {
     * ordered by stage — `text_h` is an order-independent 60-bit content
     * XOR of each stage's surviving (id, text), so the report pins the
     * REBUILT TEXT of the purge stages, not just their token counts.
+    * Token counts split the stage's text, except purge stages, which
+    * report n_words − n_removed of their purge.
     *
     * Stage boundaries are PINNED (localCheckpoint): each stage feeds
     * both the next stage's multi-pass operator and its own report row —
     * unpinned, the winnow join re-runs per consumer (15 corpus scans vs
     * ≤4 pinned, plan-audited in PlanAuditSpec). At 100 TB these pins
     * ARE the inter-stage parquet writes a production funnel does
-    * anyway (each stage's survivors are a checkpoint you can audit,
-    * resume from, or feed to several consumers); localCheckpoint is the
-    * local-mode analogue, and [[hygieneFunnelStaged]] is the LITERAL
-    * form — stage survivors as catalog tables with resume-from-last-
-    * completed-stage (StagedFunnelSpec pins the two bit-equal). Every
-    * stage is individually oracle-checked (q_winnow_overlap_capped,
-    * q_substring_dedup_multi, q_domain_cap) and the composition by
-    * q_hygiene_funnel. */
+    * anyway; localCheckpoint is the local-mode analogue, and
+    * [[hygieneFunnelStaged]] is the LITERAL form (StagedFunnelSpec pins
+    * the two bit-equal). Release via [[graft.Pins]].
+    *
+    * The 5-row report is ONE aggregate over a tagged union of per-row
+    * facts (no leg touches text or a file scan: the final job reads
+    * pinned longs): every raw row contributes to s0/s1/s2 in one scan
+    * of the fact pin, and the s1/s2 rows are corrected by tiny NEGATIVE
+    * legs over the dropped ids (XOR algebra — empty, and free, on a
+    * clean corpus). Every stage is individually oracle-checked
+    * (q_winnow_overlap_capped, q_substring_dedup_multi, q_domain_cap)
+    * and the composition by q_hygiene_funnel. */
   def hygieneFunnel(docs0: DataFrame, idCol: String, sourceCol: String,
       textCol: String, k: Int = 3, w: Int = 4, minShared: Long = 3L,
       maxPostings: Long = 3L,
       windows: Seq[(Int, Long)] = Seq((4, 5L), (8, 2L)),
       domainCap: Int = 15): DataFrame = {
-    // Spread a few-split source ONCE at funnel entry: the stage pins
-    // inherit this partitioning (a broadcast anti-join preserves its
-    // stream side's partitions), so every downstream kernel pass runs
-    // parallel. Without it a one-file corpus pins s1 as ONE partition
-    // and the multi-length purge's whole digest pass runs on a single
-    // task (the r17 in-funnel purge measured ~2x its standalone cost
-    // for exactly this). No-op on a well-split source.
-    val spark = docs0.sparkSession
-    val nFiles = docs0.inputFiles.length
-    val docs0s =
-      if (nFiles > 0 && nFiles < spark.sparkContext.defaultParallelism)
-        docs0.repartition(spark.sparkContext.defaultParallelism)
-      else docs0
-    val docs = docs0s.select(col(idCol), col(sourceCol), col(textCol))
-    val splitTok = size(split(col(textCol), " ")).cast("long")
-    // ONE raw-text pass computes every per-row fact the exact stage
-    // and the report need — (exact hash, token count, 60-bit content
-    // hash) — and pins it, so md5/split run once over the corpus
-    // instead of once per report leg (the r18 shape re-hashed the full
-    // text in the s0/s1/s2 legs: three extra corpus-wide digest passes
-    // inside the final job). The exact hash is the 16-byte BINARY md5
-    // (same grouping as the oracle's hex md5 at half the shuffle
-    // bytes).
-    val rows0 = docs.select(col(idCol), unhex(md5(col(textCol))).as("__eh"),
-        splitTok.as("__tok"),
-        contentHash60(col(idCol), col(textCol)).as("__th"))
-      .localCheckpoint(false)
-    // s1: exact dedup keep-first over the pinned facts. Only the
-    // bounded (hash → keep id) aggregate shuffles (min/count decompose
-    // into O(1) partials — a billion-copy cloud aggregates map-side),
-    // and docs anti-join the DROP set (ids that lost their hash
-    // group), NOT the keep set: the drop set's size is n_docs −
-    // n_distinct_texts — empty on a mostly-unique corpus, so the anti
-    // join broadcasts and the text column never rides a dedup shuffle
-    // in the common case (a keep-set semi join would be ~n_docs ids
-    // and force a full-corpus text exchange exactly when there is
-    // nothing to dedup). The drop set is pinned: it feeds both the
-    // anti join and the s1 report leg's subtraction.
-    val dupKeeps = rows0.groupBy(col("__eh"))
-      .agg(min(col(idCol)).as("__keepId"), count(lit(1)).as("__n"))
-      .filter(col("__n") > 1)
-      .select(col("__eh"), col("__keepId"))
-    val dropIds = rows0.join(dupKeeps, Seq("__eh"))
-      .filter(col(idCol) =!= col("__keepId"))
-      .select(col(idCol))
-      .localCheckpoint(false)
-    val s1 = docs.join(dropIds, Seq(idCol), "left_anti")
-      .localCheckpoint(false)
-    val pairs = winnowOverlap(s1, idCol, textCol,
-      k = k, w = w, minShared = minShared, maxPostings = maxPostings)
-    // dropB is pinned (an id list — tiny) because it feeds BOTH the s2
-    // anti join and the s2 report leg; unpinned, the report leg would
-    // re-run the whole winnow posting shuffle inside the final job.
-    val dropB = pairs.select(col("doc_b").as(idCol)).distinct()
-      .localCheckpoint(false)
-    val s2 = s1
-      .join(dropB, Seq(idCol), "left_anti")
-      .localCheckpoint(false)
-    val purged = purgeDuplicateSubstringsMulti(s2,
-      idCol, textCol, windows = windows, keepFirst = true)
-    // The report needs only (nt, content hash) of the purge stage —
-    // hash the rebuilt text at pin time and DROP it, so the pin
-    // materializes four longs + source per row instead of a second
-    // full-text copy (a production funnel writes the survivor text as
-    // the s3 stage table — see the staged form — but the report query
-    // does not).
-    val s3 = purged
-      .select(col(idCol), (col("n_words") - col("n_removed")).as("nt"),
-        contentHash60(col(idCol), col("text_clean")).as("__th"))
-      .join(s2.select(col(idCol), col(sourceCol)), Seq(idCol))
-      .localCheckpoint(false)
-    // Domain cap directly via the bounded top-k with the content hash
-    // riding as a PAYLOAD column — same (score desc, id) order as
-    // TextExtract.capPerDomain, minus the join-back to recover __th.
-    val s4 = Similarity.topKPerQuery(
-      s3.select(col(sourceCol), col(idCol), col("nt"), col("__th")),
-      domainCap, "nt", scoreDesc = true, idCol = idCol,
-      queryCol = sourceCol, payloadCols = Seq("__th"))
-    // The whole 5-row report is ONE aggregate over a tagged union of
-    // per-row facts (the r18 shape ran five independent single-
-    // partition aggregates — five exchanges and three full text
-    // re-hashes for a 5-row result). Every surviving raw-text row
-    // contributes to s0/s1/s2 in ONE scan of the fact pin (explode of
-    // a 3-tag literal array), and the s1/s2 rows are corrected by
-    // tiny NEGATIVE legs over the dropped ids — the XOR algebra the
-    // content hash was chosen for: counts and token sums subtract,
-    // and bit_xor cancels a dropped row exactly because its 60-bit
-    // hash then appears an even number of times. Both drop sets are
-    // empty on a clean corpus, so the negative legs cost nothing. No
-    // leg touches text or a file scan: the final job reads pinned
-    // longs.
-    def negLeg(names: Seq[String], drop: DataFrame): DataFrame =
-      rows0.join(drop, Seq(idCol), "left_semi")
-        .select(explode(array(names.map(lit): _*)).as("stage"),
-          lit(-1L).as("__n"), (-col("__tok")).as("__tok"), col("__th"))
-    def pinLeg(name: String, d: DataFrame, tok: Column): DataFrame =
-      d.select(lit(name).as("stage"), lit(1L).as("__n"),
-        tok.cast("long").as("__tok"), col("__th"))
-    val tagged = rows0
-      .select(explode(array(lit("s0_raw"), lit("s1_exact"),
-          lit("s2_neardup"))).as("stage"),
-        lit(1L).as("__n"), col("__tok"), col("__th"))
-      .unionByName(negLeg(Seq("s1_exact", "s2_neardup"), dropIds))
-      .unionByName(negLeg(Seq("s2_neardup"), dropB))
-      .unionByName(pinLeg("s3_purged", s3, col("nt")))
-      .unionByName(pinLeg("s4_domain_capped", s4, col("nt")))
-    // Literal zero legs ride the same aggregate so an empty corpus
-    // still reports all five stages (n_docs 0, sums null — the
-    // global-aggregate convention the r18 shape had for free) without
-    // a spine join; the final sort runs inside the single output
-    // partition (a 5-row orderBy would schedule a range-sampling job).
-    import spark.implicits._
-    val zeroLegs = Seq("s0_raw", "s1_exact", "s2_neardup", "s3_purged",
-        "s4_domain_capped").toDF("stage")
-      .select(col("stage"), lit(0L).as("__n"),
-        lit(null).cast("long").as("__tok"), lit(null).cast("long").as("__th"))
-    tagged.unionByName(zeroLegs).groupBy(col("stage"))
-      .agg(sum(col("__n")).as("n_docs"), sum(col("__tok")).as("n_tokens"),
-        expr("bit_xor(__th)").as("text_h"))
-      .coalesce(1).sortWithinPartitions("stage")
+    val (rows0, s1, headLegs) = pinnedHead(docs0, idCol, sourceCol, textCol,
+      FunnelStages.take(3))
+    funnelReport(FunnelStages, headLegs ++ pinnedTail(s1, rows0,
+      FunnelStages.drop(2), Seq(idCol, sourceCol, textCol), idCol,
+      sourceCol, textCol, k, w, minShared, maxPostings, windows, domainCap))
   }
 
   /** Snapshot-N+1 form of [[hygieneFunnel]] — the composed incremental
-    * refresh: a NEW batch is first cleaned AGAINST the stored corpus
-    * indexes (cross-snapshot near-dup drop via [[winnowAgainstIndex]],
-    * then cross-snapshot substring purge via [[purgeAgainstIndex]]),
-    * and the survivors run the standard within-batch funnel (capped
-    * winnow drop → multi-length purge → per-domain cap). Every
-    * index-side join is ASYMMETRIC (batch × stored index, never
-    * index × index), so per-refresh cost tracks the batch, not the
-    * corpus — the 100 TB daily-refresh shape: the fp / window-hash
-    * indexes are stable bucketed tables; only the batch side moves.
+    * refresh: after the within-batch exact-dup drop, a NEW batch is
+    * cleaned AGAINST the stored corpus indexes (cross-snapshot near-dup
+    * drop via [[winnowAgainstIndex]], then cross-snapshot substring
+    * purge via [[purgeAgainstIndex]]), and the survivors run
+    * [[hygieneFunnel]]'s within-batch tail. Every index-side join is
+    * ASYMMETRIC (batch × stored index, never index × index), so
+    * per-refresh cost tracks the batch, not the corpus — the 100 TB
+    * daily-refresh shape: the fp / window-hash indexes are stable
+    * bucketed tables; only the batch side moves.
     *
     * Returns the seven-row stage report (stage, n_docs, n_tokens,
     * text_h): s0_batch_raw / s1_exact / s2_idx_neardup / s3_idx_purged /
-    * s4_neardup / s5_purged / s6_domain_capped, ordered by stage — the
-    * within-batch exact-dup drop leads (cheapest stage first, exactly
-    * as in [[hygieneFunnel]]), then the two cross-snapshot index
-    * stages, then the standard within-batch tail. Token counts follow
-    * [[hygieneFunnel]]'s convention: purge stages report n_words −
-    * n_removed of that stage's purge; the others split the stage's
-    * (possibly rebuilt) text; `text_h` is the order-independent 60-bit
-    * content XOR of each stage's surviving (id, text). With EMPTY
-    * indexes the report's within-batch stages equal
-    * `hygieneFunnel(batch)` row for row (TextDedupEdgeSpec pins that
-    * differential).
-    *
-    * Stage boundaries are pinned (localCheckpoint) exactly like the
-    * full funnel — each feeds both the next multi-pass operator and
-    * its report row; release via [[graft.Pins]]. */
+    * s4_neardup / s5_purged / s6_domain_capped, ordered by stage, with
+    * [[hygieneFunnel]]'s token, content-hash, pinning and report
+    * conventions. With EMPTY indexes the report's within-batch stages
+    * equal `hygieneFunnel(batch)` row for row (TextDedupEdgeSpec pins
+    * that differential). */
   def hygieneFunnelAgainstIndex(batch0: DataFrame, fpIndex: DataFrame,
       winIndex: DataFrame, idCol: String, sourceCol: String,
       textCol: String, k: Int = 3, w: Int = 4, minShared: Long = 3L,
       maxPostings: Long = 3L, indexWindowWords: Int = 4,
       windows: Seq[(Int, Long)] = Seq((4, 5L), (8, 2L)),
       domainCap: Int = 15): DataFrame = {
-    // Same entry spread as [[hygieneFunnel]]: the stage pins inherit
-    // the batch's partitioning, so a one-file batch must be spread
-    // here or every downstream kernel pass runs single-task.
-    val spark = batch0.sparkSession
-    val nFiles = batch0.inputFiles.length
-    val batch0s =
-      if (nFiles > 0 && nFiles < spark.sparkContext.defaultParallelism)
-        batch0.repartition(spark.sparkContext.defaultParallelism)
-      else batch0
-    val batch = batch0s.select(col(idCol), col(sourceCol), col(textCol))
-    val splitTok = size(split(col(textCol), " ")).cast("long")
-    // One raw-text pass pins the per-row facts (binary exact hash,
-    // token count, content hash) — the [[hygieneFunnel]] discipline:
-    // md5 and split run once, every report leg reads pinned longs.
-    val rows0 = batch.select(col(idCol), unhex(md5(col(textCol))).as("__eh"),
-        splitTok.as("__tok"),
-        contentHash60(col(idCol), col(textCol)).as("__th"))
-      .localCheckpoint(false)
-    // s1: within-batch exact dedup keep-first — the cheapest stage,
-    // led with so both index joins and every later stage shrink. One
-    // groupBy(hash) shuffle of O(1)-state partials carries the exact-
-    // dup keep ids AND the s0/s1 report facts (group totals / keep
-    // row's facts); the batch anti-joins the DROP set — empty on a
-    // unique batch, so no text ever rides a dedup shuffle in the
-    // common case.
-    val dupKeeps = rows0.groupBy(col("__eh"))
-      .agg(min(col(idCol)).as("__keepId"), count(lit(1)).as("__n"))
-      .filter(col("__n") > 1)
-      .select(col("__eh"), col("__keepId"))
-    val dropIds = rows0.join(dupKeeps, Seq("__eh"))
-      .filter(col(idCol) =!= col("__keepId"))
-      .select(col(idCol))
-      .localCheckpoint(false)
-    val s1 = batch.join(dropIds, Seq(idCol), "left_anti")
-      .localCheckpoint(false)
+    val stages = Seq("s0_batch_raw", "s1_exact", "s2_idx_neardup",
+      "s3_idx_purged", "s4_neardup", "s5_purged", "s6_domain_capped")
+    val (rows0, s1, headLegs) = pinnedHead(batch0, idCol, sourceCol,
+      textCol, stages.take(3))
     // cross-snapshot near-dup: any batch doc sharing >= minShared
     // winnow fingerprints with an index doc drops (the index corpus
     // owns every prior occurrence; uncapped by default — a stored
     // index ships its own posting-count stats if a cap is wanted).
-    // Pinned: the id list feeds both the s2 anti join and the s2
-    // report leg's XOR subtraction.
+    // Pinned: the id list feeds both the s2 anti join and a report leg.
     val idxHits = winnowAgainstIndex(s1, fpIndex, idCol, textCol,
         k = k, w = w, minShared = minShared)
       .select(col("new_id").as(idCol)).distinct()
       .localCheckpoint(false)
-    val s2 = s1.join(idxHits, Seq(idCol), "left_anti")
-      .localCheckpoint(false)
+    val s2 = s1.join(idxHits, Seq(idCol), "left_anti").localCheckpoint(false)
     // cross-snapshot substring purge: windows already in the stored
     // index vanish from the surviving batch docs. The pin carries the
     // rebuilt text's report facts (nt2 = the purge's kept-word count,
-    // __tok3 = split count of the rebuilt text — the s4 leg's
-    // convention, 1 for a fully-purged empty string — and the content
-    // hash) so no later leg re-hashes text.
-    val ipurged = purgeAgainstIndex(s2, winIndex, idCol, textCol,
-      windowWords = indexWindowWords)
-    val s3 = ipurged
+    // __tok = split count of the rebuilt text — 1 for a fully-purged
+    // empty string — and the content hash), so the s4 legs read them
+    // as the tail's near-dup base and no later leg re-hashes text.
+    val s3 = purgeAgainstIndex(s2, winIndex, idCol, textCol,
+        windowWords = indexWindowWords)
       .join(s2.select(col(idCol), col(sourceCol)), Seq(idCol))
       .select(col(idCol), col(sourceCol),
         (col("n_words") - col("n_removed")).as("nt2"),
         col("text_clean").as(textCol))
-      .withColumn("__tok3", splitTok)
-      .withColumn("__th3", contentHash60(col(idCol), col(textCol)))
+      .withColumn("__tok", size(split(col(textCol), " ")).cast("long"))
+      .withColumn("__th", contentHash60(col(idCol), col(textCol)))
       .localCheckpoint(false)
-    // within-batch funnel on the rebuilt text — the standard stages
-    val pairs = winnowOverlap(s3.select(col(idCol), col(sourceCol),
-        col(textCol)), idCol, textCol,
-      k = k, w = w, minShared = minShared, maxPostings = maxPostings)
-    val dropB = pairs.select(col("doc_b").as(idCol)).distinct()
-      .localCheckpoint(false)
-    val s4 = s3.join(dropB, Seq(idCol), "left_anti")
-      .localCheckpoint(false)
-    val purged = purgeDuplicateSubstringsMulti(
-      s4.select(col(idCol), col(textCol)), idCol, textCol,
-      windows = windows, keepFirst = true)
-    // Report needs only (nt, content hash) — hash at pin time and drop
-    // the rebuilt text (the [[hygieneFunnel]] s3 discipline).
-    val s5 = purged
-      .select(col(idCol), (col("n_words") - col("n_removed")).as("nt"),
-        contentHash60(col(idCol), col("text_clean")).as("__th"))
-      .join(s4.select(col(idCol), col(sourceCol)), Seq(idCol))
-      .localCheckpoint(false)
-    // Domain cap with __th riding the top-k as a payload column (the
-    // [[hygieneFunnel]] s4 discipline — no join-back).
-    val s6 = Similarity.topKPerQuery(
-      s5.select(col(sourceCol), col(idCol), col("nt"), col("__th")),
-      domainCap, "nt", scoreDesc = true, idCol = idCol,
-      queryCol = sourceCol, payloadCols = Seq("__th"))
-    // One tagged aggregate for the whole 7-row report (the
-    // [[hygieneFunnel]] shape): every batch row contributes to
-    // s0/s1/s2 in one scan of the fact pin; legs without a direct pin
-    // come from XOR subtraction — s1 = s0 ⊖ exact drops, s2 = s1 ⊖
-    // idxHits rows, s4 = s3 ⊖ dropB rows (counts/sums subtract;
-    // bit_xor cancels the dropped rows' 60-bit hashes). The final job
-    // reads pins only.
-    def negLeg(names: Seq[String], base: DataFrame, drop: DataFrame,
-        tok: Column, th: Column): DataFrame =
-      base.join(drop, Seq(idCol), "left_semi")
-        .select(explode(array(names.map(lit): _*)).as("stage"),
-          lit(-1L).as("__n"), (-tok).cast("long").as("__tok"),
-          th.as("__th"))
-    def pinLeg(name: String, d: DataFrame, tok: Column,
-        th: Column): DataFrame =
-      d.select(lit(name).as("stage"), lit(1L).as("__n"),
-        tok.cast("long").as("__tok"), th.as("__th"))
-    val tagged = rows0
-      .select(explode(array(lit("s0_batch_raw"), lit("s1_exact"),
-          lit("s2_idx_neardup"))).as("stage"),
-        lit(1L).as("__n"), col("__tok"), col("__th"))
-      .unionByName(negLeg(Seq("s1_exact", "s2_idx_neardup"), rows0,
-        dropIds, col("__tok"), col("__th")))
-      .unionByName(negLeg(Seq("s2_idx_neardup"), rows0, idxHits,
-        col("__tok"), col("__th")))
-      .unionByName(pinLeg("s3_idx_purged", s3, col("nt2"), col("__th3")))
-      .unionByName(pinLeg("s4_neardup", s3, col("__tok3"), col("__th3")))
-      .unionByName(negLeg(Seq("s4_neardup"), s3, dropB, col("__tok3"),
-        col("__th3")))
-      .unionByName(pinLeg("s5_purged", s5, col("nt"), col("__th")))
-      .unionByName(pinLeg("s6_domain_capped", s6, col("nt"), col("__th")))
-    import spark.implicits._
-    val zeroLegs = Seq("s0_batch_raw", "s1_exact", "s2_idx_neardup",
-        "s3_idx_purged", "s4_neardup", "s5_purged", "s6_domain_capped")
-      .toDF("stage")
-      .select(col("stage"), lit(0L).as("__n"),
-        lit(null).cast("long").as("__tok"), lit(null).cast("long").as("__th"))
-    tagged.unionByName(zeroLegs).groupBy(col("stage"))
-      .agg(sum(col("__n")).as("n_docs"), sum(col("__tok")).as("n_tokens"),
-        expr("bit_xor(__th)").as("text_h"))
-      .coalesce(1).sortWithinPartitions("stage")
+    funnelReport(stages, headLegs ++ Seq(
+        negLeg(stages.slice(2, 3), rows0, idxHits, idCol),
+        pinLeg(stages(3), s3, col("nt2")),
+        pinLeg(stages(4), s3, col("__tok"))) ++
+      pinnedTail(s3, s3, stages.drop(4), Seq(idCol, textCol), idCol,
+        sourceCol, textCol, k, w, minShared, maxPostings, windows,
+        domainCap))
   }
 
-  /** Materialized-stage form of [[hygieneFunnel]] — the literal version
-    * of the pinned funnel's "these pins ARE the inter-stage writes a
-    * production funnel does anyway": each stage's SURVIVORS (with
-    * their text) are written as a source-partitioned catalog table
-    * `<tablePrefix>_s{1..4}`, and a stage whose table already exists
-    * is NOT recomputed — the run resumes from the last completed
-    * stage (catalog registration is the completion marker: a crashed
-    * write leaves no table, so a rerun redoes exactly the unfinished
-    * stages). Table schemas: s1/s2 (idCol, textCol, sourceCol),
-    * s3/s4 (idCol, nt, text_clean, sourceCol) — the post-purge stages
-    * carry the REBUILT text, and s4 is the admitted batch the Layout
-    * snapshot cycle feeds to [[graft.sources.Layout
-    * .appendHygieneIndexes]] (LayoutSpec drives that composition).
+  /** Materialized-stage form of [[hygieneFunnel]] (same stages, same
+    * report) — the literal version of the pinned funnel's "these pins
+    * ARE the inter-stage writes a production funnel does anyway": each
+    * stage's SURVIVORS (with their text) are written as a
+    * source-partitioned catalog table `<tablePrefix>_s{1..4}`, and a
+    * stage whose table already exists is NOT recomputed — the run
+    * resumes from the last completed stage (catalog registration is the
+    * completion marker: a crashed write leaves no table, so a rerun
+    * redoes exactly the unfinished stages). Table schemas: s1/s2
+    * (idCol, textCol, sourceCol), s3/s4 (idCol, nt, text_clean,
+    * sourceCol) — the post-purge stages carry the REBUILT text, and s4
+    * is the admitted batch the Layout snapshot cycle feeds to
+    * [[graft.sources.Layout.appendHygieneIndexes]] (LayoutSpec drives
+    * that composition).
     *
-    * Returns the same 5-row (stage, n_docs, n_tokens, text_h) report
-    * as [[hygieneFunnel]], computed from the tables — StagedFunnelSpec
-    * pins the report AND each stage's contents bit-equal to the
-    * in-memory run, and that a resumed run schedules no stage work.
-    * Each stage reads only the PREVIOUS stage's table (never the raw
-    * corpus), so at 100 TB a resume after a day-3 failure replays
-    * nothing of days 1-2. */
+    * The report is computed from the tables — StagedFunnelSpec pins the
+    * report AND each stage's contents bit-equal to the in-memory run,
+    * and that a resumed run schedules no stage work. Each stage reads
+    * only the PREVIOUS stage's table (never the raw corpus), so at
+    * 100 TB a resume after a day-3 failure replays nothing of days 1-2. */
   def hygieneFunnelStaged(docs0: DataFrame, idCol: String,
       sourceCol: String, textCol: String, k: Int = 3, w: Int = 4,
       minShared: Long = 3L, maxPostings: Long = 3L,
@@ -2070,12 +1960,8 @@ object TextDedup {
       domainCap: Int = 15, tablePrefix: String): DataFrame = {
     val spark = docs0.sparkSession
     import org.apache.spark.sql.SaveMode
-    val nFiles = docs0.inputFiles.length
-    val docs0s =
-      if (nFiles > 0 && nFiles < spark.sparkContext.defaultParallelism)
-        docs0.repartition(spark.sparkContext.defaultParallelism)
-      else docs0
-    val docs = docs0s.select(col(idCol), col(sourceCol), col(textCol))
+    val docs = spreadSmallSource(docs0)
+      .select(col(idCol), col(sourceCol), col(textCol))
     def stageTable(name: String)(compute: => DataFrame): DataFrame = {
       val t = s"${tablePrefix}_$name"
       if (!spark.catalog.tableExists(t))
@@ -2084,16 +1970,8 @@ object TextDedup {
       spark.table(t)
     }
     val s1 = stageTable("s1") {
-      val ehPairs = docs.select(unhex(md5(col(textCol))).as("__eh"),
-        col(idCol))
-      val dupKeeps = ehPairs.groupBy(col("__eh"))
-        .agg(min(col(idCol)).as("__keepId"), count(lit(1)).as("__n"))
-        .filter(col("__n") > 1)
-        .select(col("__eh"), col("__keepId"))
-      val dropIds = ehPairs.join(dupKeeps, Seq("__eh"))
-        .filter(col(idCol) =!= col("__keepId"))
-        .select(col(idCol))
-      docs.join(dropIds, Seq(idCol), "left_anti")
+      docs.join(exactDropIds(docs.select(unhex(md5(col(textCol))).as("__eh"),
+        col(idCol)), idCol), Seq(idCol), "left_anti")
     }
     val s2 = stageTable("s2") {
       val dropB = winnowOverlap(s1, idCol, textCol, k = k, w = w,
@@ -2116,29 +1994,14 @@ object TextDedup {
         .join(s3.select(col(idCol), col("text_clean"), col(sourceCol)),
           Seq(idCol))
     }
-    // Report over the tables — the same single tagged aggregate (and
-    // the same tok/hash expressions) as [[hygieneFunnel]], so the two
-    // forms are bit-comparable.
+    // the same tok/hash expressions as the pinned form's facts, so the
+    // two forms are bit-comparable
     val splitTok = size(split(col(textCol), " ")).cast("long")
-    def leg(name: String, d: DataFrame, tok: Column,
-        text: Column): DataFrame =
-      d.select(lit(name).as("stage"), lit(1L).as("__n"),
-        tok.cast("long").as("__tok"),
-        contentHash60(col(idCol), text).as("__th"))
-    val tagged = leg("s0_raw", docs, splitTok, col(textCol))
-      .unionByName(leg("s1_exact", s1, splitTok, col(textCol)))
-      .unionByName(leg("s2_neardup", s2, splitTok, col(textCol)))
-      .unionByName(leg("s3_purged", s3, col("nt"), col("text_clean")))
-      .unionByName(leg("s4_domain_capped", s4, col("nt"),
-        col("text_clean")))
-    import spark.implicits._
-    val zeroLegs = Seq("s0_raw", "s1_exact", "s2_neardup", "s3_purged",
-        "s4_domain_capped").toDF("stage")
-      .select(col("stage"), lit(0L).as("__n"),
-        lit(null).cast("long").as("__tok"), lit(null).cast("long").as("__th"))
-    tagged.unionByName(zeroLegs).groupBy(col("stage"))
-      .agg(sum(col("__n")).as("n_docs"), sum(col("__tok")).as("n_tokens"),
-        expr("bit_xor(__th)").as("text_h"))
-      .coalesce(1).sortWithinPartitions("stage")
+    val legs = Seq(docs, s1, s2).map((_, splitTok, col(textCol))) ++
+      Seq(s3, s4).map((_, col("nt"), col("text_clean")))
+    funnelReport(FunnelStages, FunnelStages.zip(legs).map {
+      case (stage, (d, tok, text)) =>
+        pinLeg(stage, d, tok, contentHash60(col(idCol), text))
+    })
   }
 }

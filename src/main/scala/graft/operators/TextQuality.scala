@@ -461,12 +461,7 @@ object TextQuality {
     // the rows entering the distinct exchange. Same value as
     // conv(substring(md5(sh),1,15),16,10). Spread first: a corpus read
     // from few splits would run the kernel near-serially.
-    val spark = docs.sparkSession
-    val nFiles = docs.inputFiles.length
-    val src =
-      if (nFiles > 0 && nFiles < spark.sparkContext.defaultParallelism)
-        docs.repartition(spark.sparkContext.defaultParallelism)
-      else docs
+    val src = TextDedup.spreadSmallSource(docs)
     val all = src
       .select(col(groupCol),
         explode(graft.functions.ShingleHashes(col(textCol), n, 15, dedup = true)).as("h"))

@@ -298,10 +298,9 @@ object StreamOps {
     purgeProjection(stream, textCol, windowWords, keys, Seq(col(idCol)))
   }
 
-  /** Stages 1+2 of both ingest front doors — the stateless exact-dup
-    * (Bloom plan literal) and batch-trained-quality gates; shared so
-    * the two doors cannot diverge on gate semantics (scoreInline's
-    * null-on-empty contract applies identically to both). */
+  /** Stages 1+2 of [[ingestFrontDoorV2]] — the stateless exact-dup
+    * (Bloom plan literal) and batch-trained-quality gates
+    * (scoreInline's null-on-empty contract applies). */
   private def frontDoorGates(stream: DataFrame, textCol: String,
       bloomPacked: Array[Long], bloomBits: Int, bloomHashes: Int,
       model: graft.operators.QualityModel.Model,
@@ -535,12 +534,14 @@ object StreamOps {
   }
 
   /** The composed streaming ingest FRONT DOOR — the end-to-end online
-    * form of the batch prep funnel (q_prep_funnel), chaining the
-    * pieces a production crawl-ingest pipeline runs on every arriving
-    * document:
+    * form of the batch prep funnel (q_prep_funnel) and of
+    * [[graft.operators.TextDedup.hygieneFunnelAgainstIndex]], stage for
+    * stage, chaining the pieces a production crawl-ingest pipeline runs
+    * on every arriving document:
     *
     *   1. [[streamingBloomDedup]] form: exact-corpus dup gate — the
-    *      offline Bloom filter rides as a plan literal, stateless;
+    *      offline Bloom filter rides as a plan literal, stateless (the
+    *      streaming stand-in for the funnel's s1 exact stage);
     *   2. [[streamingQualityGate]] form: batch-trained hashed-LR score,
     *      stateless (train offline / filter online). scoreInline's
     *      null-on-empty contract applies: a zero-token document scores
@@ -555,67 +556,17 @@ object StreamOps {
     *      class is already caught by the Bloom gate, so near-dups are
     *      surfaced rather than silently dropped — the form a human/batch
     *      adjudicator consumes;
-    *   4. per-source token budget: the [[streamingTokenBudget]]
-    *      recurrence inlined so the quality score rides through — one
-    *      long of state per source, no watermark. Admission order is
-    *      arrival order (the documented online-vs-batch caveat).
-    *
-    * Returns (admitted, nearDupCandidates). Both are lazily-composed
-    * streaming frames off the same source — starting both sinks runs
-    * two queries over the input (MemoryStream/Kafka replay this fine).
-    * Every stage is a DataFrame transform, so the SAME call runs on a
-    * batch frame for backfill — StreamingSpec pins the streaming run
-    * equal to the batch run end-to-end.
-    */
-  def ingestFrontDoor(
-      stream: DataFrame,             // (idCol, sourceCol, textCol)
-      idCol: String, sourceCol: String, textCol: String,
-      bloomPacked: Array[Long], bloomBits: Int, bloomHashes: Int,
-      model: graft.operators.QualityModel.Model, qualityThreshold: Double,
-      index: DataFrame,              // from [[nearDupIndex]]
-      nearDupThreshold: Double,
-      budgetPerSource: Long): (DataFrame, DataFrame) = {
-    import stream.sparkSession.implicits._
-    // stages 1+2: stateless gates, one projection pass (shared helper)
-    val gated = frontDoorGates(stream, textCol, bloomPacked, bloomBits,
-      bloomHashes, model, qualityThreshold)
-    // stage 3 (side output): verified near-dup candidates vs the index
-    val candidates = streamingNearDupVerified(
-      gated.select(col(idCol), col(textCol)), index, idCol, textCol,
-      nearDupThreshold)
-    // stage 4: per-source sequential token budget, quality riding along
-    val admitted = gated
-      .select(col(sourceCol).cast("string"), col(idCol).cast("long"),
-        size(split(col(textCol), " ")).cast("long"), col("quality"))
-      .as[(String, Long, Long, Double)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[Long, (String, Long, Long, Double, Boolean)](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout) {
-        case (source, it, state: GroupState[Long]) =>
-          var used = state.getOption.getOrElse(0L)
-          val out = it.map { case (_, id, tok, qual) =>
-            val keep = used + tok <= budgetPerSource
-            if (keep) used += tok
-            (source, id, tok, qual, keep)
-          }.toVector
-          state.update(used)
-          out.iterator
-      }
-      .toDF(sourceCol, idCol, "tokens", "quality", "admitted")
-    (admitted, candidates)
-  }
-
-  /** [[ingestFrontDoor]] composed with the window-hash purge gate —
-    * the online analogue of [[graft.operators.TextDedup
-    * .hygieneFunnelAgainstIndex]], stage for stage: exact-dup gate
-    * (Bloom, the streaming stand-in for the funnel's s1 exact stage) →
-    * quality gate → near-dup candidates vs the stored index (side
-    * output) → window-hash purge against the stored window index (the
-    * funnel's idx-purge stage, as the stateless [[windowPurgeGate]]
-    * kernel: the covered-position decision runs row-locally against
-    * the plan-baked key set, byte-identical md5 keys to the batch
-    * index) → per-source token budget over the CLEANED token counts
-    * (n_words − n_removed, the funnel's nt2 convention).
+    *   4. window-hash purge against the stored window index (the
+    *      funnel's idx-purge stage, as the stateless [[windowPurgeGate]]
+    *      kernel: the covered-position decision runs row-locally against
+    *      the plan-baked key set, byte-identical md5 keys to the batch
+    *      index); an empty index purges nothing (n_removed 0, text_clean
+    *      = text);
+    *   5. per-source token budget over the CLEANED token counts
+    *      (n_words − n_removed, the funnel's nt2 convention): the
+    *      [[streamingTokenBudget]] recurrence inlined so the quality
+    *      score rides through — one long of state per source, no
+    *      watermark.
     *
     * Two DOCUMENTED deviations from the batch funnel's semantics:
     * (1) stored-index near-dup matches are FLAGGED, not dropped — they
@@ -630,12 +581,14 @@ object StreamOps {
     *
     * Returns (admitted, nearDupCandidates); `admitted` carries
     * (source, id, tokens, n_removed, quality, text_clean, admitted) so
-    * the purged text itself flows to the sink. Same contracts as the
-    * parts: every stage is a DataFrame transform (the SAME call
-    * backfills a batch frame — StreamingSpec pins stream == batch and
-    * ties the purge stage to [[graft.operators.TextDedup
-    * .purgeAgainstIndex]] row for row), `maxIndexRows` bounds the
-    * plan-baked window bank exactly as in [[windowPurgeGate]]. */
+    * the purged text itself flows to the sink. Both are lazily-composed
+    * streaming frames off the same source — starting both sinks runs
+    * two queries over the input (MemoryStream/Kafka replay this fine).
+    * Every stage is a DataFrame transform, so the SAME call backfills a
+    * batch frame — StreamingSpec pins stream == batch and ties the
+    * purge stage to [[graft.operators.TextDedup.purgeAgainstIndex]] row
+    * for row. `maxIndexRows` bounds the plan-baked window bank exactly
+    * as in [[windowPurgeGate]]. */
   def ingestFrontDoorV2(
       stream: DataFrame,             // (idCol, sourceCol, textCol)
       idCol: String, sourceCol: String, textCol: String,

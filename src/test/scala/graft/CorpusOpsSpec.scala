@@ -64,6 +64,9 @@ class CorpusOpsSpec extends SparkSpec {
     val got = purge(Seq((1L, "tiny doc"), (2L, "tiny doc")), w = 4, keepFirst = true)
     assert(got(1L) == ((2L, 0L, "tiny doc")))
     assert(got(2L) == ((2L, 0L, "tiny doc")))
+    // a window must hold at least one word
+    intercept[IllegalArgumentException](
+      purge(Seq((1L, "tiny doc")), w = 0, keepFirst = true))
   }
 
   test("substring purge empties a fully-duplicated document") {

@@ -741,14 +741,17 @@ class StreamingSpec extends SparkSpec {
   test("ingest front door e2e: streaming run equals the batch run") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    import graft.operators.{QualityModel, Sketches}
-    // --- offline artifacts: corpus bloom filter, near-dup index, model
+    import graft.operators.{QualityModel, Sketches, TextDedup}
+    // --- offline artifacts: corpus bloom filter, near-dup index, model,
+    // and an EMPTY window index: the purge stage must pass text through
     val corpus = Seq(
       (100L, "excellent clear precise prose alpha beta gamma delta epsilon zeta"),
       (200L, "p q r s t u v w x y z aa")).toDF("doc_id", "text")
     val bits = 1 << 16
     val packed = Sketches.packBits(Sketches.bloomBuild(corpus, "text", bits, 4), bits)
     val index = StreamOps.nearDupIndex(corpus, "doc_id", "text").cache()
+    val noWindows = TextDedup.windowHashIndex(corpus.limit(0), "text",
+      windowWords = 4)
     val train = spark.createDataFrame(Seq(
       (0L, "excellent clear prose", 1.0), (1L, "wonderful precise text", 1.0),
       (2L, "spam click buy now", 0.0), (3L, "cheap garbage spam", 0.0)))
@@ -769,9 +772,10 @@ class StreamingSpec extends SparkSpec {
       (6L, "b", "excellent clear prose today friends yes")) // admitted, 6 toks
     val in = MemoryStream[(Long, String, String)]
     val stream = in.toDF().toDF("doc_id", "source", "text")
-    val (admitted, cands) = StreamOps.ingestFrontDoor(stream,
+    val (admitted, cands) = StreamOps.ingestFrontDoorV2(stream,
       "doc_id", "source", "text", packed, bits, 4, model, 0.5,
-      index, nearDupThreshold = 0.5, budgetPerSource = 100L)
+      index, nearDupThreshold = 0.5, winIndex = noWindows,
+      budgetPerSource = 100L)
     val qa = admitted.writeStream.format("memory").queryName("fd_admitted")
       .outputMode("append").start()
     val qc = cands.writeStream.format("memory").queryName("fd_cands")
@@ -792,12 +796,22 @@ class StreamingSpec extends SparkSpec {
         .select("doc_id", "corpus_id").distinct().collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(gotCands == Set((4L, 100L)), s"got $gotCands")
+      // nothing is indexed, so nothing is purged: every admitted-stream
+      // row keeps its arrival text whole
+      val texts = (batch1 ++ batch2).map(t => t._1 -> t._3).toMap
+      val purged = spark.table("fd_admitted")
+        .select("doc_id", "n_removed", "text_clean").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getString(2)))
+      assert(purged.length == gotAdm.size &&
+        purged.forall(t => t._2 == 0L && t._3 == texts(t._1)),
+        s"got ${purged.toSeq}")
       // --- batch-equivalence: the SAME composition on a batch frame
       // (backfill mode) must produce identical admissions and candidates
       val batchDf = (batch1 ++ batch2).toDF("doc_id", "source", "text")
-      val (bAdm, bCands) = StreamOps.ingestFrontDoor(batchDf,
+      val (bAdm, bCands) = StreamOps.ingestFrontDoorV2(batchDf,
         "doc_id", "source", "text", packed, bits, 4, model, 0.5,
-        index, nearDupThreshold = 0.5, budgetPerSource = 100L)
+        index, nearDupThreshold = 0.5, winIndex = noWindows,
+        budgetPerSource = 100L)
       val bAdmSet = bAdm.select("source", "doc_id", "tokens", "admitted")
         .collect()
         .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getBoolean(3)))
