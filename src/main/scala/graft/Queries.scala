@@ -52,7 +52,9 @@ object Queries {
       .orderBy(col("l_returnflag"), col("l_linestatus"))
   }
 
-  /** DuckDB-side mirror of Tables.events's nanos→micros conversion. */
+  /** DuckDB-side mirror of Tables.events's TIMESTAMP_NTZ → TIMESTAMP
+    * cast under the UTC session: `make_timestamp(epoch_ns(ts)//1000)`
+    * is an identity on the stored micros. */
   val EVENTS_SQL: String =
     "(SELECT event_id, make_timestamp(epoch_ns(ts)//1000) AS ts, " +
       "user_id, event_type, value, props FROM events) AS events"

@@ -1571,7 +1571,8 @@ final case class Frame(df: DataFrame, index: Option[String] = None) {
 object Frame {
   def apply(df: DataFrame): Frame = Frame(df, None)
   /** Read helpers mirroring the reference io surface. */
-  def readParquet(spark: SparkSession, path: String): Frame = Frame(spark.read.parquet(path))
+  def readParquet(spark: SparkSession, path: String): Frame =
+    Frame(graft.sources.Io.readParquet(spark, path))
   def readCsv(spark: SparkSession, path: String, header: Boolean = true): Frame =
     Frame(spark.read.option("header", header.toString).option("inferSchema", "true").csv(path))
   def readJson(spark: SparkSession, path: String): Frame = Frame(spark.read.json(path))

@@ -1,21 +1,74 @@
 package graft.sources
 
+import scala.util.Try
+
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+  ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.types.StructType
 
 /** Source/sink surface (reference `io/csv.py`, `io/json.py:9-117`,
   * `io/orc.py:5-60`, `io/parquet.py:252-711`, `_collection.py:5092`).
   *
   * Thin by design: Spark's DataSource V2 readers already provide the
-  * split computation, schema inference, projection/filter pushdown and
-  * parallel writes the reference hand-builds, so the engine surface is
-  * a stable facade over `spark.read`/`df.write`. Explicit schemas are
-  * accepted (and preferred at scale — inference is an extra pass).
+  * split computation, projection/filter pushdown and parallel writes
+  * the reference hand-builds, so the engine surface is a stable facade
+  * over `spark.read`/`df.write`. Explicit schemas are accepted for the
+  * text formats, whose inference is an extra pass over the data. A
+  * single parquet file needs none: [[readParquet]] takes its schema
+  * from the file's footer on the driver, as dask-expr's `ReadParquet`
+  * takes its meta from parquet metadata on the client, so building the
+  * scan runs no Spark job.
   */
 object Io {
 
+  /** Parquet at `path`. A single file is read with the schema of its
+    * footer ([[parquetSchema]]) declared; a directory, a glob or a
+    * missing path goes to `spark.read.parquet`, which keeps Spark's
+    * multi-file merge, partition discovery and `Path does not exist`
+    * error (and runs its one-job schema inference). Nothing is memoized:
+    * each call reads the footer afresh, so a rewritten file is read
+    * with its new schema. */
   def readParquet(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    parquetSchema(spark, path) match {
+      case Some(schema) => spark.read.schema(schema).parquet(path)
+      case None => spark.read.parquet(path)
+    }
+
+  /** The schema Spark's inference gives the single parquet file at
+    * `path`, read from its footer on the driver without a Spark job;
+    * None for a directory, a glob, a missing or hidden path or a footer
+    * that does not read (Spark's own reader then reports the error).
+    * Mirrors `ParquetFileFormat.mergeSchemasInParallel` for one file:
+    * the same footer reader, Spark's row-metadata schema when the
+    * footer holds one, else the footer's parquet schema through the
+    * converter that inference builds from the session confs
+    * (`binaryAsString`, `int96AsTimestamp`, `inferTimestampNTZ`, …). */
+  private[graft] def parquetSchema(spark: SparkSession, path: String): Option[StructType] = {
+    val conf = spark.sessionState.newHadoopConf()
+    val p = new Path(path)
+    // a glob, or a name Spark's file listing hides, is left to Spark
+    val file = if (path.exists("{}[]*?\\".contains(_)) ||
+        p.getName.startsWith("_") || p.getName.startsWith(".")) None
+      else Try(p.getFileSystem(conf).getFileStatus(p)).toOption.filter(_.isFile)
+    file.flatMap { st =>
+      val sql = spark.sessionState.conf
+      val converter = new ParquetToSparkSchemaConverter(
+        assumeBinaryIsString = sql.isParquetBinaryAsString,
+        assumeInt96IsTimestamp = sql.isParquetINT96AsTimestamp,
+        inferTimestampNTZ = sql.parquetInferTimestampNTZEnabled,
+        nanosAsLong = sql.legacyParquetNanosAsLong,
+        respectUnknownTypeAnnotation = sql.parquetReaderRespectUnknownTypeAnnotation)
+      Try(ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(st, conf),
+          ParquetMetadataConverter.SKIP_ROW_GROUPS)).toOption
+        .map(meta => ParquetFileFormat.readSchemaFromFooter(
+          new Footer(st.getPath, meta), converter))
+    }
+  }
 
   def readCsv(spark: SparkSession, path: String, schema: StructType = null,
       header: Boolean = true): DataFrame = {

@@ -52,4 +52,20 @@ class CallerStateSpec extends SparkSpec {
       }
     }
   }
+
+  test("Tables.events leaves the session conf unchanged") {
+    val before = spark.conf.getAll
+    Tables.events(spark, sfDir).collect()
+    assert(spark.conf.getAll == before)
+  }
+
+  test("Tables.events refuses a non-UTC session") {
+    val key = "spark.sql.session.timeZone"
+    val tz = spark.conf.get(key)
+    spark.conf.set(key, "America/New_York")
+    val e = try intercept[IllegalArgumentException](Tables.events(spark, sfDir))
+      finally spark.conf.set(key, tz)
+    assert(e.getMessage.contains("Tables.events needs a UTC session"), e.getMessage)
+    assert(e.getMessage.contains("America/New_York"), e.getMessage)
+  }
 }

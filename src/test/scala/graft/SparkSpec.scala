@@ -39,6 +39,12 @@ trait SparkSpec extends AnyFunSuite {
       (out, seen.asScala.toSeq)
     } finally sc.removeSparkListener(listener)
   }
+
+  /** Runs `f` and returns the number of Spark jobs it fired. */
+  protected def jobsOf[A](f: => A): (A, Int) = {
+    val (out, ev) = withEvents(f)
+    (out, ev.count(_.isInstanceOf[SparkListenerJobStart]))
+  }
 }
 
 object SparkSpec {
