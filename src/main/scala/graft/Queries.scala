@@ -670,8 +670,7 @@ object Queries {
       |  median(l_extendedprice) AS med_price
       |FROM lineitem""".stripMargin) { (s, dir) =>
     val li = Tables.lineitem(s, dir)
-    // both columns ride one range-partition pipeline (one shuffle, one
-    // count, one probe — not two of each)
+    // both columns ride one Quantiles fold (one job, not one per column)
     val m = operators.Quantiles.exactQuantilesMulti(li, Seq(
       "l_quantity" -> Seq(0.25, 0.5, 0.75), "l_extendedprice" -> Seq(0.5)))
     val qs = m("l_quantity")

@@ -487,8 +487,9 @@ final case class Frame(df: DataFrame, index: Option[String] = None) {
     Frame(graft.operators.Quantiles.groupedExactQuantiles(df, groupCol, column, qs))
 
   /** Exact quantiles via the distributed Quantiles radix select (never
-    * Spark's unbounded-buffer percentile aggregate): a bucket histogram
-    * and a fetch of the wanted buckets, two or three jobs, nothing
+    * Spark's unbounded-buffer percentile aggregate): one job when the
+    * column has at most 65536 non-null values, else a bucket histogram
+    * and a fetch of the wanted buckets, two or more jobs; nothing
     * pinned. */
   def quantile(column: String, qs: Seq[Double]): Seq[Double] =
     graft.operators.Quantiles.exactQuantiles(df, column, qs)
@@ -1574,9 +1575,11 @@ object Frame {
   def readParquet(spark: SparkSession, path: String): Frame =
     Frame(graft.sources.Io.readParquet(spark, path))
   def readCsv(spark: SparkSession, path: String, header: Boolean = true): Frame =
-    Frame(spark.read.option("header", header.toString).option("inferSchema", "true").csv(path))
-  def readJson(spark: SparkSession, path: String): Frame = Frame(spark.read.json(path))
-  def readOrc(spark: SparkSession, path: String): Frame = Frame(spark.read.orc(path))
+    Frame(graft.sources.Io.readCsv(spark, path, header = header))
+  def readJson(spark: SparkSession, path: String): Frame =
+    Frame(graft.sources.Io.readJson(spark, path))
+  def readOrc(spark: SparkSession, path: String): Frame =
+    Frame(graft.sources.Io.readOrc(spark, path))
   def fromSeq(spark: SparkSession, rows: Seq[Product], cols: Seq[String]): Frame = {
     import scala.jdk.CollectionConverters._
     val rs = rows.map(p => org.apache.spark.sql.Row.fromTuple(p)).asJava

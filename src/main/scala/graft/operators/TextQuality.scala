@@ -718,7 +718,8 @@ object TextQuality {
     * the bounded-memory exact path whose few-huge-groups regime is
     * precisely the per-language shape (a buffered `percentile` holds a
     * whole language's scores in one task at 100 TB; the radix select's
-    * per-language bucket histogram and wanted-bucket fetch never do),
+    * per-language fold, at most 65536 keys or else a bucket histogram
+    * and a wanted-bucket fetch, never does),
     * and whose results are bit-identical to `percentile`, keeping the
     * oracle replayable. Docs with fewer than two words carry no bigram
     * and are excluded (as in q_bigram_lm).

@@ -165,6 +165,68 @@ class QuantilesSpec extends SparkSpec {
     assert(jobCount(refinedEv) > jobCount(wholeEv))
   }
 
+  test("a column named twice in exactQuantilesMulti is refused") {
+    import spark.implicits._
+    val df = Seq(1.0, 2.0, 3.0).toDF("v")
+    for (specs <- Seq(Seq("v" -> Seq(0.25), "v" -> Seq(0.25)),
+        Seq("v" -> Seq(0.25), "v" -> Seq(0.5)))) {
+      val e = intercept[IllegalArgumentException](Quantiles.exactQuantilesMulti(df, specs))
+      assert(e.getMessage.contains("each column at most once") && e.getMessage.endsWith(": v"),
+        e.getMessage)
+    }
+    assert(Quantiles.exactQuantilesMulti(df, Seq("v" -> Seq(0.25, 0.5))) ==
+      Map("v" -> Seq(1.5, 2.0)))
+  }
+
+  test("exactQuantilesMulti on lineitem fires one job and stores no RDD block") {
+    val li = Tables.lineitem(spark, sfDir)
+    val specs = Seq("l_quantity" -> Seq(0.25, 0.5, 0.75), "l_extendedprice" -> Seq(0.5))
+    val (_, events) = withEvents(Quantiles.exactQuantilesMulti(li, specs))
+    assert(jobCount(events) == 1, s"${jobCount(events)} jobs")
+    assert(!events.exists { case e: SparkListenerBlockUpdated => e.blockUpdatedInfo.blockId.isRDD
+      case _ => false })
+  }
+
+  test("a tag of exactly cap keys and one of cap + 1 give the same answers as percentile") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(7)
+    val n = 300
+    val vals = Seq.fill(n)(rnd.nextInt(4) match {
+      case 0 => rnd.nextInt(20).toDouble
+      case 1 => rnd.nextGaussian() * 1e3
+      case 2 => if (rnd.nextBoolean()) 0.0 else -0.0
+      case _ => if (rnd.nextInt(8) == 0) Double.NegativeInfinity else 1.0 + rnd.nextInt(50) * math.ulp(1.0)
+    })
+    val ps = Seq(0.0, 0.1, 0.25, 0.5, 0.667, 0.9, 1.0)
+    for (parts <- Seq(1, 3)) {
+      val df = vals.toDF("v").repartition(parts)
+      // cap n keeps all n keys; cap n - 1 turns them into bucket counts
+      val (keys, keysJobs) = jobsOf(Quantiles.exactQuantilesMulti(df, Seq("v" -> ps), n.toLong))
+      val (counted, countedJobs) = jobsOf(Quantiles.exactQuantilesMulti(df, Seq("v" -> ps), n - 1L))
+      assert(keys("v").map(java.lang.Double.doubleToLongBits) ==
+        counted("v").map(java.lang.Double.doubleToLongBits), s"$parts partitions")
+      // the fetch is one job more (the repartition adds a stage job to each)
+      assert(countedJobs > keysJobs, s"jobs: keys $keysJobs, counts $countedJobs")
+      keys("v").zip(builtin(df, "v", ps)).zip(ps).foreach { case ((g, w), p) =>
+        assert(g == w || (g.isNaN && w.isNaN) || math.abs(g - w) <= math.ulp(w) * 4,
+          s"p=$p: got $g want $w") }
+    }
+    // grouped: under cap n, group "a" holds exactly cap keys and "b" cap + 1
+    val grouped = (vals.map("a" -> _) ++ (vals :+ 0.5).map("b" -> _)).toDF("g", "v")
+    val gps = Seq(0.25, 0.5, 0.9)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getString(0) -> r.toSeq.tail.map(_.asInstanceOf[Double])).toMap
+    val want = rows(grouped.groupBy("g").agg(
+      expr(s"percentile(v, array(${gps.mkString(",")}))").as("q"))
+      .select(col("g") +: gps.indices.map(i => col("q")(i)): _*))
+    for (parts <- Seq(1, 3); cap <- Seq(n - 1L, n.toLong, n + 1L)) {
+      val got = rows(Quantiles.groupedExactQuantiles(grouped.repartition(parts), "g", "v", gps, cap))
+      assert(got.keySet == Set("a", "b"))
+      got.foreach { case (g, qs) => qs.zip(want(g)).foreach { case (q, w) =>
+        assert(math.abs(q - w) <= math.ulp(w) * 4, s"cap $cap, $parts partitions, $g: got $q want $w") } }
+    }
+  }
+
   test("exactQuantiles stores no RDD block") {
     val li = Tables.lineitem(spark, sfDir)
     val (_, events) = withEvents(Quantiles.exactQuantiles(li, "l_extendedprice", Seq(0.5, 0.9)))

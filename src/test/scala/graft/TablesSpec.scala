@@ -126,4 +126,12 @@ class TablesSpec extends SparkSpec {
       assert(jobs == 0, s"$q fired $jobs jobs while building")
     }
   }
+
+  test("building a Quantiles query fires one job") {
+    Seq("q_quantiles", "q_describe", "q_cut_qcut").foreach { q =>
+      spark.catalog.clearCache()
+      val (_, jobs) = jobsOf(SparkEntry.queries(q)(spark, sfDir))
+      assert(jobs == 1, s"$q fired $jobs jobs while building")
+    }
+  }
 }
