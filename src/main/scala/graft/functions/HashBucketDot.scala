@@ -9,9 +9,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
 /** `graft_hash_dot(hs, weights)`: Σ w[h mod |w|] over a token-hash
   * array — the zero-join inference sum behind
   * [[graft.operators.QualityModel.scoreInline]] (per-token weight
-  * lookup into a model vector riding as a plan literal; dividing by
-  * |hs| outside this kernel turns it into the normalized
-  * bag-of-words score).
+  * lookup into a dense model vector that ships once per executor as a
+  * [[Shipped]] broadcast, not as a plan literal; dividing by |hs|
+  * outside this kernel turns it into the normalized bag-of-words
+  * score).
   *
   * Codegen'd replacement for the interpreted
   * `aggregate(hs, 0.0, (acc, h) -> acc + coalesce(w_map[h % B], 0.0))`
@@ -22,13 +23,13 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
   * come from BigDecimal rounding, which never yields −0.0). Negative
   * remainders (impossible for the md5-fold hashes, which are
   * non-negative) skip, matching the sparse map's missing-key → 0. */
-case class HashBucketDot(child: Expression, weights: Seq[Double])
+case class HashBucketDot(child: Expression, weights: Shipped[Array[Double]])
   extends UnaryExpression {
 
-  // Seq for value equality (canonicalization/CSE); primitive array for
-  // the loops. An EMPTY weight vector returns 0.0 (the sparse map's
-  // every-key-missing behavior) instead of a modulo-by-zero crash.
-  @transient private lazy val wArr: Array[Double] = weights.toArray
+  // The weight vector, read by both eval paths. An EMPTY one returns
+  // 0.0 (the sparse map's every-key-missing behavior) instead of a
+  // modulo-by-zero crash.
+  @transient lazy val wArr: Array[Double] = weights.value
 
   override def dataType: DataType = DoubleType
   override def prettyName: String = "graft_hash_dot"
@@ -60,21 +61,23 @@ case class HashBucketDot(child: Expression, weights: Seq[Double])
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val wRef = ctx.addReferenceObj("weights", wArr, "double[]")
+    val selfRef = ctx.addReferenceObj("hashDot", this, classOf[HashBucketDot].getName)
     nullSafeCodeGen(ctx, ev, c => {
       val arr = ctx.freshName("arr")
+      val w = ctx.freshName("w")
       val i = ctx.freshName("i")
       val n = ctx.freshName("n")
       val idx = ctx.freshName("idx")
       val s = ctx.freshName("s")
       s"""
         |org.apache.spark.sql.catalyst.util.ArrayData $arr = $c;
+        |double[] $w = $selfRef.wArr();
         |double $s = 0.0;
         |int $n = $arr.numElements();
-        |for (int $i = 0; ${wArr.length} > 0 && $i < $n; $i++) {
+        |for (int $i = 0; $w.length > 0 && $i < $n; $i++) {
         |  if (!$arr.isNullAt($i)) {
-        |    long $idx = $arr.getLong($i) % ${wArr.length}L;
-        |    if ($idx >= 0) $s += $wRef[(int) $idx];
+        |    long $idx = $arr.getLong($i) % (long) $w.length;
+        |    if ($idx >= 0) $s += $w[(int) $idx];
         |  }
         |}
         |${ev.value} = $s;
@@ -87,12 +90,8 @@ case class HashBucketDot(child: Expression, weights: Seq[Double])
 }
 
 object HashBucketDot {
-  /** Column surface; registers the SQL function on the active session
-    * (idempotent), same contract as [[FeatureDot]]. */
-  def apply(hs: Column, weights: Seq[Double]): Column = {
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .foreach(GraftFunctions.register)
-    org.apache.spark.sql.functions.call_function("graft_hash_dot",
-      hs, org.apache.spark.sql.functions.typedLit(weights))
-  }
+  /** Column surface: ships `weights` once as a [[Shipped]] broadcast. */
+  def apply(hs: Column, weights: Array[Double]): Column =
+    Shipped.column(HashBucketDot(Shipped.expression(hs),
+      Shipped.doubles(weights, "weights")))
 }

@@ -10,21 +10,22 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** Row-local indexed-window coverage: the word positions of `text`
   * covered by any stride-1 `n`-word window whose md5 digest is in a
-  * plan-baked key set — the STATELESS form of the incremental
-  * substring purge's semi join, built for the streaming gate
-  * (StreamOps.windowPurgeGate) where a per-doc aggregation after a
-  * stream-static join would need unbounded state. One kernel pass per
-  * document (digests via [[TextKernels.shingleMd5Bins]] — byte-
-  * identical keys to the batch [[graft.operators.TextDedup
-  * .windowHashIndex]]), membership against a HashSet of 16-byte
-  * digests, coverage merged in a boolean run over the word count.
+  * key bank — the STATELESS form of the incremental substring purge's
+  * semi join, built for the streaming gate (StreamOps.windowPurgeGate)
+  * where a per-doc aggregation after a stream-static join would need
+  * unbounded state. One kernel pass per document (digests via
+  * [[TextKernels.shingleMd5Bins]] — byte-identical keys to the batch
+  * [[graft.operators.TextDedup.windowHashIndex]]), membership against a
+  * HashSet of 16-byte digests, coverage merged in a boolean run over
+  * the word count.
   *
-  * The key set rides in the task closure (addReferenceObj — the
-  * "parameters small, data huge" layout of graft_viterbi), so this
-  * serves BOUNDED window sets: curated boilerplate banks, a domain's
-  * license paragraphs, the hot slice of a corpus index. Corpus-scale
-  * indexes stay on the batch path (purgeAgainstIndex's bucketed semi
-  * join); the gate's caller enforces the bound at collect time. */
+  * The key bank ships once per executor as a [[Shipped]] broadcast of
+  * [[WindowKeys]], whose HashSet each executor builds once; the bank
+  * still lives in executor memory, so this serves BOUNDED window sets:
+  * curated boilerplate banks, a domain's license paragraphs, the hot
+  * slice of a corpus index. Corpus-scale indexes stay on the batch path
+  * (purgeAgainstIndex's bucketed semi join); the gate's caller enforces
+  * the bound at collect time. */
 object IndexedWindowKernels {
   def coveredPositions(text: UTF8String, n: Int,
       idx: java.util.HashSet[java.nio.ByteBuffer]): ArrayData = {
@@ -56,92 +57,49 @@ object IndexedWindowKernels {
   }
 }
 
-/** Value-equality wrapper for a bank of binary window keys. A bare
-  * `Seq[Array[Byte]]` constructor parameter compares arrays by
-  * REFERENCE under case-class/canonicalized equality, so two
-  * semantically identical gate expressions never compare equal
-  * (blocking Catalyst common-subexpression reuse), and a 2^20-element
-  * binary seq drags megabytes into every plan/explain string.
-  * Equality and hashCode here run over an order-insensitive 128-bit
-  * combined digest (per-key 64-bit content hash folded by XOR and by
-  * sum, plus the count) — collision odds are negligible for key banks
-  * of real size — and toString stays O(1). */
-final class ByteKeySet(val keys: IndexedSeq[Array[Byte]])
-    extends Serializable {
-  private val (dXor, dSum) = {
-    var x = 0L; var s = 0L
-    keys.foreach { k =>
-      // Full-width 64-bit content hash (FNV-1a over every byte, then a
-      // splitmix finalizer): each key contributes 64 bits of content
-      // entropy to the combined digest. Arrays.hashCode would cap a
-      // key's contribution at 32 bits, making two banks that differ in
-      // one 32-bit-colliding pair compare equal — and a false equality
-      // here lets Catalyst CSE substitute one purge gate for another.
-      var h = 0xcbf29ce484222325L
-      var i = 0
-      while (i < k.length) { h ^= k(i) & 0xffL; h *= 0x100000001b3L; i += 1 }
-      h ^= k.length.toLong
-      h = (h ^ (h >>> 30)) * 0xbf58476d1ce4e5b9L
-      h = (h ^ (h >>> 27)) * 0x94d049bb133111ebL
-      h ^= h >>> 31
-      x ^= h; s += h
-    }
-    (x, s)
+/** A bank of binary window keys, the payload of
+  * [[IndexedCoveredPositions]]. The keys are sorted on the driver so
+  * that banks with the same keys in any order have the same digest; the
+  * HashSet the kernel probes is built lazily on the broadcast value, so
+  * once per executor. */
+final class WindowKeys private (val keys: Array[Array[Byte]]) extends Serializable {
+  @transient lazy val set: java.util.HashSet[java.nio.ByteBuffer] = {
+    val s = new java.util.HashSet[java.nio.ByteBuffer](keys.length * 2)
+    keys.foreach(k => s.add(java.nio.ByteBuffer.wrap(k)))
+    s
   }
-  def size: Int = keys.size
-  // Sorted copy for the exact-compare fallback below: lexicographic
-  // unsigned byte order, length-then-content ties. Lazy — only built
-  // when a digest-equal comparison actually happens.
-  @transient private lazy val sortedKeys: Array[Array[Byte]] = {
-    val a = keys.toArray
-    java.util.Arrays.sort(a, new java.util.Comparator[Array[Byte]] {
+}
+
+object WindowKeys {
+  /** Sorts `keys` (unsigned lexicographic) and broadcasts them. */
+  def ship(keys: Seq[Array[Byte]]): Shipped[WindowKeys] = {
+    val sorted = keys.toArray
+    java.util.Arrays.sort(sorted, new java.util.Comparator[Array[Byte]] {
       def compare(x: Array[Byte], y: Array[Byte]): Int =
         java.util.Arrays.compareUnsigned(x, y)
     })
-    a
-  }
-  override def equals(o: Any): Boolean = o match {
-    case b: ByteKeySet =>
-      // Digest mismatch decides fast (the overwhelmingly common path);
-      // on a digest MATCH fall back to comparing the sorted key arrays
-      // so equality is exact — a digest collision between two different
-      // banks would otherwise let Catalyst CSE silently substitute one
-      // purge gate's key set for another (wrong output, no error). The
-      // fallback is cheap because digest-equal is almost always true
-      // equality, and hashCode/toString stay O(1).
-      b.size == size && b.dXor == dXor && b.dSum == dSum && {
-        val sa = sortedKeys; val sb = b.sortedKeys
-        var i = 0
-        var eq = true
-        while (eq && i < sa.length) {
-          eq = java.util.Arrays.equals(sa(i), sb(i)); i += 1
-        }
-        eq
+    Shipped(new WindowKeys(sorted), s"windowKeys[${sorted.length}]") { md =>
+      sorted.foreach { k =>
+        md.update(java.nio.ByteBuffer.allocate(4).putInt(k.length).array())
+        md.update(k)
       }
-    case _ => false
+    }
   }
-  override def hashCode: Int = (dXor ^ dSum ^ size.toLong).toInt
-  override def toString: String =
-    f"ByteKeySet(n=$size%d, digest=${dXor ^ dSum}%016x)"
 }
 
-/** `graft_indexed_positions(text, n, keys_array_literal)`: sorted
-  * distinct word positions of `text` covered by an indexed `n`-word
-  * window (see [[IndexedWindowKernels.coveredPositions]]). */
+/** `graft_indexed_positions`: sorted distinct word positions of `text`
+  * covered by an indexed `n`-word window (see
+  * [[IndexedWindowKernels.coveredPositions]]) of a shipped
+  * [[WindowKeys]] bank. The SQL form,
+  * `graft_indexed_positions(text, n, keys_array_literal)`, ships the
+  * literal's keys when the call is analyzed. */
 case class IndexedCoveredPositions(child: Expression, n: Int,
-    keySet: ByteKeySet) extends UnaryExpression {
+    keys: Shipped[WindowKeys]) extends UnaryExpression {
 
   require(n >= 1, s"graft_indexed_positions: n must be >= 1, got $n")
 
-  // ByteBuffer is not java-serializable, so the SET stays transient
-  // (rebuilt lazily on each deserialized copy from the serializable
-  // byte-array keys) and codegen references THIS expression instance,
-  // not the set.
-  @transient private lazy val jset: java.util.HashSet[java.nio.ByteBuffer] = {
-    val s = new java.util.HashSet[java.nio.ByteBuffer](keySet.size * 2)
-    keySet.keys.foreach(k => s.add(java.nio.ByteBuffer.wrap(k)))
-    s
-  }
+  @transient private lazy val jset: java.util.HashSet[java.nio.ByteBuffer] =
+    keys.value.set
 
   /** Kernel entry used by both eval paths. */
   def covered(text: UTF8String): ArrayData =
@@ -168,16 +126,7 @@ case class IndexedCoveredPositions(child: Expression, n: Int,
 }
 
 object IndexedCoveredPositions {
-  /** Column surface; registers the SQL function on the active session
-    * (idempotent), same contract as [[ViterbiPieces]]. */
-  def apply(text: Column, n: Int, keys: Seq[Array[Byte]]): Column = {
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .foreach(GraftFunctions.register)
-    org.apache.spark.sql.functions.call_function("graft_indexed_positions",
-      text, org.apache.spark.sql.functions.lit(n),
-      org.apache.spark.sql.functions.typedLit(keys))
-  }
-
-  def apply(child: Expression, n: Int, keys: Seq[Array[Byte]]): IndexedCoveredPositions =
-    IndexedCoveredPositions(child, n, new ByteKeySet(keys.toIndexedSeq))
+  /** Column surface over a bank shipped with [[WindowKeys.ship]]. */
+  def apply(text: Column, n: Int, keys: Shipped[WindowKeys]): Column =
+    Shipped.column(IndexedCoveredPositions(Shipped.expression(text), n, keys))
 }

@@ -371,7 +371,7 @@ object GraftFunctions {
             case other => throw new IllegalArgumentException(
               s"graft_hash_dot weights must be an array<double> literal, got $other")
           }
-          HashBucketDot(args.head, ws)
+          HashBucketDot(args.head, Shipped.doubles(ws, "weights"))
         }),
       (
         FunctionIdentifier("collect_capped"),
@@ -485,8 +485,7 @@ object GraftFunctions {
             case other => throw new IllegalArgumentException(
               s"graft_indexed_positions keys must be an array<binary> literal, got $other")
           }
-          IndexedCoveredPositions(args.head, n,
-            new ByteKeySet(keys.toIndexedSeq))
+          IndexedCoveredPositions(args.head, n, WindowKeys.ship(keys))
         }),
       (
         FunctionIdentifier("graft_wordpiece"),

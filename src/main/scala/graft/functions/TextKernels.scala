@@ -39,6 +39,16 @@ object TextKernels {
   private val digests: ThreadLocal[MessageDigest] =
     ThreadLocal.withInitial(() => MessageDigest.getInstance("MD5"))
 
+  /** The first 28 bits of the md5 of `bytes`: the SQL value
+    * `conv(substring(md5(x), 1, 7), 16, 10)`. */
+  def md5Fold28(bytes: Array[Byte]): Long = {
+    val md = digests.get()
+    md.reset()
+    val d = md.digest(bytes)
+    ((d(0) & 0xffL) << 20) | ((d(1) & 0xffL) << 12) |
+      ((d(2) & 0xffL) << 4) | ((d(3) & 0xffL) >> 4)
+  }
+
   /** k minhash values over the word n-gram shingles of `text`:
     * min over shingles of (h0(shingle) * a_i + b_i) mod P, where h0 is
     * the first 28 bits of the shingle's md5 — exactly

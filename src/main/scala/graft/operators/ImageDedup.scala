@@ -141,7 +141,10 @@ object ImageDedup {
     if (color == 3 && palette == null) return None
     val stride = w * channels
     val expected = h.toLong * (stride + 1)
-    if (expected > Int.MaxValue) return None
+    // DEFLATE expands at most 1032:1, so a header that declares more
+    // pixel bytes than the IDAT payload can inflate to is corrupt;
+    // refuse it before the allocation, not after
+    if (expected > Int.MaxValue || expected > 1032L * idat.size + 1024) return None
     // inflate the concatenated IDAT payload to exactly h*(stride+1) bytes
     val raw = new Array[Byte](expected.toInt)
     val inf = new java.util.zip.Inflater()

@@ -417,8 +417,9 @@ object QualityModel {
       .withColumn("gap", abs(col("frac_pos") - col("midpoint")))
   }
 
-  /** Map-only scoring COLUMN: the weight vector rides along as a dense
-    * plan literal (O(B)) and the score is one codegen'd
+  /** Map-only scoring COLUMN: the dense weight vector (O(B)) ships once
+    * per executor as a broadcast variable ([[graft.functions.Shipped]]),
+    * not as a plan literal, and the score is one codegen'd
     * [[graft.functions.HashBucketDot]] pass over the token-hash
     * array — no explode, no shuffle, no state. This is the
     * streaming-safe form (stateless per-row projection) and the
@@ -430,7 +431,7 @@ object QualityModel {
   def scoreInline(textCol: Column, model: Model): Column = {
     val hs = graft.functions.ShingleHashes(textCol, 1, 7, dedup = false)
     val s = round(
-      graft.functions.HashBucketDot(hs, (0 until model.buckets).map(b =>
+      graft.functions.HashBucketDot(hs, Array.tabulate(model.buckets)(b =>
         model.weights.getOrElse(b.toLong, 0.0))) /
         size(hs).cast("double") + lit(model.bias), 9)
     // zero-token doc → 0.0/0 = NaN score; surface it as null (classify

@@ -114,21 +114,31 @@ object Sketches {
     words
   }
 
-  /** Membership test COLUMN: the packed filter rides along as a
-    * plan-time array literal and each of the `hashes` probes is one
-    * element_at + mask — no explode, no join, no state. This is the
-    * streaming-safe form (stateless per-row projection) and equals
-    * [[bloomMightContain]] bit-for-bit. */
+  /** Membership test COLUMN: the `graft_bloom_probe` kernel
+    * ([[graft.functions.BloomProbe]]) over the packed words, which ship
+    * once per executor as a broadcast variable, not as a plan literal.
+    * One digest and `hashes` word lookups per row — no explode, no join,
+    * no state. This is the streaming-safe form (stateless per-row
+    * projection) and equals [[bloomMightContain]] bit-for-bit. Each call
+    * broadcasts `packed` once; build the column once and reuse it. */
   def mightContainInline(key: Column, packed: Array[Long], bits: Int,
       hashes: Int): Column = {
-    val w = typedLit(packed.toSeq)
-    TextDedup.mixConsts(hashes)
-      .map { case (a, b) =>
-        val p = bucket(key, a, b, bits)
-        element_at(w, (p / 64).cast("int") + 1)
-          .bitwiseAND(call_function("shiftleft", lit(1L), (p % 64).cast("int"))) =!= 0L
-      }
-      .reduce(_ && _)
+    requireFilter(packed, bits, hashes, "mightContainInline")
+    graft.functions.BloomProbe(key,
+      graft.functions.Shipped.longs(packed, "bloom"), bits, hashes)
+  }
+
+  /** The packed-filter preconditions of the inline probe: `bits > 0`,
+    * `hashes >= 1` and exactly `(bits + 63) / 64` words, so a short
+    * array fails at the call, not inside a task at the first row. */
+  private[graft] def requireFilter(packed: Array[Long], bits: Int,
+      hashes: Int, caller: String): Unit = {
+    require(bits > 0, s"$caller: the Bloom filter needs bits > 0, got $bits")
+    require(hashes >= 1, s"$caller: the Bloom filter needs hashes >= 1, got $hashes")
+    val words = (bits + 63L) / 64
+    require(packed != null && packed.length == words,
+      s"$caller: a $bits-bit Bloom filter packs into $words words, got " +
+        s"${if (packed == null) "null" else packed.length.toString}")
   }
 
   /** EXACT frequent items (support ≥ ⌈φ·N⌉) via the two-pass

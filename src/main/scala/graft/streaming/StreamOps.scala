@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import graft.functions.{BandBank, NearDupProbe, Shipped, WindowKeys}
+
 /** Streaming variants of the batch operators (engine extension — the
   * reference has no streaming surface at all, SURVEY §2.10): the same
   * declarative plans run incrementally under Structured Streaming with
@@ -121,7 +123,9 @@ object StreamOps {
     * (idCol, corpus_id, jaccard ≥ threshold) once per shared band;
     * consumers collapse repeats in their bounded sink (cross-batch
     * distinct would need unbounded state, same policy as the
-    * candidates-only form). */
+    * candidates-only form). This join form serves an index of any size
+    * and reads it in every micro-batch; [[ingestFrontDoorV2]] emits the
+    * same rows from a bounded index collected once, with no join. */
   def streamingNearDupVerified(stream: DataFrame, index: DataFrame,
       idCol: String, textCol: String, threshold: Double,
       shingleLen: Int = 3, numHashes: Int = 16, bandRows: Int = 4): DataFrame = {
@@ -195,8 +199,9 @@ object StreamOps {
 
   /** Streaming quality gate: score each arriving document with a
     * batch-trained hashed-LR model ([[graft.operators.QualityModel]])
-    * and flag whether it clears `threshold`. The weight vector rides as
-    * an O(B) map literal inside a stateless per-row projection
+    * and flag whether it clears `threshold`. The O(B) dense weight
+    * vector ships once per executor as a broadcast variable and a
+    * stateless per-row projection reads it
     * ([[graft.operators.QualityModel.scoreInline]]) — no shuffle, no
     * state, no watermark: the train-offline / filter-online split a
     * production ingest pipeline uses.
@@ -218,8 +223,9 @@ object StreamOps {
   /** Cross-snapshot dedup at ingest: probe each arriving document's
     * content hash against a Bloom filter built offline over the
     * existing corpus ([[graft.operators.Sketches.bloomBuild]] →
-    * `packBits`), applied as a STATELESS projection — the filter rides
-    * along as a plan-time word-array literal
+    * `packBits`), applied as a STATELESS projection — the packed words
+    * ship once per executor as a broadcast variable that the
+    * `graft_bloom_probe` kernel reads
     * ([[graft.operators.Sketches.mightContainInline]]), so there is no
     * stream-static join, no shuffle, no state store. No false
     * negatives: a `keep = false` row is guaranteed-new; duplicates
@@ -232,54 +238,36 @@ object StreamOps {
         hashes).as("might_dup"))
       .withColumn("keep", !col("might_dup"))
 
-  /** Streaming window-hash purge gate: every stride-1 `windowWords`
-    * window of an incoming document whose CONTENT is in the stored
-    * window-hash index is removed and the text rebuilt — the ONLINE
-    * form of [[graft.operators.TextDedup.purgeAgainstIndex]], as a
-    * STATELESS projection (no stream-static join: a per-doc
-    * re-aggregation of joined window rows would need unbounded
-    * streaming state, so the whole decision runs row-locally inside
-    * one kernel call — `graft_indexed_positions` computes the covered
-    * positions against the plan-baked key set, byte-identical md5
-    * window keys to the batch index). Output schema matches
-    * purgeAgainstIndex: (id, n_words, n_removed, text_clean);
-    * StreamingSpec pins the MemoryStream run equal to the batch
-    * operator row for row.
-    *
-    * The key set ships in the task closure, so the gate serves
-    * BOUNDED window banks (curated boilerplate, a domain's license
-    * paragraphs, the hot slice of the corpus index) — `maxIndexRows`
-    * (default 2^20 ≈ 16 MB of digests) fails fast on an index that
-    * belongs on the batch path instead. */
-  /** Collect a BOUNDED window-hash index into the plan-baked key set
-    * the stateless purge gate ships in its task closure; fails fast on
-    * schema drift or an index that belongs on the batch path. */
-  private def purgeGateKeys(winIndex: DataFrame,
-      maxIndexRows: Int): Seq[Array[Byte]] = {
+  /** Collect a BOUNDED window-hash index into the key bank the
+    * stateless purge gate ships to its executors; fails fast, naming
+    * `caller`, on schema drift or an index that belongs on the batch
+    * path. */
+  private def purgeGateKeys(winIndex: DataFrame, maxIndexRows: Int,
+      caller: String): Shipped[WindowKeys] = {
     // limit(maxIndexRows + 1) below would overflow to a negative limit
     // for Int.MaxValue and throw an unrelated AnalysisException instead
     // of the intended fail-fast message.
     require(maxIndexRows > 0 && maxIndexRows < Int.MaxValue,
-      s"windowPurgeGate: maxIndexRows must be in [1, ${Int.MaxValue - 1}], " +
+      s"$caller: maxIndexRows must be in [1, ${Int.MaxValue - 1}], " +
         s"got $maxIndexRows")
     require(winIndex.columns.contains("__h") &&
       winIndex.schema("__h").dataType == org.apache.spark.sql.types.BinaryType,
-      "windowPurgeGate: winIndex must have a BINARY __h column " +
+      s"$caller: winIndex must have a BINARY __h column " +
         s"(windowHashIndex output); got ${winIndex.columns.mkString("(", ", ", ")")}")
     val keys = winIndex.select(col("__h")).limit(maxIndexRows + 1)
       .collect().map(_.getAs[Array[Byte]](0)).toSeq
     require(keys.size <= maxIndexRows,
-      s"windowPurgeGate: index exceeds $maxIndexRows windows — a " +
+      s"$caller: index exceeds $maxIndexRows windows — a " +
         "corpus-scale index belongs on the batch path (purgeAgainstIndex)")
-    keys
+    WindowKeys.ship(keys)
   }
 
   /** The stateless purge projection shared by [[windowPurgeGate]] and
     * [[ingestFrontDoorV2]]: one kernel call per row computes the
-    * covered positions against the plan-baked key set; `keep` columns
+    * covered positions against the shipped key bank; `keep` columns
     * ride through ahead of (n_words, n_removed, text_clean). */
   private def purgeProjection(df: DataFrame, textCol: String,
-      windowWords: Int, keys: Seq[Array[Byte]],
+      windowWords: Int, keys: Shipped[WindowKeys],
       keep: Seq[org.apache.spark.sql.Column]): DataFrame =
     df.withColumn("__rmv", graft.functions.IndexedCoveredPositions(
         col(textCol), windowWords, keys))
@@ -291,16 +279,63 @@ object StreamOps {
             col("__rmv")))
           .as("text_clean")): _*)
 
+  /** Streaming window-hash purge gate: every stride-1 `windowWords`
+    * window of an incoming document whose CONTENT is in the stored
+    * window-hash index is removed and the text rebuilt — the ONLINE
+    * form of [[graft.operators.TextDedup.purgeAgainstIndex]], as a
+    * STATELESS projection (no stream-static join: a per-doc
+    * re-aggregation of joined window rows would need unbounded
+    * streaming state, so the whole decision runs row-locally inside
+    * one kernel call — `graft_indexed_positions` computes the covered
+    * positions against the shipped key bank, byte-identical md5
+    * window keys to the batch index). Output schema matches
+    * purgeAgainstIndex: (id, n_words, n_removed, text_clean);
+    * StreamingSpec pins the MemoryStream run equal to the batch
+    * operator row for row.
+    *
+    * The index is collected once, at the call, and its keys ship once
+    * per executor as a broadcast variable whose HashSet each executor
+    * builds once; the bank lives in executor memory, so the gate serves
+    * BOUNDED window banks (curated boilerplate, a domain's license
+    * paragraphs, the hot slice of the corpus index) — `maxIndexRows`
+    * (default 2^20 ≈ 16 MB of digests) fails fast on an index that
+    * belongs on the batch path instead. */
   def windowPurgeGate(stream: DataFrame, winIndex: DataFrame,
       idCol: String, textCol: String, windowWords: Int = 4,
       maxIndexRows: Int = 1 << 20): DataFrame = {
-    val keys = purgeGateKeys(winIndex, maxIndexRows)
+    val keys = purgeGateKeys(winIndex, maxIndexRows, "windowPurgeGate")
     purgeProjection(stream, textCol, windowWords, keys, Seq(col(idCol)))
   }
 
+  /** Collect a BOUNDED [[nearDupIndex]] into the band bank the front
+    * door's `graft_near_dup_probe` ships to its executors; fails fast,
+    * naming `caller`, on schema drift or more than `maxIndexRows`
+    * rows. */
+  private def nearDupBank(index: DataFrame, maxIndexRows: Int,
+      caller: String): Shipped[BandBank] = {
+    import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType, StringType}
+    val types = index.schema.fields.map(f => f.name -> f.dataType).toMap
+    require(types.get("band").contains(IntegerType) &&
+      types.get("sig").contains(StringType) && types.contains("corpus_id") &&
+      types.get("corpus_hs").exists {
+        case ArrayType(LongType, _) => true
+        case _ => false
+      },
+      s"$caller: index must have (band int, sig string, corpus_id, " +
+        s"corpus_hs array<bigint>) columns (nearDupIndex output); got " +
+        index.schema.simpleString)
+    val rows = index.select("band", "sig", "corpus_id", "corpus_hs")
+      .limit(maxIndexRows + 1).collect().toSeq
+    require(rows.size <= maxIndexRows,
+      s"$caller: near-dup index exceeds $maxIndexRows rows — a " +
+        "corpus-scale index belongs on the join path (streamingNearDupVerified)")
+    BandBank.ship(rows, types("corpus_id"))
+  }
+
   /** Stages 1+2 of [[ingestFrontDoorV2]] — the stateless exact-dup
-    * (Bloom plan literal) and batch-trained-quality gates
-    * (scoreInline's null-on-empty contract applies). */
+    * (`graft_bloom_probe` over the broadcast filter words) and
+    * batch-trained-quality gates (scoreInline's null-on-empty contract
+    * applies). */
   private def frontDoorGates(stream: DataFrame, textCol: String,
       bloomPacked: Array[Long], bloomBits: Int, bloomHashes: Int,
       model: graft.operators.QualityModel.Model,
@@ -539,18 +574,21 @@ object StreamOps {
     * stage, chaining the pieces a production crawl-ingest pipeline runs
     * on every arriving document:
     *
-    *   1. [[streamingBloomDedup]] form: exact-corpus dup gate — the
-    *      offline Bloom filter rides as a plan literal, stateless (the
-    *      streaming stand-in for the funnel's s1 exact stage);
+    *   1. [[streamingBloomDedup]] form: exact-corpus dup gate, stateless
+    *      (the streaming stand-in for the funnel's s1 exact stage);
     *   2. [[streamingQualityGate]] form: batch-trained hashed-LR score,
     *      stateless (train offline / filter online). scoreInline's
     *      null-on-empty contract applies: a zero-token document scores
     *      null, and `null >= threshold` is null, so the gate DROPS
     *      empty documents (under the pre-r15 NaN scoring they passed —
     *      NaN sorts above every number);
-    *   3. [[streamingNearDupVerified]]: MinHash-band candidates against
-    *      the static corpus index, Jaccard-verified inline — emitted as
-    *      a SIDE OUTPUT (adjudication queue). Pairs cannot statelessly
+    *   3. verified near-dup candidates against the corpus index, emitted
+    *      as a SIDE OUTPUT (adjudication queue): the
+    *      `graft_near_dup_probe` kernel looks each document's MinHash
+    *      bands up in the index's band bank and verifies exact Jaccard
+    *      in the same pass — the rows of [[streamingNearDupVerified]]'s
+    *      band join (one per shared band, `doc_id != corpus_id`,
+    *      jaccard ≥ threshold) with no join. Pairs cannot statelessly
     *      collapse to a per-doc drop flag (any-band-matched needs a
     *      per-doc aggregation = watermark state), and the exact-dup
     *      class is already caught by the Bloom gate, so near-dups are
@@ -559,7 +597,7 @@ object StreamOps {
     *   4. window-hash purge against the stored window index (the
     *      funnel's idx-purge stage, as the stateless [[windowPurgeGate]]
     *      kernel: the covered-position decision runs row-locally against
-    *      the plan-baked key set, byte-identical md5 keys to the batch
+    *      the shipped key bank, byte-identical md5 keys to the batch
     *      index); an empty index purges nothing (n_removed 0, text_clean
     *      = text);
     *   5. per-source token budget over the CLEANED token counts
@@ -567,6 +605,19 @@ object StreamOps {
     *      [[streamingTokenBudget]] recurrence inlined so the quality
     *      score rides through — one long of state per source, no
     *      watermark.
+    *
+    * Static state is built ONCE per call and shipped as broadcast
+    * variables, not plan literals: the Bloom words, the model's dense
+    * weights, the window key bank and the near-dup band bank. `index`
+    * and `winIndex` are collected at the call, each bounded by
+    * `maxIndexRows` (the near-dup index has 4 rows per stored doc, the
+    * window bank about one per stored word, so a corpus whose window
+    * bank passes the bound passes this one too); refreshing either
+    * means a new call. So each micro-batch runs one job per query, with
+    * no broadcast exchange, and a task carries only the broadcast
+    * handles. Preconditions fail at the call: `bloomBits > 0`,
+    * `bloomHashes >= 1`, `bloomPacked.length == (bloomBits + 63) / 64`,
+    * and the bounds and schemas of both indexes.
     *
     * Two DOCUMENTED deviations from the batch funnel's semantics:
     * (1) stored-index near-dup matches are FLAGGED, not dropped — they
@@ -581,14 +632,14 @@ object StreamOps {
     *
     * Returns (admitted, nearDupCandidates); `admitted` carries
     * (source, id, tokens, n_removed, quality, text_clean, admitted) so
-    * the purged text itself flows to the sink. Both are lazily-composed
-    * streaming frames off the same source — starting both sinks runs
-    * two queries over the input (MemoryStream/Kafka replay this fine).
-    * Every stage is a DataFrame transform, so the SAME call backfills a
-    * batch frame — StreamingSpec pins stream == batch and ties the
-    * purge stage to [[graft.operators.TextDedup.purgeAgainstIndex]] row
-    * for row. `maxIndexRows` bounds the plan-baked window bank exactly
-    * as in [[windowPurgeGate]]. */
+    * the purged text itself flows to the sink, and the candidates are
+    * (id, corpus_id, jaccard). Both are lazily-composed streaming frames
+    * off the same source — starting both sinks runs two queries over
+    * the input (MemoryStream/Kafka replay this fine). Every stage is a
+    * DataFrame transform, so the SAME call backfills a batch frame —
+    * StreamingSpec pins stream == batch, ties the purge stage to
+    * [[graft.operators.TextDedup.purgeAgainstIndex]] and the candidates
+    * to [[streamingNearDupVerified]] row for row. */
   def ingestFrontDoorV2(
       stream: DataFrame,             // (idCol, sourceCol, textCol)
       idCol: String, sourceCol: String, textCol: String,
@@ -601,14 +652,22 @@ object StreamOps {
       windowWords: Int = 4,
       maxIndexRows: Int = 1 << 20): (DataFrame, DataFrame) = {
     import stream.sparkSession.implicits._
-    val keys = purgeGateKeys(winIndex, maxIndexRows)
+    val caller = "ingestFrontDoorV2"
+    graft.operators.Sketches.requireFilter(bloomPacked, bloomBits, bloomHashes, caller)
+    val keys = purgeGateKeys(winIndex, maxIndexRows, caller)
+    val bank = nearDupBank(index, maxIndexRows, caller)
     // stages 1+2: stateless gates, one projection pass (shared helper)
     val gated = frontDoorGates(stream, textCol, bloomPacked, bloomBits,
       bloomHashes, model, qualityThreshold)
-    // stage 3 (side output): verified near-dup candidates vs the index
-    val candidates = streamingNearDupVerified(
-      gated.select(col(idCol), col(textCol)), index, idCol, textCol,
-      nearDupThreshold)
+    // stage 3 (side output): verified near-dup candidates, probed
+    // row-locally against the band bank (nearDupIndex's default
+    // shingle/hash/band shape)
+    val candidates = gated
+      .select(col(idCol), explode(NearDupProbe(col(textCol), bank,
+        index.schema("corpus_id").dataType, 3, 16, 4, nearDupThreshold)).as("__m"))
+      .filter(col(idCol) =!= col("__m.corpus_id"))
+      .select(col(idCol), col("__m.corpus_id").as("corpus_id"),
+        col("__m.jaccard").as("jaccard"))
     // stage 4: stateless window-hash purge against the stored index
     // (the windowPurgeGate projection, source/quality riding through)
     val purged = purgeProjection(gated, textCol, windowWords, keys,

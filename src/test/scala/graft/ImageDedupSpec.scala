@@ -253,6 +253,36 @@ class ImageDedupSpec extends SparkSpec {
     }
   }
 
+  test("a PNG declaring more pixels than its IDAT can inflate to is refused before allocating") {
+    // 16384 x 16384 RGBA, 8-bit: h * (stride + 1) = 1025 MiB of pixel rows,
+    // against a 12-byte zlib stream (100 zero bytes)
+    def chunk(typ: String, data: Array[Byte]): Array[Byte] = {
+      val b = java.nio.ByteBuffer.allocate(12 + data.length)
+      b.putInt(data.length).put(typ.getBytes("US-ASCII")).put(data).putInt(0)
+      b.array()
+    }
+    val ihdr = java.nio.ByteBuffer.allocate(13)
+      .putInt(16384).putInt(16384).put(8.toByte).put(6.toByte)
+      .put(0.toByte).put(0.toByte).put(0.toByte).array()
+    val deflater = new java.util.zip.Deflater()
+    deflater.setInput(new Array[Byte](100)); deflater.finish()
+    val zbuf = new Array[Byte](64)
+    val idat = java.util.Arrays.copyOf(zbuf, deflater.deflate(zbuf))
+    deflater.end()
+    val png = Array(0x89, 'P', 'N', 'G', 0x0d, 0x0a, 0x1a, 0x0a).map(_.toByte) ++
+      chunk("IHDR", ihdr) ++ chunk("IDAT", idat) ++ chunk("IEND", Array.empty)
+    assert(png.length == 69)
+    val mx = java.lang.management.ManagementFactory.getThreadMXBean
+      .asInstanceOf[com.sun.management.ThreadMXBean]
+    val tid = Thread.currentThread().getId
+    ImageDedup.decodePngGray(png) // warm the decode path
+    val before = mx.getThreadAllocatedBytes(tid)
+    val decoded = ImageDedup.decodePngGray(png)
+    val allocated = mx.getThreadAllocatedBytes(tid) - before
+    assert(decoded.isEmpty)
+    assert(allocated < (4L << 20), s"decode allocated $allocated bytes")
+  }
+
   test("bmpFixture round-trips through the decoder (incl. row padding)") {
     for (w <- Seq(1, 2, 9, 10); h <- Seq(1, 8)) {
       val bytes = ImageDedup.bmpFixture(w, h, pix(7))

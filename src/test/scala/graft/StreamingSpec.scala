@@ -1295,4 +1295,185 @@ class StreamingSpec extends SparkSpec {
     assert(interrupted.contains(("k1", 200L, 1L, 2.0, 2L)),
       s"k1 should keep the pre-restart winner with n=2: $interrupted")
   }
+
+  // ---- front door: shipped static state ------------------------------
+
+  /** A front door whose gates admit every non-empty document: an empty
+    * Bloom filter and a quality threshold below every score. */
+  private def openFrontDoor(df: org.apache.spark.sql.DataFrame,
+      index: org.apache.spark.sql.DataFrame, threshold: Double,
+      winIndex: org.apache.spark.sql.DataFrame, maxIndexRows: Int = 1 << 20) = {
+    val bits = 1 << 12
+    StreamOps.ingestFrontDoorV2(df, "doc_id", "source", "text",
+      new Array[Long](bits / 64), bits, 4,
+      graft.operators.QualityModel.Model(Map.empty, 0.0, 16), -1.0,
+      index, threshold, winIndex, budgetPerSource = Long.MaxValue / 4,
+      maxIndexRows = maxIndexRows)
+  }
+
+  test("front door candidates equal the streamingNearDupVerified join row for row") {
+    import spark.implicits._
+    import graft.operators.TextDedup
+    val base = "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu"
+    val corpus = Seq(
+      (100L, base),
+      (200L, "p q r s t u v w x y z aa"),
+      (300L, base.replace("mu", "nu"))).toDF("doc_id", "text")
+    val arrivals = Seq[(Long, String, String)](
+      (1L, "a", base),                                    // every band, two corpus docs
+      (2L, "a", base.replace("alpha", "omega")),          // some bands of 100 and 300
+      (100L, "a", base),                                  // self-id pair with 100
+      (3L, "a", null),                                    // null text
+      (4L, "a", "p q"),                                   // shorter than a shingle
+      (5L, "a", "entirely novel words only here today ok"))
+      .toDF("doc_id", "source", "text")
+    val noWindows = TextDedup.windowHashIndex(corpus.limit(0), "text", 4)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("doc_id", "corpus_id", "jaccard").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq.sorted
+    def joinForm(index: org.apache.spark.sql.DataFrame, t: Double) =
+      rows(StreamOps.streamingNearDupVerified(arrivals.select("doc_id", "text"),
+        index, "doc_id", "text", t))
+    val index = StreamOps.nearDupIndex(corpus, "doc_id", "text").cache()
+    try {
+      val all = joinForm(index, 0.0)
+      // the corpus shapes the cases: doc 1 matches 100 in every band,
+      // doc 2 in some; doc 100 keeps its pair with 300, not with itself
+      assert(all.count(t => t._1 == 1L && t._2 == 100L) == 4, s"$all")
+      val partial = all.filter(t => t._1 == 2L && t._2 == 100L)
+      assert(partial.nonEmpty && partial.size < 4, s"$all")
+      assert(!all.exists(t => t._1 == 100L && t._2 == 100L), s"$all")
+      assert(all.exists(t => t._1 == 100L && t._2 == 300L), s"$all")
+      // at 0, and exactly at doc 2's Jaccard with 100 (kept: >=)
+      for (t <- Seq(0.0, partial.head._3, 0.99)) {
+        val probe = rows(openFrontDoor(arrivals, index, t, noWindows)._2)
+        assert(probe == joinForm(index, t), s"threshold $t")
+      }
+      assert(rows(openFrontDoor(arrivals, index, partial.head._3, noWindows)._2)
+        .exists(t => t._1 == 2L && t._2 == 100L))
+      // an empty index gives no candidates on either side
+      val empty = StreamOps.nearDupIndex(corpus.limit(0), "doc_id", "text")
+      assert(rows(openFrontDoor(arrivals, empty, 0.0, noWindows)._2).isEmpty)
+      assert(joinForm(empty, 0.0).isEmpty)
+      // 12 index rows against a bound of 5 fail at the call
+      val e = intercept[IllegalArgumentException] {
+        openFrontDoor(arrivals, index, 0.5, noWindows, maxIndexRows = 5)
+      }
+      assert(e.getMessage.contains("ingestFrontDoorV2") &&
+        e.getMessage.contains("near-dup index"), e.getMessage)
+    } finally index.unpersist()
+  }
+
+  test("window-bank refusals name the operator that was called") {
+    import spark.implicits._
+    val docs = Seq((1L, "a", "a b c d e f")).toDF("doc_id", "source", "text")
+    val winIndex = graft.operators.TextDedup.windowHashIndex(docs, "text", 4) // 3 keys
+    val gate = intercept[IllegalArgumentException] {
+      StreamOps.windowPurgeGate(docs, winIndex, "doc_id", "text", maxIndexRows = 2)
+    }
+    assert(gate.getMessage.contains("windowPurgeGate: index exceeds 2 windows"),
+      gate.getMessage)
+    val door = intercept[IllegalArgumentException] {
+      openFrontDoor(docs, StreamOps.nearDupIndex(docs, "doc_id", "text"), 0.5,
+        winIndex, maxIndexRows = 2)
+    }
+    assert(door.getMessage.contains("ingestFrontDoorV2: index exceeds 2 windows"),
+      door.getMessage)
+  }
+
+  // every refusal of the Bloom gate's preconditions, at both entry points
+  for ((what, words, bits, hashes) <- Seq(
+      ("bits = 0", 0, 0, 4),
+      ("hashes = 0", 1, 64, 0),
+      ("a short packed array", 4, 1 << 12, 4),
+      ("a long packed array", 65, 1 << 12, 4))) {
+    test(s"mightContainInline refuses $what at the call") {
+      val e = intercept[IllegalArgumentException] {
+        graft.operators.Sketches.mightContainInline(col("k"),
+          new Array[Long](words), bits, hashes)
+      }
+      assert(e.getMessage.startsWith("requirement failed: mightContainInline:"),
+        e.getMessage)
+    }
+    test(s"ingestFrontDoorV2 refuses $what at the call") {
+      import spark.implicits._
+      val docs = Seq((1L, "a", "x y z w")).toDF("doc_id", "source", "text")
+      val e = intercept[IllegalArgumentException] {
+        StreamOps.ingestFrontDoorV2(docs, "doc_id", "source", "text",
+          new Array[Long](words), bits, hashes,
+          graft.operators.QualityModel.Model(Map.empty, 0.0, 16), 0.5,
+          StreamOps.nearDupIndex(docs, "doc_id", "text"), 0.5,
+          graft.operators.TextDedup.windowHashIndex(docs, "text", 4), 100L)
+      }
+      assert(e.getMessage.startsWith("requirement failed: ingestFrontDoorV2:"),
+        e.getMessage)
+    }
+  }
+
+  test("front door: one job per query per micro-batch, plans do not grow with the payloads") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    import graft.operators.{Sketches, TextDedup}
+    import org.apache.spark.scheduler.SparkListenerJobStart
+    // 120 stored docs of 200 distinct words: 2^18-bit filter, a window
+    // bank of ~23k keys, a near-dup index of 480 rows
+    val corpus = (0 until 120).map { d =>
+      (d.toLong, (0 until 200).map(w => s"w${d}_$w").mkString(" "))
+    }.toDF("doc_id", "text")
+    val bits = 1 << 18
+    val packed = Sketches.packBits(Sketches.bloomBuild(corpus, "text", bits, 4), bits)
+    val index = StreamOps.nearDupIndex(corpus, "doc_id", "text").cache()
+    val winIndex = TextDedup.windowHashIndex(corpus, "text", 4).cache()
+    assert(winIndex.count() >= 20000)
+    val model = graft.operators.QualityModel.Model(
+      (0L until 4096L).map(b => b -> (b % 7 - 3) / 10.0).toMap, 0.0, 4096)
+    val in = MemoryStream[(Long, String, String)]
+    val (adm, cands) = StreamOps.ingestFrontDoorV2(
+      in.toDF().toDF("doc_id", "source", "text"), "doc_id", "source", "text",
+      packed, bits, 4, model, -1.0, index, 0.5, winIndex, Long.MaxValue / 4)
+    val qa = adm.writeStream.format("memory").queryName("fd_budget_adm")
+      .outputMode("append").start()
+    val qc = cands.writeStream.format("memory").queryName("fd_budget_cands")
+      .outputMode("append").start()
+    try {
+      // each batch: 5 near-dups of stored docs (last word changed) and
+      // 15 new docs
+      val texts = corpus.collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+      val (_, events) = withEvents {
+        for (b <- 0 until 3) {
+          in.addData((0 until 20).map { i =>
+            val id = (1000 + b * 20 + i).toLong
+            if (i % 4 == 0) (id, s"s${i % 3}", texts((b * 20 + i).toLong) + " changed")
+            else (id, s"s${i % 3}", s"brand new arrival $b number $i with words")
+          }: _*)
+          qa.processAllAvailable(); qc.processAllAvailable()
+        }
+      }
+      // streaming jobs carry the query's runId as their job group and
+      // the micro-batch id in their description
+      val batchOf = "batch = (\\d+)".r
+      val byGroup = events.collect { case e: SparkListenerJobStart if e.properties != null =>
+        (e.properties.getProperty("spark.jobGroup.id"),
+          batchOf.findFirstMatchIn(e.properties.getProperty("spark.job.description", ""))
+            .map(_.group(1)))
+      }
+      for (q <- Seq(qa, qc)) {
+        val perBatch = byGroup.filter(_._1 == q.runId.toString).groupBy(_._2)
+          .map { case (batch, js) => batch -> js.size }
+        assert(perBatch.size == 3 && perBatch.keys.forall(_.isDefined) &&
+          perBatch.values.forall(_ == 1), s"${q.name}: jobs per micro-batch $perBatch")
+      }
+      assert(spark.table("fd_budget_cands").select("doc_id", "corpus_id").distinct()
+        .count() == 15, "5 near-dups x 3 batches")
+      for (q <- Seq(qa, qc)) {
+        val out = new java.io.ByteArrayOutputStream()
+        Console.withOut(out)(q.explain(true))
+        val plan = out.toString("UTF-8")
+        assert(plan.contains("graft_bloom_probe"), s"${q.name}: $plan")
+        assert(plan.length < 20000, s"${q.name}: explain is ${plan.length} chars")
+      }
+    } finally {
+      qa.stop(); qc.stop(); index.unpersist(); winIndex.unpersist()
+    }
+  }
 }
