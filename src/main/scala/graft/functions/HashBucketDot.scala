@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
 
-/** `graft_hash_dot(hs, weights)`: Σ w[h mod |w|] over a token-hash
+/** `graft_hash_dot`: Σ w[h mod |w|] over a token-hash
   * array — the zero-join inference sum behind
   * [[graft.operators.QualityModel.scoreInline]] (per-token weight
   * lookup into a dense model vector that ships once per executor as a

@@ -90,9 +90,8 @@ object WindowKeys {
 /** `graft_indexed_positions`: sorted distinct word positions of `text`
   * covered by an indexed `n`-word window (see
   * [[IndexedWindowKernels.coveredPositions]]) of a shipped
-  * [[WindowKeys]] bank. The SQL form,
-  * `graft_indexed_positions(text, n, keys_array_literal)`, ships the
-  * literal's keys when the call is analyzed. */
+  * [[WindowKeys]] bank. Built through [[IndexedCoveredPositions.apply]]
+  * only: a bank is a broadcast, never a SQL literal. */
 case class IndexedCoveredPositions(child: Expression, n: Int,
     keys: Shipped[WindowKeys]) extends UnaryExpression {
 

@@ -1,54 +1,81 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, Row}
+import java.nio.charset.StandardCharsets.UTF_8
+
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeProjection}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** A near-dup index held in executor memory: the rows of
-  * [[graft.streaming.StreamOps.nearDupIndex]] — (band, sig, corpus_id,
-  * corpus_hs) — as parallel arrays, the payload of [[NearDupProbe]].
-  * Each row's hash set is kept sorted and distinct for the
-  * intersection, beside its size as given (`size(corpus_hs)` of the join
-  * form). The (band, sig) → rows map is built lazily on the broadcast
-  * value, so once per executor. */
+/** A near-dup index held in executor memory, the payload of
+  * [[NearDupProbe]]: the rows of [[graft.streaming.StreamOps.nearDupIndex]]
+  * — (band, sig, corpus_id, corpus_hs) — with each distinct hash set
+  * stored once. Entry `e` is one index row: `bands(e)`, `sigs(e)`,
+  * `ids(e)` and `slots(e)`, the slot of its hash set. `sets(s)` is slot
+  * `s`'s hash set sorted and distinct for the intersection, beside
+  * `setSizes(s)`, its size as given (`size(corpus_hs)` of the join
+  * form). The (band, sig) → entries map is built lazily on the
+  * broadcast value, so once per executor. */
 final class BandBank private (val bands: Array[Int], val sigs: Array[String],
-    val ids: Array[Any], val hsSize: Array[Int], val hs: Array[Array[Long]])
-    extends Serializable {
+    val ids: Array[Any], val slots: Array[Int], val sets: Array[Array[Long]],
+    val setSizes: Array[Int]) extends Serializable {
   def size: Int = bands.length
 
   @transient lazy val lookup: java.util.HashMap[String, Array[Int]] = {
     val m = new java.util.HashMap[String, Array[Int]]()
-    bands.indices.groupBy(i => BandBank.key(bands(i), sigs(i)))
-      .foreach { case (k, rows) => m.put(k, rows.sorted.toArray) }
+    bands.indices.groupBy(e => BandBank.key(bands(e), sigs(e)))
+      .foreach { case (k, es) => m.put(k, es.sorted.toArray) }
     m
   }
 }
 
 object BandBank {
-  private def key(band: Int, sig: String): String = s"$band:$sig"
+  private[functions] def key(band: Int, sig: String): String = s"$band:$sig"
 
-  /** Ships the collected index rows (band: int, sig: string, corpus_id:
-    * `idType`, corpus_hs: array<bigint>). A row whose band, sig,
-    * corpus_id or hash set is null can never be emitted by the join form
-    * (its equi-join or its `doc_id != corpus_id` filter drops it), so it
-    * is left out. */
-  def ship(rows: Seq[Row], idType: DataType): Shipped[BandBank] = {
-    val kept = rows.filter(r => !r.isNullAt(0) && !r.isNullAt(1) &&
-      !r.isNullAt(2) && !r.isNullAt(3))
+  /** Ships an index collected as one row per distinct hash set:
+    * (corpus_hs: array<bigint>, rows: array<struct<band: int, sig:
+    * string, corpus_id: `idType`>>), each struct an index row holding
+    * that set. Null hash elements are left out of the stored set (a
+    * probed document's set has none) and counted in its size.
+    *
+    * The digest, which decides equality of the holders, is fed a typed,
+    * length-prefixed encoding: each set's size and longs, then each
+    * row's band, sig bytes, corpus_id as its Catalyst `UnsafeRow` bytes
+    * and slot, so distinct banks never print the same bytes. */
+  def ship(docs: Seq[Row], idType: DataType): Shipped[BandBank] = {
     val toCatalyst = CatalystTypeConverters.createToCatalystConverter(idType)
-    val sets = kept.map(_.getSeq[Any](3))
-    val bank = new BandBank(kept.map(_.getInt(0)).toArray,
-      kept.map(_.getString(1)).toArray, kept.map(r => toCatalyst(r.get(2))).toArray,
-      sets.map(_.size).toArray,
-      sets.map(s => s.collect { case h: Long => h }.distinct.sorted.toArray).toArray)
+    val given = docs.map(_.getSeq[Any](0))
+    val rows = docs.zipWithIndex.flatMap { case (d, s) =>
+      d.getSeq[Row](1).map(r => (r.getInt(0), r.getString(1), toCatalyst(r.get(2)), s))
+    }
+    val bank = new BandBank(rows.map(_._1).toArray, rows.map(_._2).toArray,
+      rows.map(_._3).toArray, rows.map(_._4).toArray,
+      given.map(hs => hs.collect { case h: Long => h }.distinct.sorted.toArray).toArray,
+      given.map(_.size).toArray)
     Shipped(bank, s"bandBank[${bank.size}]") { md =>
-      md.update(idType.json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      kept.foreach(r => md.update(r.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
+      val out = new java.io.DataOutputStream(new java.security.DigestOutputStream(
+        java.io.OutputStream.nullOutputStream(), md))
+      def bytes(b: Array[Byte]): Unit = { out.writeInt(b.length); out.write(b) }
+      val idBytes = UnsafeProjection.create(Array(idType))
+      bytes(idType.json.getBytes(UTF_8))
+      out.writeInt(bank.sets.length)
+      bank.sets.indices.foreach { s =>
+        out.writeInt(bank.setSizes(s))
+        out.writeInt(bank.sets(s).length)
+        bank.sets(s).foreach(out.writeLong)
+      }
+      out.writeInt(bank.size)
+      (0 until bank.size).foreach { e =>
+        out.writeInt(bank.bands(e))
+        bytes(bank.sigs(e).getBytes(UTF_8))
+        bytes(idBytes(InternalRow(bank.ids(e))).getBytes)
+        out.writeInt(bank.slots(e))
+      }
+      out.flush()
     }
   }
 }
@@ -60,8 +87,8 @@ object BandBank {
   * `threshold`, as (corpus_id, jaccard) structs. This is row for row the
   * band join of [[graft.streaming.StreamOps.streamingNearDupVerified]]
   * before its `doc_id != corpus_id` filter: one element per shared band,
-  * the same signature strings (`concat_ws` of the decimal minima), the
-  * same `|A ∩ B| / (|A| + |B| − |A ∩ B|)` double. One digest pass per
+  * the same signature strings and the same Jaccard double
+  * ([[MinHashBands]]). One digest pass per
   * document ([[TextKernels.shingleMinHashSet]]); documents with fewer
   * than `shingleLen` words, and null text, give no match (the join
   * form's word-count filter). */
@@ -91,18 +118,11 @@ case class NearDupProbe(child: Expression, bank: Shipped[BandBank],
     val out = new java.util.ArrayList[InternalRow]()
     var band = 0
     while (band < numHashes / bandRows) {
-      val sig = new StringBuilder
-      var i = band * bandRows
-      while (i < (band + 1) * bandRows) {
-        if (i > band * bandRows) sig.append(',')
-        sig.append(mins.getLong(i))
-        i += 1
-      }
-      val rows = b.lookup.get(s"$band:$sig")
-      if (rows != null) rows.foreach { r =>
-        val ni = intersectSize(hs, b.hs(r))
-        val j = ni.toDouble / (hs.length + b.hsSize(r) - ni).toDouble
-        if (j >= threshold) out.add(InternalRow(b.ids(r), j))
+      val es = b.lookup.get(BandBank.key(band, MinHashBands.sig(mins, band, bandRows)))
+      if (es != null) es.foreach { e =>
+        val s = b.slots(e)
+        val j = MinHashBands.jaccard(intersectSize(hs, b.sets(s)), hs.length, b.setSizes(s))
+        if (j >= threshold) out.add(InternalRow(b.ids(e), j))
       }
       band += 1
     }

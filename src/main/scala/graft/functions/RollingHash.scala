@@ -358,22 +358,6 @@ object GraftFunctions {
           FeatureDot(args.head, ws)
         }),
       (
-        FunctionIdentifier("graft_hash_dot"),
-        new ExpressionInfo(classOf[HashBucketDot].getName, "graft_hash_dot"),
-        (args: Seq[Expression]) => {
-          require(args.length == 2, "graft_hash_dot(hs, weights_literal)")
-          val ws = args(1) match {
-            case org.apache.spark.sql.catalyst.expressions.Literal(
-                a: org.apache.spark.sql.catalyst.util.ArrayData,
-                org.apache.spark.sql.types.ArrayType(
-                  org.apache.spark.sql.types.DoubleType, _)) =>
-              a.toDoubleArray()
-            case other => throw new IllegalArgumentException(
-              s"graft_hash_dot weights must be an array<double> literal, got $other")
-          }
-          HashBucketDot(args.head, Shipped.doubles(ws, "weights"))
-        }),
-      (
         FunctionIdentifier("collect_capped"),
         new ExpressionInfo(classOf[CollectCapped].getName, "collect_capped"),
         (args: Seq[Expression]) => {
@@ -463,29 +447,6 @@ object GraftFunctions {
               s"graft_bpe_encode sep must be a string literal, got $other")
           }
           BpeEncode(args.head, BpeKernels.decodeMerges(args(1)), sep)
-        }),
-      (
-        FunctionIdentifier("graft_indexed_positions"),
-        new ExpressionInfo(classOf[IndexedCoveredPositions].getName,
-          "graft_indexed_positions"),
-        (args: Seq[Expression]) => {
-          require(args.length == 3,
-            "graft_indexed_positions(text, n, keys_array_literal)")
-          import org.apache.spark.sql.catalyst.expressions.Literal
-          import org.apache.spark.sql.catalyst.util.ArrayData
-          import org.apache.spark.sql.types.{ArrayType, BinaryType}
-          val n = args(1) match {
-            case Literal(v, _) if v != null => v.toString.toInt
-            case other => throw new IllegalArgumentException(
-              s"graft_indexed_positions n must be an int literal, got $other")
-          }
-          val keys = args(2) match {
-            case Literal(a: ArrayData, ArrayType(BinaryType, _)) =>
-              (0 until a.numElements()).map(a.getBinary)
-            case other => throw new IllegalArgumentException(
-              s"graft_indexed_positions keys must be an array<binary> literal, got $other")
-          }
-          IndexedCoveredPositions(args.head, n, WindowKeys.ship(keys))
         }),
       (
         FunctionIdentifier("graft_wordpiece"),

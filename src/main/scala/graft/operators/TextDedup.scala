@@ -171,8 +171,7 @@ object TextDedup {
     val wide = hashed.groupBy(col(idCol)).agg(mins.head, mins.tail: _*)
     val bandStructs = (0 until k / r).map(b =>
       struct(lit(b).as("band"),
-        concat_ws(",",
-          (b * r until (b + 1) * r).map(i => col(s"__mh$i").cast("string")): _*).as("sig")))
+        graft.functions.MinHashBands.sig(i => col(s"__mh$i"), b, r).as("sig")))
     wide.select(col(idCol), explode(array(bandStructs: _*)).as("bs"))
       .select(col(idCol), col("bs.band").as("band"), col("bs.sig").as("sig"))
   }
@@ -191,9 +190,8 @@ object TextDedup {
   def bandSignaturesProjected(docs: DataFrame, idCol: String, textCol: String,
       n: Int, k: Int, r: Int): DataFrame = {
     val bandStructs = (0 until k / r).map(bi =>
-      struct(lit(bi).as("band"),
-        concat_ws(",", (bi * r until (bi + 1) * r)
-          .map(i => element_at(col("__mins"), i + 1).cast("string")): _*).as("sig")))
+      struct(lit(bi).as("band"), graft.functions.MinHashBands.sig(
+        i => element_at(col("__mins"), i + 1), bi, r).as("sig")))
     // short docs (< n words) yield an EMPTY mins array from the kernel;
     // the word-count filter keeps them out of banding (an all-sentinel
     // signature would bucket every short doc together)
@@ -350,9 +348,8 @@ object TextDedup {
     // truth stream is already bounded (≥threshold pairs); two joins on
     // its endpoints replace the whole candidate machinery.
     val bandSigArr = array((0 until numHashes / bandRows).map(bi =>
-      concat_ws(",", (Seq(lit(s"$bi:")) ++ (bi * bandRows until
-        (bi + 1) * bandRows).map(i =>
-          element_at(col("__mins"), i + 1).cast("string"))): _*)): _*)
+      concat(lit(s"$bi:"), graft.functions.MinHashBands.sig(
+        i => element_at(col("__mins"), i + 1), bi, bandRows))): _*)
     val sigs = docs
       .filter(size(split(col(textCol), " ")) >= shingleLen)
       .select(col(idCol),
@@ -554,9 +551,8 @@ object TextDedup {
       // the deliberate small-regime trade (optimizer-measured ≤ ~1 GB
       // corpus); the large regime below never ships corpus hash arrays.
       val bandStructs = (0 until numHashes / bandRows).map(bi =>
-        struct(lit(bi).as("band"),
-          concat_ws(",", (bi * bandRows until (bi + 1) * bandRows)
-            .map(i => element_at(col("__p.mins"), i + 1).cast("string")): _*).as("sig")))
+        struct(lit(bi).as("band"), graft.functions.MinHashBands.sig(
+          i => element_at(col("__p.mins"), i + 1), bi, bandRows).as("sig")))
       val sig = reps
         .filter(size(split(col(textCol), " ")) >= shingleLen)
         .select(col(idCol),

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-import graft.functions.{BandBank, NearDupProbe, Shipped, WindowKeys}
+import graft.functions.{BandBank, MinHashBands, NearDupProbe, Shipped, WindowKeys}
 
 /** Streaming variants of the batch operators (engine extension — the
   * reference has no streaming surface at all, SURVEY §2.10): the same
@@ -88,7 +88,9 @@ object StreamOps {
     */
   def streamingNearDupCandidates(stream: DataFrame, index: DataFrame,
       idCol: String, textCol: String,
-      shingleLen: Int = 3, numHashes: Int = 16, bandRows: Int = 4): DataFrame = {
+      shingleLen: Int = MinHashBands.ShingleLen,
+      numHashes: Int = MinHashBands.NumHashes,
+      bandRows: Int = MinHashBands.BandRows): DataFrame = {
     val sigs = graft.operators.TextDedup.bandSignaturesProjected(
       stream, idCol, textCol, shingleLen, numHashes, bandRows)
     sigs.join(index
@@ -105,7 +107,9 @@ object StreamOps {
     * corpus. Refresh out of band; at scale store bucketed on
     * (band, sig) so each micro-batch join is a bounded probe. */
   def nearDupIndex(docs: DataFrame, idCol: String, textCol: String,
-      shingleLen: Int = 3, numHashes: Int = 16, bandRows: Int = 4): DataFrame =
+      shingleLen: Int = MinHashBands.ShingleLen,
+      numHashes: Int = MinHashBands.NumHashes,
+      bandRows: Int = MinHashBands.BandRows): DataFrame =
     graft.operators.TextDedup.bandSignaturesProjected(
         docs, idCol, textCol, shingleLen, numHashes, bandRows)
       .withColumnRenamed(idCol, "corpus_id")
@@ -128,11 +132,12 @@ object StreamOps {
     * same rows from a bounded index collected once, with no join. */
   def streamingNearDupVerified(stream: DataFrame, index: DataFrame,
       idCol: String, textCol: String, threshold: Double,
-      shingleLen: Int = 3, numHashes: Int = 16, bandRows: Int = 4): DataFrame = {
+      shingleLen: Int = MinHashBands.ShingleLen,
+      numHashes: Int = MinHashBands.NumHashes,
+      bandRows: Int = MinHashBands.BandRows): DataFrame = {
     val bandStructs = (0 until numHashes / bandRows).map(bi =>
-      struct(lit(bi).as("band"),
-        concat_ws(",", (bi * bandRows until (bi + 1) * bandRows)
-          .map(i => element_at(col("__p.mins"), i + 1).cast("string")): _*).as("sig")))
+      struct(lit(bi).as("band"), MinHashBands.sig(
+        i => element_at(col("__p.mins"), i + 1), bi, bandRows).as("sig")))
     val sigs = stream
       .filter(size(split(col(textCol), " ")) >= shingleLen)
       .select(col(idCol),
@@ -144,8 +149,8 @@ object StreamOps {
     sigs.join(index, Seq("band", "sig"))
       .filter(col(idCol) =!= col("corpus_id"))
       .withColumn("__ni", size(array_intersect(col("__hs"), col("corpus_hs"))))
-      .withColumn("jaccard",
-        col("__ni") / (size(col("__hs")) + size(col("corpus_hs")) - col("__ni")))
+      .withColumn("jaccard", MinHashBands.jaccard(col("__ni"),
+        size(col("__hs")), size(col("corpus_hs"))))
       .filter(col("jaccard") >= threshold)
       .select(col(idCol), col("corpus_id"), col("jaccard"))
   }
@@ -308,10 +313,13 @@ object StreamOps {
   }
 
   /** Collect a BOUNDED [[nearDupIndex]] into the band bank the front
-    * door's `graft_near_dup_probe` ships to its executors; fails fast,
-    * naming `caller`, on schema drift or more than `maxIndexRows`
-    * rows. */
-  private def nearDupBank(index: DataFrame, maxIndexRows: Int,
+    * door's `graft_near_dup_probe` ships to its executors, each distinct
+    * hash set once; fails fast, naming `caller`, on schema drift, on
+    * more than `maxIndexRows` index rows or on more than `maxIndexRows`
+    * stored hashes (2^20 longs ≈ 8 MB). Both bounds are checked by an
+    * aggregate that returns two counts, before any hash set reaches the
+    * driver. */
+  private[graft] def nearDupBank(index: DataFrame, maxIndexRows: Int,
       caller: String): Shipped[BandBank] = {
     import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType, StringType}
     val types = index.schema.fields.map(f => f.name -> f.dataType).toMap
@@ -324,12 +332,26 @@ object StreamOps {
       s"$caller: index must have (band int, sig string, corpus_id, " +
         s"corpus_hs array<bigint>) columns (nearDupIndex output); got " +
         index.schema.simpleString)
-    val rows = index.select("band", "sig", "corpus_id", "corpus_hs")
-      .limit(maxIndexRows + 1).collect().toSeq
-    require(rows.size <= maxIndexRows,
+    // a row with a null band, sig, corpus_id or hash set is never
+    // emitted by the join form (its equi-join or its doc_id !=
+    // corpus_id filter drops it); one row per distinct hash set, with
+    // the index rows that hold it
+    val docs = index
+      .filter(col("band").isNotNull && col("sig").isNotNull &&
+        col("corpus_id").isNotNull && col("corpus_hs").isNotNull)
+      .limit(maxIndexRows + 1)
+      .groupBy(col("corpus_hs"))
+      .agg(collect_list(struct(col("band"), col("sig"), col("corpus_id"))).as("rows"))
+    val counts = docs.agg(coalesce(sum(size(col("rows"))), lit(0L)),
+      coalesce(sum(size(col("corpus_hs"))), lit(0L))).head()
+    require(counts.getLong(0) <= maxIndexRows,
       s"$caller: near-dup index exceeds $maxIndexRows rows — a " +
         "corpus-scale index belongs on the join path (streamingNearDupVerified)")
-    BandBank.ship(rows, types("corpus_id"))
+    require(counts.getLong(1) <= maxIndexRows,
+      s"$caller: near-dup index stores ${counts.getLong(1)} shingle hashes, " +
+        s"more than $maxIndexRows — a corpus-scale index belongs on the " +
+        "join path (streamingNearDupVerified)")
+    BandBank.ship(docs.collect().toSeq, types("corpus_id"))
   }
 
   /** Stages 1+2 of [[ingestFrontDoorV2]] — the stateless exact-dup
@@ -609,11 +631,12 @@ object StreamOps {
     * Static state is built ONCE per call and shipped as broadcast
     * variables, not plan literals: the Bloom words, the model's dense
     * weights, the window key bank and the near-dup band bank. `index`
-    * and `winIndex` are collected at the call, each bounded by
-    * `maxIndexRows` (the near-dup index has 4 rows per stored doc, the
-    * window bank about one per stored word, so a corpus whose window
-    * bank passes the bound passes this one too); refreshing either
-    * means a new call. So each micro-batch runs one job per query, with
+    * and `winIndex` are collected at the call, and `maxIndexRows` bounds
+    * each on its own: the window bank's keys, and the near-dup bank's
+    * index rows and stored shingle hashes (each distinct hash set is
+    * stored once, about one hash per stored word). A small curated
+    * window bank beside a large near-dup index is refused by the
+    * near-dup bound; refreshing either index means a new call. So each micro-batch runs one job per query, with
     * no broadcast exchange, and a task carries only the broadcast
     * handles. Preconditions fail at the call: `bloomBits > 0`,
     * `bloomHashes >= 1`, `bloomPacked.length == (bloomBits + 63) / 64`,
@@ -660,11 +683,11 @@ object StreamOps {
     val gated = frontDoorGates(stream, textCol, bloomPacked, bloomBits,
       bloomHashes, model, qualityThreshold)
     // stage 3 (side output): verified near-dup candidates, probed
-    // row-locally against the band bank (nearDupIndex's default
-    // shingle/hash/band shape)
+    // row-locally against the band bank in the index's shape
     val candidates = gated
       .select(col(idCol), explode(NearDupProbe(col(textCol), bank,
-        index.schema("corpus_id").dataType, 3, 16, 4, nearDupThreshold)).as("__m"))
+        index.schema("corpus_id").dataType, MinHashBands.ShingleLen,
+        MinHashBands.NumHashes, MinHashBands.BandRows, nearDupThreshold)).as("__m"))
       .filter(col(idCol) =!= col("__m.corpus_id"))
       .select(col(idCol), col("__m.corpus_id").as("corpus_id"),
         col("__m.jaccard").as("jaccard"))

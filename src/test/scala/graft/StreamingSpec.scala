@@ -1364,6 +1364,52 @@ class StreamingSpec extends SparkSpec {
     } finally index.unpersist()
   }
 
+  test("the near-dup bank stores each hash set once and is bounded by its stored hashes") {
+    import spark.implicits._
+    import graft.operators.TextDedup
+    // 6 stored docs of 40 distinct words: 24 index rows, 6 x 38 hashes
+    val corpus = (0 until 6).map { d =>
+      (d.toLong, (0 until 40).map(w => s"v${d}_$w").mkString(" "))
+    }.toDF("doc_id", "text")
+    val index = StreamOps.nearDupIndex(corpus, "doc_id", "text").cache()
+    try {
+      val bank = StreamOps.nearDupBank(index, 1 << 20, "test").value
+      assert(bank.size == 24 && bank.sets.length == 6 &&
+        bank.sets.forall(_.length == 38), s"${bank.size} rows, ${bank.sets.length} sets")
+      // a curated window bank of 3 keys beside the index: the rows fit
+      // the bound of 100, the 228 stored hashes do not
+      val curated = TextDedup.windowHashIndex(
+        Seq((9L, "a b c d e f")).toDF("doc_id", "text"), "text", 4)
+      val e = intercept[IllegalArgumentException] {
+        openFrontDoor(corpus.withColumn("source", lit("s")), index, 0.5,
+          curated, maxIndexRows = 100)
+      }
+      assert(e.getMessage.contains(
+        "ingestFrontDoorV2: near-dup index stores 228 shingle hashes, more than 100"),
+        e.getMessage)
+      openFrontDoor(corpus.withColumn("source", lit("s")), index, 0.5,
+        curated, maxIndexRows = 228)
+    } finally index.unpersist()
+  }
+
+  test("band banks that differ only inside a field have different digests") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{BinaryType, StringType}
+    import graft.functions.BandBank
+    def bank(sig: String, id: Any, hs: Seq[Long] = Seq(5L)) =
+      Seq(Row(hs, Seq(Row(0, sig, id))))
+    // Row.toString prints both as [0,1,2,a]
+    val a = BandBank.ship(bank("1,2", "a"), StringType)
+    val b = BandBank.ship(bank("1", "2,a"), StringType)
+    assert(a != b && a.digest != b.digest)
+    assert(BandBank.ship(bank("1,2", "a"), StringType) == a)
+    assert(BandBank.ship(bank("1,2", "a", Seq(5L, 6L)), StringType) != a)
+    // binary ids compare by content, not by array identity
+    val x = BandBank.ship(bank("1", Array[Byte](1, 2)), BinaryType)
+    assert(BandBank.ship(bank("1", Array[Byte](1, 2)), BinaryType) == x)
+    assert(BandBank.ship(bank("1", Array[Byte](1, 3)), BinaryType) != x)
+  }
+
   test("window-bank refusals name the operator that was called") {
     import spark.implicits._
     val docs = Seq((1L, "a", "a b c d e f")).toDF("doc_id", "source", "text")
