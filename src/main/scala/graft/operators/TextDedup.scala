@@ -1000,59 +1000,42 @@ object TextDedup {
       idCol: String,
       textCol: String,
       windows: Seq[(Int, Long)],
-      keepFirst: Boolean = true): DataFrame = {
-    require(windows.nonEmpty &&
-      windows.forall { case (w, mc) => w >= 1 && mc >= 2 } &&
-      windows.map(_._1).distinct.size == windows.size,
-      s"windows must be distinct (length >= 1, minCount >= 2) levels: $windows")
-    val src = spreadSmallSource(docs)
-    // One native kernel call per (doc, level) hashes every stride-1
-    // window (the window text never leaves the kernel), tagged
-    // (w, start, h) row-locally and flattened into a single window
-    // stream — one scan, one Generate. BINARY md5 digests
-    // (ShingleMd5Bins): identical collision-freeness at half the key
-    // bytes on the exchanges keyed by __h (the oracle compares rebuilt
-    // text, never this internal key). The level's support threshold
-    // stays OUT of the stream (mcFor builds it back from `w` as a
-    // literal CASE at filter time).
-    val levels = array(windows.map { case (w, _) =>
+      keepFirst: Boolean = true): DataFrame =
+    purgeFromWindows(docs, idCol, textCol, windows, keepFirst, BroadcastDictRows)
+
+  /** The purges' window stream, (id, w, start, __h): one native kernel
+    * call per (doc, window length) hashes every stride-1 window (the
+    * window text never leaves the kernel), tagged (w, start, h)
+    * row-locally and flattened into a single stream — one scan, one
+    * Generate. BINARY md5 digests (ShingleMd5Bins): identical
+    * collision-freeness at half the key bytes on the exchanges keyed by
+    * __h (the oracle compares rebuilt text, never this internal key).
+    * The level's support threshold stays OUT of the stream. */
+  private[graft] def windowStream(docs: DataFrame, idCol: String,
+      textCol: String, lengths: Seq[Int]): DataFrame = {
+    val levels = array(lengths.map { w =>
       transform(graft.functions.ShingleMd5Bins(col(textCol), w),
         (h, i) => struct(lit(w).as("w"), i.as("start"), h.as("__h")))
     }: _*)
-    val wins = src
+    spreadSmallSource(docs)
       .select(col(idCol), explode(flatten(levels)).as("e"))
       .select(col(idCol), col("e.w").as("w"),
         col("e.start").as("start"), col("e.__h").as("__h"))
-    val mcFor: Column => Column = wc =>
-      windows.tail.foldLeft(when(wc === windows.head._1,
-          lit(windows.head._2))) { case (acc, (w, mc)) =>
-        acc.when(wc === w, lit(mc))
-      }.otherwise(lit(Long.MaxValue))
-    purgeFromWindows(docs, idCol, textCol, wins, keepFirst, mcFor)
   }
 
-  // ---- substring-purge shared tail (stats, gate, rebuild) ----------
+  // ---- substring-purge tail (stats, join back, rebuild) -------------
   // Window strings of different lengths are distinct content, so one
-  // hash key serves all levels; `__mc` is the level's support
-  // threshold (constant 2 for the single-length form). The r15 window
-  // formulation (count over Window.partitionBy(__h)) concentrated a
-  // hot hash's full posting list in one task; everything below keeps
-  // the stats a bounded partial aggregate and gates the join-back
-  // shape on MEASURED dictionary size — see purgeFromWindows.
+  // hash key serves all levels. The r15 window formulation (count
+  // over Window.partitionBy(__h)) concentrated a hot hash's full
+  // posting list in one task; everything below keeps the stats a
+  // bounded partial aggregate — see purgeFromWindows.
 
-  /** The join-back dictionary is broadcastable up to this many rows
-    * (~32 MB of (16-byte hash, count, packed witness) payload): below
-    * it the window stream NEVER exchanges — the removal decision is a
-    * map-side broadcast join, inherently skew-proof (a hot hash's
+  /** The purge broadcasts the join-back dictionary up to this many
+    * rows (~32 MB of (16-byte hash, count, packed witness) payload):
+    * below it the window stream NEVER exchanges — the removal decision
+    * is a map-side broadcast join, inherently skew-proof (a hot hash's
     * postings stay spread across their source partitions). */
   private val BroadcastDictRows = 1L << 20
-
-  /** With a bigger dictionary, a single co-partitioning exchange on
-    * __h is safe as long as the MEASURED hottest posting list fits one
-    * task comfortably (2^16 rows sorts in milliseconds); past it, the
-    * join gets a fresh exchange AQE can skew-split, so no task ever
-    * owns an unbounded posting list. */
-  private val HotGroupRows = 1L << 16
 
   /** Packed-long keep-first witness bounds: (id * 2^20 + start) is
     * order-isomorphic to the (id, start) struct when starts stay below
@@ -1060,10 +1043,13 @@ object TextDedup {
     * at runtime against the actual stream; out of range (or non-integer
     * ids) falls back to the struct witness. The packed form matters:
     * min(struct) partials compare interpreted and its broadcast rows
-    * carry nested structs — measured 7.0 s vs 2.4 s for the whole
-    * stats+probe pass on the sf1 dup-cloud bed. */
+    * carry nested structs. */
   private val PackedStartLimit = 1L << 20
   private val PackedIdLimit = Long.MaxValue >> 21
+
+  /** The packed witness of a window row. */
+  private def packedFirst(idCol: String): Column =
+    col(idCol).cast("long") * lit(PackedStartLimit) + col("start")
 
   /** Occurrence stats of a window stream: one row per DUPLICATED
     * window content (count >= 2) carrying the count and, for
@@ -1079,144 +1065,87 @@ object TextDedup {
     val agged =
       if (!keepFirst) base.agg(count(lit(1)).as("__c"))
       else if (packedWitness)
-        base.agg(count(lit(1)).as("__c"),
-          min(col(idCol).cast("long") * lit(PackedStartLimit) + col("start"))
-            .as("__first"))
+        base.agg(count(lit(1)).as("__c"), min(packedFirst(idCol)).as("__first"))
       else
         base.agg(count(lit(1)).as("__c"),
           min(struct(col(idCol).as("d"), col("start").as("p"))).as("__first"))
     agged.filter(col("__c") >= lit(2L))
   }
 
-  /** Shared gated tail of the substring purges.
-    *
-    * Shape (the r17 redesign; four-bed A/B in BASELINE):
+  /** Body of the substring purges over the `windows` levels: window
+    * stream, occurrence stats, join back, rebuild. Each level's support
+    * threshold is a literal CASE on the window length at filter time, so
+    * no per-row threshold column rides the window stream. Package-private
+    * with the broadcast join-back limit as an argument, so tests can
+    * force the plain join-back on a small corpus.
     *  1. The window stream is pinned ONCE with an EAGER localCheckpoint
-    *     on its own doc-clustered partitioning — the kernel runs once
-    *     for both consumers (unpinned, the r16 shape recomputed the
-    *     ShingleMd5Bins pass and paid a second stream-sized exchange:
-    *     the 1.9-2.6x dup-cloud constants floor). Eager matters: a
-    *     lazily-pinned stream first materializes under the stats
-    *     aggregate, fusing the partial agg onto live Generate output —
-    *     the interpreted-row path that measured 11 s where pin-then-agg
-    *     measures 4+2 s. Never pinned/repartitioned on __h here — that
-    *     would serialize a hot hash's postings through one task.
-    *  2. Occurrence stats ([[windowStats]]) are a skew-safe partial
-    *     aggregate over the pin, pinned themselves (they are read by a
-    *     probe, possibly a broadcast build, and the join).
-    *  3. The probe MEASURES the dictionary (rows, hottest posting
-    *     count) and picks the join-back shape — the dupClusters
-    *     measured-gate idiom:
-    *       dict <= 2^20 rows     -> broadcast join (stream never
-    *                               exchanges; hot postings stay spread)
-    *       hottest <= 2^16 rows  -> one co-partitioning exchange on __h
-    *                               (bounded single-task groups)
-    *       else                  -> fresh exchange, AQE skew-split (the
-    *                               100 TB shared-boilerplate regime)
-    *  4. Rebuild collects covered-position ARRAYS per doc (bounded by
-    *     doc length) without exploding per-position rows.
-    *
-    * Inputs under [[SmallCorpusBytes]] (optimizer-estimated) skip the
-    * pins and probes entirely and run the simple r16 shape — at small
-    * scale the three probe jobs cost more than the recomputation they
-    * avoid, and the simple shape is already the safest one.
-    *
-    * Measured (med, 3 reps, 32 local cores): stock sf0.1 1.87 -> 1.56 s; sf1
-    * dup-cloud 22.4 -> 9.7 s (old concentration-unsafe window shape:
-    * 7.0); degenerate 400k-doc shared-boilerplate bed 5.3 -> 5.25 s —
-    * every bed equal or faster than both prior shapes, with the
-    * skew-safety guarantees intact. At 100 TB the pins are the
-    * inter-stage materialization a production purge does anyway;
-    * blocks are released by the session-level sweep (graft.Pins). */
-  /** Inputs whose optimizer-estimated bytes stay under this take the
-    * SIMPLE lazy shape instead: no pins, no probe actions — at small
-    * scale the gated tail's three driver-synchronized jobs cost more
-    * than the double kernel pass they avoid (sf0.1 single-length
-    * purge: 0.93 s simple vs 1.34 gated), while the simple shape is
-    * the SAFEST of all (bounded partials + fresh AQE join) just with
-    * worse large-corpus constants. The threshold reads against
-    * parquet's COMPRESSED estimate, and duplicate-heavy text
-    * compresses brutally (the sf1 dup-cloud bed is 5.8 MB on disk for
-    * ~100 MB of window stream), so the bar sits at truly-tiny only —
-    * 1 MB, interactive scale: measured zipf0.1 (1.25 MB compressed)
-    * already prefers the gated shape by 1.8× on the funnel, while the
-    * 0.59 MB stock sf0.1 corpus prefers simple on single-length.
-    * Anything bigger pays the three probe jobs gladly. Overridable for
-    * tests/tuning via `spark.graft.purge.small.bytes` (0 forces the
-    * gated shape, Long.MaxValue forces simple). */
-  private val SmallCorpusBytes = 1L << 20
-
-  /** `mcFor` maps the window-length column to that level's support
-    * threshold (a literal CASE built from the levels spec) — keeping
-    * the per-row `__mc` column OFF the window stream saves 8 bytes ×
-    * every window of the corpus on the pin and the probe join. */
-  private def purgeFromWindows(docs: DataFrame, idCol: String,
-      textCol: String, wins: DataFrame, keepFirst: Boolean,
-      mcFor: Column => Column): DataFrame = {
-    val smallLimit = docs.sparkSession.conf
-      .getOption("spark.graft.purge.small.bytes").map(_.toLong)
-      .getOrElse(SmallCorpusBytes)
-    if (docs.queryExecution.optimizedPlan.stats.sizeInBytes <= smallLimit) {
-      // simple shape (the r16 design): lazy, two independent consumers
-      // of the window stream, struct witness, fresh join exchange AQE
-      // can broadcast or skew-split
-      val stats = windowStats(wins, idCol, keepFirst, packedWitness = false)
-      val removed = wins
-        .join(stats, Seq("__h"))
-        .filter(col("__c") >= mcFor(col("w")))
-        .filter(if (keepFirst)
-          !(col(idCol) === col("__first.d") && col("start") === col("__first.p"))
-        else lit(true))
-      return rebuildFromRemoved(docs, idCol, textCol, removed)
+    *     on its own doc-clustered partitioning, so the kernel runs once
+    *     for both consumers. Eager, because a lazy pin first
+    *     materializes under the stats aggregate, which fuses the partial
+    *     aggregate onto live Generate output (the interpreted-row path),
+    *     and because in Spark 4.1.2 a lazy pin's first materialization
+    *     can deadlock against an AQE stage over the same pin. Never
+    *     repartitioned on __h: that would serialize a hot hash's
+    *     postings through one task. The pin observes the id and start
+    *     bounds that decide the packed witness (`Dataset.observe`: no
+    *     job of its own).
+    *  2. The occurrence stats ([[windowStats]]) are a partial aggregate
+    *     over the pin, pinned eagerly themselves (the join reads them,
+    *     maybe as a broadcast build); that pin observes the dictionary's
+    *     row count.
+    *  3. A dictionary of at most `broadcastRows` rows joins back by
+    *     broadcast (the stream never exchanges and hot postings stay
+    *     spread); a larger one by a plain join AQE can skew-split.
+    *  4. [[rebuildFromRemoved]] rebuilds the documents.
+    * Building the purge fires the two pin jobs (with their AQE stage
+    * jobs) and nothing else; the pins are released by the session-level
+    * sweep ([[graft.Pins]]). */
+  private[graft] def purgeFromWindows(docs: DataFrame, idCol: String,
+      textCol: String, windows: Seq[(Int, Long)], keepFirst: Boolean,
+      broadcastRows: Long): DataFrame = {
+    require(windows.nonEmpty &&
+      windows.forall { case (w, mc) => w >= 1 && mc >= 2 } &&
+      windows.map(_._1).distinct.size == windows.size,
+      s"windows must be distinct (length >= 1, minCount >= 2) levels: $windows")
+    import org.apache.spark.sql.Observation
+    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
+    val wins = windowStream(docs, idCol, textCol, windows.map(_._1))
+    val minCount = windows.tail.foldLeft(when(col("w") === windows.head._1,
+        lit(windows.head._2))) { case (acc, (w, mc)) =>
+      acc.when(col("w") === w, lit(mc))
     }
-    val pinned = wins.localCheckpoint()
-    // Packed-witness eligibility is measured against the actual stream
-    // (integer id within +-2^42, starts under 2^20) — one cheap global
-    // aggregate over the pin; any violation falls back to the struct
-    // witness with identical keep-first decisions. (r19 re-tested
-    // folding these bounds into the stats aggregate as per-group
-    // max/min columns to save this pass: it LOST — three extra longs
-    // of aggregation state per window-hash group fatten the stats
-    // shuffle over every group, while this probe is a sequential scan
-    // of already-cached blocks. Negative result recorded in BASELINE.)
-    val idIsIntegral = pinned.schema(idCol).dataType match {
-      case org.apache.spark.sql.types.LongType |
-           org.apache.spark.sql.types.IntegerType |
-           org.apache.spark.sql.types.ShortType |
-           org.apache.spark.sql.types.ByteType => true
+    val packable = keepFirst && (wins.schema(idCol).dataType match {
+      case LongType | IntegerType | ShortType | ByteType => true
       case _ => false
-    }
-    val packed = keepFirst && idIsIntegral && {
-      val b = pinned.agg(
+    })
+    val bounds = Observation()
+    val pinned = (if (!packable) wins else wins.observe(bounds,
         max(col(idCol).cast("long")).as("xi"),
         min(col(idCol).cast("long")).as("ni"),
-        max(col("start").cast("long")).as("xs")).head
-      b.isNullAt(0) || (b.getLong(0) < PackedIdLimit &&
-        b.getLong(1) > -PackedIdLimit && b.getLong(2) < PackedStartLimit)
+        max(col("start").cast("long")).as("xs")))
+      .localCheckpoint()
+    val packed = packable && {
+      val b = bounds.get
+      b("xi") == null || (b("xi").asInstanceOf[Long] < PackedIdLimit &&
+        b("ni").asInstanceOf[Long] > -PackedIdLimit &&
+        b("xs").asInstanceOf[Long] < PackedStartLimit)
     }
+    val dict = Observation()
     val stats = windowStats(pinned, idCol, keepFirst, packed)
-      .localCheckpoint(false)
-    val probe = stats.agg(max(col("__c")), count(lit(1))).head
-    val maxC = if (probe.isNullAt(0)) 0L else probe.getLong(0)
-    val nDict = probe.getLong(1)
-    val joined =
-      if (nDict <= BroadcastDictRows) pinned.join(broadcast(stats), Seq("__h"))
-      else if (maxC <= HotGroupRows)
-        pinned.repartition(col("__h")).join(stats, Seq("__h"))
-      else pinned.join(stats, Seq("__h"))
-    val removed = joined
-      .filter(col("__c") >= mcFor(col("w")))
+      .observe(dict, count(lit(1)).as("n"))
+      .localCheckpoint()
+    val small = dict.get("n").asInstanceOf[Long] <= broadcastRows
+    val removed = pinned
+      .join(if (small) broadcast(stats) else stats, Seq("__h"))
+      .filter(col("__c") >= minCount)
       .filter(
         if (!keepFirst) lit(true)
-        else if (packed)
-          !(col(idCol).cast("long") * lit(PackedStartLimit) + col("start") ===
-            col("__first"))
-        else
-          !(col(idCol) === col("__first.d") && col("start") === col("__first.p")))
+        else if (packed) !(packedFirst(idCol) === col("__first"))
+        else !(col(idCol) === col("__first.d") && col("start") === col("__first.p")))
     rebuildFromRemoved(docs, idCol, textCol, removed)
   }
 
-  /** Shared rebuild tail of the substring purges: word positions
+  /** Rebuild tail of the substring purges: word positions
     * covered by any removed (id, w, start) window collapse into a
     * per-doc position ARRAY (bounded by doc length), and the rebuild
     * is one native kernel call per document
@@ -1781,32 +1710,29 @@ object TextDedup {
   }
 
   /** Within-batch tail of the pinned funnels over `s` (id, source, text,
-    * …): capped winnow near-dup drop → multi-length substring purge of
-    * the `purgeCols` projection → per-domain cap on the post-purge token
-    * count. Returns the report legs of `stages` (near-dup, purged,
-    * capped); the near-dup leg subtracts the winnow drops from
-    * `nearBase`'s pinned facts. `purgeCols` is each caller's own purge
-    * input: the purge picks its simple or gated shape from that input's
-    * estimated bytes. The drop ids are pinned (a tiny id list
-    * feeding the anti join AND the report leg — unpinned, the report
-    * would re-run the winnow posting shuffle); the purge pin keeps only
-    * (nt, content hash) of the rebuilt text, so it holds four longs plus
-    * source per row instead of a second text copy; the bounded top-k
-    * carries __th as a payload column (same (score desc, id) order as
-    * TextExtract.capPerDomain, minus the join-back). */
+    * …): capped winnow near-dup drop → multi-length substring purge →
+    * per-domain cap on the post-purge token count. Returns the report
+    * legs of `stages` (near-dup, purged, capped); the near-dup leg
+    * subtracts the winnow drops from `nearBase`'s pinned facts. The drop
+    * ids are pinned (a tiny id list feeding the anti join AND the report
+    * leg — unpinned, the report would re-run the winnow posting
+    * shuffle); the near-dup survivors are pinned with only the three
+    * columns the purge and the source join read; the purge pin keeps
+    * only (nt, content hash) of the rebuilt text, so it holds four longs
+    * plus source per row instead of a second text copy; the bounded
+    * top-k carries __th as a payload column (same (score desc, id) order
+    * as TextExtract.capPerDomain, minus the join-back). */
   private def pinnedTail(s: DataFrame, nearBase: DataFrame,
-      stages: Seq[String], purgeCols: Seq[String], idCol: String,
-      sourceCol: String, textCol: String, k: Int, w: Int, minShared: Long,
-      maxPostings: Long, windows: Seq[(Int, Long)],
-      domainCap: Int): Seq[DataFrame] = {
-    val dropB = winnowOverlap(s.select(col(idCol), col(sourceCol),
-        col(textCol)), idCol, textCol,
+      stages: Seq[String], idCol: String, sourceCol: String,
+      textCol: String, k: Int, w: Int, minShared: Long, maxPostings: Long,
+      windows: Seq[(Int, Long)], domainCap: Int): Seq[DataFrame] = {
+    val docs = s.select(col(idCol), col(sourceCol), col(textCol))
+    val dropB = winnowOverlap(docs, idCol, textCol,
         k = k, w = w, minShared = minShared, maxPostings = maxPostings)
       .select(col("doc_b").as(idCol)).distinct()
       .localCheckpoint(false)
-    val near = s.join(dropB, Seq(idCol), "left_anti").localCheckpoint(false)
-    val purged = purgeDuplicateSubstringsMulti(
-        near.select(purgeCols.map(col): _*), idCol, textCol,
+    val near = docs.join(dropB, Seq(idCol), "left_anti").localCheckpoint(false)
+    val purged = purgeDuplicateSubstringsMulti(near, idCol, textCol,
         windows = windows, keepFirst = true)
       .select(col(idCol), (col("n_words") - col("n_removed")).as("nt"),
         contentHash60(col(idCol), col("text_clean")).as("__th"))
@@ -1863,8 +1789,8 @@ object TextDedup {
     val (rows0, s1, headLegs) = pinnedHead(docs0, idCol, sourceCol, textCol,
       FunnelStages.take(3))
     funnelReport(FunnelStages, headLegs ++ pinnedTail(s1, rows0,
-      FunnelStages.drop(2), Seq(idCol, sourceCol, textCol), idCol,
-      sourceCol, textCol, k, w, minShared, maxPostings, windows, domainCap))
+      FunnelStages.drop(2), idCol, sourceCol, textCol, k, w, minShared,
+      maxPostings, windows, domainCap))
   }
 
   /** Snapshot-N+1 form of [[hygieneFunnel]] — the composed incremental
@@ -1924,9 +1850,8 @@ object TextDedup {
         negLeg(stages.slice(2, 3), rows0, idxHits, idCol),
         pinLeg(stages(3), s3, col("nt2")),
         pinLeg(stages(4), s3, col("__tok"))) ++
-      pinnedTail(s3, s3, stages.drop(4), Seq(idCol, textCol), idCol,
-        sourceCol, textCol, k, w, minShared, maxPostings, windows,
-        domainCap))
+      pinnedTail(s3, s3, stages.drop(4), idCol, sourceCol, textCol, k, w,
+        minShared, maxPostings, windows, domainCap))
   }
 
   /** Materialized-stage form of [[hygieneFunnel]] (same stages, same

@@ -335,20 +335,14 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("substring purge stats are skew-safe: no window, partial agg + join") {
-    // r17: the window stream is pinned ONCE (eager localCheckpoint —
-    // the kernel runs exactly once for both consumers) and the
-    // occurrence stats are a groupBy(__h) partial aggregate over the
-    // pin, joined back through a measured-gate shape (broadcast /
-    // co-partition / fresh+AQE-skew-split). The r15 window form
-    // (count over Window.partitionBy(__h)) concentrated a hot hash's
-    // full posting list in one task.
-    // BOTH shapes of the r17 size gate are audited: the gated pin
-    // shape (forced via spark.graft.purge.small.bytes=0) and the
-    // small-corpus simple shape (forced via Long.MaxValue).
-    spark.conf.set("spark.graft.purge.small.bytes", "0")
-    val qe =
-      try SparkEntry.queries("q_substring_dedup")(spark, sfDir).queryExecution
-      finally spark.conf.unset("spark.graft.purge.small.bytes")
+    // The purge pins the window stream ONCE (eager localCheckpoint —
+    // the kernel runs exactly once for both consumers); the occurrence
+    // stats are a groupBy(__h) partial aggregate over the pin, joined
+    // back by broadcast up to a measured dictionary size and by a plain
+    // AQE join past it. The r15 window form (count over
+    // Window.partitionBy(__h)) concentrated a hot hash's full posting
+    // list in one task.
+    val qe = SparkEntry.queries("q_substring_dedup")(spark, sfDir).queryExecution
     val analyzed = qe.analyzed.toString
     assert(!analyzed.contains("windowspecdefinition"),
       "substring purge still rides a window")
@@ -361,28 +355,12 @@ class PlanAuditSpec extends SparkSpec {
     assert(analyzed.contains("LogicalRDD") ||
       qe.executedPlan.toString.contains("Scan ExistingRDD"),
       "purge does not read the pinned window stream")
-    // simple shape: lazy, kernel visible, stats a partial agg, no window
-    spark.conf.set("spark.graft.purge.small.bytes", Long.MaxValue.toString)
-    val qeS =
-      try SparkEntry.queries("q_substring_dedup")(spark, sfDir).queryExecution
-      finally spark.conf.unset("spark.graft.purge.small.bytes")
-    val aS = qeS.analyzed.toString
-    assert(!aS.contains("windowspecdefinition"), "simple shape rides a window")
-    assert(aS.contains("shingle_md5_bins"),
-      "simple shape lost the binary window kernel")
-    assert(qeS.executedPlan.toString.contains("partial_min"),
-      "simple shape's keep-first witness is not a partial aggregate")
     // The stats the pin feeds stay a bounded partial aggregate with
-    // the keep-first witness (packed-long form on integral ids; the
-    // struct fallback is covered by the windowStats spec below) — and
-    // the window-stream construction itself uses the binary md5
-    // kernel (audited on the stream builder, since the final plan
-    // sits on the pin).
-    import org.apache.spark.sql.functions.{col, lit, posexplode}
+    // the keep-first witness, in its packed-long and its struct form —
+    // and the window stream itself uses the binary md5 kernel (audited
+    // on the stream builder, since the final plan sits on the pin).
     val docs = Tables.documents(spark, sfDir)
-    val wins = docs.select(col("doc_id"), lit(4).as("w"), lit(2L).as("__mc"),
-      posexplode(graft.functions.ShingleMd5Bins(col("text"), 4))
-        .as(Seq("start", "__h")))
+    val wins = graft.operators.TextDedup.windowStream(docs, "doc_id", "text", Seq(4))
     assert(wins.queryExecution.analyzed.toString.contains("shingle_md5_bins"),
       "window hashing does not use the native binary kernel")
     for (packed <- Seq(true, false)) {
@@ -623,28 +601,23 @@ class PlanAuditSpec extends SparkSpec {
     // (count + bounded min-struct keep-first witness) joined back.
     import org.apache.spark.sql.execution.window.WindowExec
     val docs = Tables.documents(spark, sfDir)
-    spark.conf.set("spark.graft.purge.small.bytes", "0") // force gated shape
-    try {
-      for (df <- Seq(
-          graft.operators.TextDedup.purgeDuplicateSubstrings(
-            docs, "doc_id", "text", windowWords = 8),
-          graft.operators.TextDedup.purgeDuplicateSubstringsMulti(
-            docs, "doc_id", "text", windows = Seq((4, 5L), (8, 2L))))) {
-        val plan = df.queryExecution.executedPlan
-        assert(plan.collect { case w: WindowExec => w }.isEmpty,
-          "substring purge plans a WindowExec on the __h stream")
-        // r17: the stats subtree is pre-aggregated into a pinned
-        // dictionary (its partial-agg shape is pinned by the windowStats
-        // audit above); the final plan must read pins, not recompute the
-        // kernel, and must join the __c/__first dictionary back.
-        val s = plan.toString
-        assert(!s.contains("shingle_md5_bins"),
-          "window stream recomputed instead of read from the pin")
-        assert(s.contains("Scan ExistingRDD"),
-          "purge does not read the pinned window stream")
-        assert(s.contains("__c"), "occurrence-count join is gone")
-      }
-    } finally spark.conf.unset("spark.graft.purge.small.bytes")
+    for (windows <- Seq(Seq((8, 2L)), Seq((4, 5L), (8, 2L)))) {
+      val df = graft.operators.TextDedup.purgeDuplicateSubstringsMulti(
+        docs, "doc_id", "text", windows)
+      val plan = df.queryExecution.executedPlan
+      assert(plan.collect { case w: WindowExec => w }.isEmpty,
+        "substring purge plans a WindowExec on the __h stream")
+      // r17: the stats subtree is pre-aggregated into a pinned
+      // dictionary (its partial-agg shape is pinned by the windowStats
+      // audit above); the final plan must read pins, not recompute the
+      // kernel, and must join the __c/__first dictionary back.
+      val s = plan.toString
+      assert(!s.contains("shingle_md5_bins"),
+        "window stream recomputed instead of read from the pin")
+      assert(s.contains("Scan ExistingRDD"),
+        "purge does not read the pinned window stream")
+      assert(s.contains("__c"), "occurrence-count join is gone")
+    }
   }
 
   test("cap enforcement is a bounded partial aggregate, not a concentration") {

@@ -514,21 +514,18 @@ class TextDedupEdgeSpec extends SparkSpec {
     assert(s1.getLong(3) == want, "s1_exact text_h != xor of kept docs")
   }
 
-  test("purge size-gate shapes are bit-identical (simple vs gated pin)") {
+  test("purge join-back shapes are bit-identical (broadcast vs plain join)") {
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       .select(col("doc_id"), col("text"))
-    def run(): Seq[(Long, Long, Long, String)] =
-      TextDedup.purgeDuplicateSubstringsMulti(docs, "doc_id", "text",
-          windows = Seq((4, 5L), (8, 2L)))
+    def run(broadcastRows: Long): Seq[(Long, Long, Long, String)] =
+      TextDedup.purgeFromWindows(docs, "doc_id", "text",
+          windows = Seq((4, 5L), (8, 2L)), keepFirst = true, broadcastRows)
         .collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3)))
         .sortBy(_._1).toSeq
-    spark.conf.set("spark.graft.purge.small.bytes", Long.MaxValue.toString)
-    val simple = try run() finally spark.conf.unset("spark.graft.purge.small.bytes")
-    spark.conf.set("spark.graft.purge.small.bytes", "0")
-    val gated = try run() finally spark.conf.unset("spark.graft.purge.small.bytes")
-    assert(simple == gated)
-    assert(simple.nonEmpty)
+    val broadcast = run(1L << 20)
+    assert(broadcast == run(-1L))
+    assert(broadcast.nonEmpty)
     Pins.sweep(spark)
   }
 
